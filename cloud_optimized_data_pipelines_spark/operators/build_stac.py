@@ -229,13 +229,8 @@ def build_items(events: DataFrame, spill_limit: int = 256 * 1024) -> DataFrame:
         ]
         prop_vals += [
             F.col("proj_epsg").cast("string"),
-            F.concat(
-                F.lit("["),
-                F.concat_ws(
-                    ", ", F.col("proj_shape").cast("array<string>")
-                ),
-                F.lit("]"),
-            ),
+            # NULL for a NULL shape (a passthrough row), so the key is dropped
+            F.concat(F.lit("["), F.array_join("proj_shape", ", "), F.lit("]")),
             F.col("proj_transform"),
             F.col("raster_bands"),
         ]

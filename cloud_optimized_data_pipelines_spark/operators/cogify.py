@@ -379,25 +379,25 @@ def cogify_stage(
                 }
             )
 
-    results = joined.select(*in_cols).mapInPandas(run, COGIFY_RESULT_SCHEMA)
-    # rejoin the raster outputs to the full event row on the source URL
-    # (unique per event), rewriting s3_filename like the reference does
+    # convert each (collection, source URL) once, however many events name
+    # it, then rejoin the outputs to every such event row, rewriting
+    # s3_filename like the reference does
+    results = joined.select(*in_cols).dropDuplicates(["collection", "s3_filename"])
+    results = results.mapInPandas(run, COGIFY_RESULT_SCHEMA)
     out = events.join(
         results.select(
+            F.col("collection").alias("_coll"),
             F.col("s3_filename").alias("_src"),
             F.col("output_filename"),
             F.col("error").alias("cogify_error"),
         ),
-        events["s3_filename"] == F.col("_src"),
+        events["collection"].eqNullSafe(F.col("_coll"))
+        & (events["s3_filename"] == F.col("_src")),
         "left",
     )
-    return (
-        out.withColumn(
-            "s3_filename",
-            F.coalesce(F.col("output_filename"), F.col("s3_filename")),
-        )
-        .drop("_src", "output_filename")
-    )
+    return out.withColumn(
+        "s3_filename", F.coalesce(F.col("output_filename"), F.col("s3_filename"))
+    ).drop("_coll", "_src", "output_filename")
 
 
 def _cog_variant(v: int) -> dict:

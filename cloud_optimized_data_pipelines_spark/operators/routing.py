@@ -2,8 +2,7 @@
 
 The reference's Step Functions Choice states become filtered unions:
 the cogify branch (``deploy/cdk/step_function_stack.py:80-99``) splits
-the event stream on ``cogify``; event-type dispatch
-(``build-stac/handler.py:40-41``) branches on ``granule_id`` presence.
+the event stream on ``cogify``.
 
 Physically, a split-transform-union over one source is a single scan:
 Catalyst collapses the two filters into the same exchange-free stage
@@ -32,17 +31,13 @@ def split_cogify(
 ) -> DataFrame:
     """F9: cogify? -> raster stage, else passthrough; reunited by name.
 
-    ``cogify_stage`` is the (pandas-UDF) raster transform; identity when
-    absent so the metadata-only pipeline stays pure-column.
+    ``cogify_stage`` is the (pandas-UDF) raster transform.  Without one
+    every row passes through, so ``events`` is returned as is and the
+    metadata-only pipeline stays pure-column.
     """
+    if cogify_stage is None:
+        return events
     flag = F.coalesce(F.col("cogify"), F.lit(False))
-    to_cogify = events.filter(flag)
-    passthrough = events.filter(~flag)
-    if cogify_stage is not None:
-        to_cogify = cogify_stage(to_cogify)
-    return to_cogify.unionByName(passthrough, allowMissingColumns=True)
-
-
-def is_cmr_event() -> F.Column:
-    """F10: CmrEvent iff granule_id present (build-stac/handler.py:40-41)."""
-    return F.col("granule_id").isNotNull()
+    return cogify_stage(events.filter(flag)).unionByName(
+        events.filter(~flag), allowMissingColumns=True
+    )

@@ -16,13 +16,21 @@ semantics actually require (none, for the metadata pipeline — it is
 embarrassingly parallel end to end, exactly what the reference's
 Map(max_concurrency=100) approximated with lambdas).
 
-A list of input events (scripts/item.py:13-23, SURVEY W4) compiles to a
-``unionByName`` of per-event plans.
+A list of input events (scripts/item.py:13-23, SURVEY W4) compiles to
+the same single plan: the per-event discovery frames are unioned first,
+and routing, transfer and item assembly run once over the union.  Every
+event field those stages read (``filename_regex``, ``id_regex``,
+``datetime_range``, ``upload``, ``cogify``) is a column of the event
+record, so no event's literal is baked into a later stage.  Two events
+may discover the same source key, so a ``cogify_stage`` must match its
+outputs back on (collection, source URL), as ``cogify_stage`` in
+``operators/cogify.py`` does.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -122,33 +130,35 @@ def compile_discovery(
     )
 
 
-def compile_pipeline(
-    spec: PipelineSpec,
+def compile_pipeline(spec: PipelineSpec, **kwargs) -> DataFrame:
+    """The full logical plan of one input event: ``compile_many([spec])``."""
+    return compile_many([spec], **kwargs)
+
+
+def compile_many(
+    specs: list[PipelineSpec],
     inventory: DataFrame | None = None,
     granules: DataFrame | None = None,
     target_inventory: DataFrame | None = None,
     target_bucket: str = "veda-data-store",
     cogify_stage: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
-    """The full logical plan: discovery -> routing -> transfer -> items.
+    """W4: discovery -> routing -> transfer -> items for a list of events.
+
+    The events' discovery frames (all EVENT_SCHEMA) are unioned, and
+    routing, transfer planning and item assembly are applied once to the
+    union, so the plan holds one transfer join and one item expression
+    tree however many events there are.
 
     Returns the STAC-item DataFrame (item struct + item_json +
     needs_spill + date_error); callers hand it to a sink.
     """
-    events = compile_discovery(spec, inventory, granules)
+    if not specs:
+        raise ValueError("compile_many needs at least one PipelineSpec, got an empty spec list")
+    events = reduce(
+        DataFrame.unionByName, [compile_discovery(s, inventory, granules) for s in specs]
+    )
     events = split_cogify(events, cogify_stage)
     if target_inventory is not None:
         events = plan_transfer(events, target_inventory, target_bucket)
     return build_items(events)
-
-
-def compile_many(
-    specs: list[PipelineSpec],
-    **kwargs,
-) -> DataFrame:
-    """W4: a list input is the union of per-event plans."""
-    plans = [compile_pipeline(s, **kwargs) for s in specs]
-    out = plans[0]
-    for p in plans[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out

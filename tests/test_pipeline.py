@@ -2,7 +2,10 @@
 and the transfer golden semantics (FIXTURES.md #8), CMR link explosion."""
 
 import json
+import re
 from datetime import datetime
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -66,6 +69,173 @@ def test_list_input_unions_plans(spark):
     got = {r.item.collection for r in items.collect()}
     assert got == {"no2-monthly", "other"}
     assert items.count() == 3
+
+
+def test_compile_many_rejects_empty_spec_list(spark):
+    with pytest.raises(ValueError, match="empty spec list"):
+        compile_many([], inventory=make_inventory(spark))
+
+
+def mixed_catalog(spark):
+    """Four S3 events (month, year and no datetime_range; an id_regex on
+    one; uploads into a target inventory that holds some targets), one
+    CMR event, and their inputs, with a decoy and an undated key."""
+    inventory = spark.createDataFrame(
+        [
+            ("src", "monthly/a_202201.tif", 10, datetime(2022, 1, 1)),
+            ("src", "monthly/a_202202.tif", 10, datetime(2022, 2, 1)),
+            ("src", "monthly/a_202203.tif.aux.xml", 1, datetime(2022, 3, 1)),  # decoy
+            ("src", "yearly/b_2019.tif", 10, datetime(2019, 1, 1)),
+            ("src", "yearly/b_latest.tif", 10, datetime(2019, 1, 1)),  # undated
+            ("src", "daily/c_2020-05-06.tif", 10, datetime(2020, 5, 6)),
+            ("src", "daily/c_20200507.tif", 10, datetime(2020, 5, 7)),
+            ("src", "single/d_20210304.tif", 10, datetime(2021, 3, 4)),
+            ("src", "scratch/monthly/a_202201.tif", 10, datetime(2022, 1, 1)),
+        ],
+        INVENTORY_SCHEMA,
+    )
+    granules = spark.createDataFrame(
+        [
+            (
+                "G1-X", "OMDOAO3e", "003",
+                datetime(2022, 1, 1), datetime(2022, 1, 2),
+                [-180.0, -90.0, 180.0, 90.0],
+                [(DATA_REL, "s3://cmr/OMDOAO3e_2022-01-01.he5")],
+            ),
+        ],
+        GRANULE_SCHEMA,
+    )
+    target = spark.createDataFrame(
+        [("dst", "monthly/a_202201.tif"), ("dst", "daily/c_20200507.tif"),
+         ("other", "monthly/a_202202.tif")],
+        "bucket string, key string",
+    )
+    specs = [
+        PipelineSpec(collection="monthly", prefix="monthly/",
+                     filename_regex=r"monthly/.*\.tif$", datetime_range="month", upload=True),
+        PipelineSpec(collection="yearly", prefix="yearly/",
+                     filename_regex=r"yearly/.*\.tif$", datetime_range="year"),
+        PipelineSpec(collection="daily", prefix="daily/", filename_regex=r"daily/.*\.tif$",
+                     id_regex=r"daily/(c)_([0-9-]+)\.tif$", upload=True),
+        PipelineSpec(collection="single", prefix="single/"),
+        PipelineSpec(collection="OMDOAO3e", discovery="cmr", version="003",
+                     temporal=("2021-01-01T00:00:00Z", "2023-01-01T00:00:00Z")),
+    ]
+    kwargs = dict(inventory=inventory, granules=granules, target_inventory=target,
+                  target_bucket="dst")
+    return specs, kwargs
+
+
+def test_compile_many_matches_per_spec_plans(spark):
+    """One plan over the union of discoveries must give, row for row,
+    what each event compiled alone gives: no event's regexes, date
+    range or upload flag may leak onto another event's rows."""
+    specs, kwargs = mixed_catalog(spark)
+
+    def rows(df):
+        return sorted(
+            (r.item_json, r.needs_copy, r.date_error, r.source_url)
+            for r in df.select("item_json", "needs_copy", "date_error", "source_url").collect()
+        )
+
+    got = rows(compile_many(specs, **kwargs))
+    want = sorted(row for s in specs for row in rows(compile_many([s], **kwargs)))
+    assert got == want
+    items = {json.loads(j)["id"]: (j, copy, err) for j, copy, err, _ in got}
+    assert len(items) == 8  # decoy and out-of-prefix keys dropped
+    assert items["c-2020-05-06"][1] and not items["c-20200507"][1]
+    assert not items["a_202201"][1] and items["a_202202"][1]
+    assert items["b_latest"][2] is not None
+    assert '"end_datetime":"2019-12-31T00:00:00Z"' in items["b_2019"][0]
+    assert '"datetime":"2021-03-04T00:00:00Z"' in items["d_20210304"][0]
+
+
+def test_compile_many_cogifies_shared_keys_per_event(spark):
+    """Cogify events whose discoveries name the same source key, under
+    two collections and under two overlapping prefixes of one
+    collection, each get exactly one item with their own collection's
+    COG, as when every event is compiled alone."""
+    from cloud_optimized_data_pipelines_spark.operators.cogify import cogify_stage
+
+    inventory = spark.createDataFrame(
+        [
+            ("src", "shared/x_2022.nc", 10, datetime(2022, 1, 1)),
+            ("src", "shared/sub/y_2021.nc", 10, datetime(2021, 1, 1)),
+            ("src", "plain/z_2020.tif", 10, datetime(2020, 1, 1)),
+        ],
+        INVENTORY_SCHEMA,
+    )
+    config = spark.createDataFrame(
+        [("omi-a", "v", None, None), ("omi-b", "v", None, None)],
+        "collection string, variable_name string, group string, "
+        "affine_transformation string",
+    )
+    specs = [
+        PipelineSpec(collection="omi-a", prefix="shared/", cogify=True),
+        PipelineSpec(collection="omi-b", prefix="shared/", cogify=True),
+        PipelineSpec(collection="omi-a", prefix="shared/sub/", cogify=True),
+        PipelineSpec(collection="plain", prefix="plain/"),
+    ]
+    kwargs = dict(inventory=inventory, cogify_stage=lambda df: cogify_stage(df, config))
+
+    def rows(df):
+        return sorted(
+            tuple(r) for r in df.select("item_json", "s3_filename", "cogify_error").collect()
+        )
+
+    got = rows(compile_many(specs, **kwargs))
+    assert got == sorted(row for s in specs for row in rows(compile_many([s], **kwargs)))
+    assert sorted((u, err) for _, u, err in got) == [
+        ("s3://src/plain/z_2020.tif", None),
+        ("s3://veda-data-store/omi-a/x_2022.tif", None),
+        ("s3://veda-data-store/omi-a/y_2021.tif", None),
+        ("s3://veda-data-store/omi-a/y_2021.tif", None),
+        ("s3://veda-data-store/omi-b/x_2022.tif", None),
+        ("s3://veda-data-store/omi-b/y_2021.tif", None),
+    ]
+
+
+def test_compile_many_plan_has_one_transfer_join(spark, tmp_path):
+    """Five events compile to one plan with one transfer join (one
+    per event when each event was compiled to its own plan).  The inputs
+    are read back from parquet, so the planner knows their sizes."""
+    specs, kwargs = mixed_catalog(spark)
+    for name in ("inventory", "granules", "target_inventory"):
+        kwargs[name].write.parquet(str(tmp_path / name))
+        kwargs[name] = spark.read.parquet(str(tmp_path / name))
+    qe = compile_many(specs, **kwargs)._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    assert len(re.findall(r"\bJoin\b", optimized)) == 1, optimized
+    physical = qe.executedPlan().toString()
+    assert physical.count("BroadcastHashJoin") == 1, physical
+
+
+def test_passthrough_item_has_no_proj_keys(spark):
+    """With a raster stage in the pipeline, items of events that are
+    not cogified carry no proj:* or raster:* properties."""
+    from cloud_optimized_data_pipelines_spark.operators.build_stac import RASTER_META_COLS
+
+    def stub_stage(df):
+        values = {
+            "bbox": F.array(*[F.lit(v) for v in (0.0, 0.0, 3.0, 2.0)]),
+            "geometry_wkt": F.lit("POLYGON ((0 0, 3 0, 3 2, 0 2, 0 0))"),
+            "proj_epsg": F.lit(4326).cast("long"),
+            "proj_shape": F.array(F.lit(2), F.lit(3)).cast("array<long>"),
+            "proj_transform": F.lit("[1, 0, 0, 0, -1, 2, 0, 0, 1]"),
+            "raster_bands": F.lit("[]"),
+        }
+        return df.withColumns({c: values[c] for c in RASTER_META_COLS})
+
+    specs = [
+        PipelineSpec(collection="no2-monthly", prefix="no2-monthly/",
+                     filename_regex=r"^.*\.tif$", cogify=True),
+        PipelineSpec(collection="other", prefix="other-prefix/", filename_regex=r"^.*\.tif$"),
+    ]
+    items = compile_many(specs, inventory=make_inventory(spark), cogify_stage=stub_stage)
+    props = {r.collection: json.loads(r.item_json)["properties"] for r in items.collect()}
+    assert props["no2-monthly"]["proj:shape"] == "[2, 3]"
+    assert props["no2-monthly"]["proj:epsg"] == "4326"
+    assert not [k for k in props["other"] if k.startswith(("proj:", "raster:"))], props["other"]
 
 
 def test_cmr_pipeline_explodes_and_filters_links(spark):
