@@ -1,5 +1,5 @@
-"""Bounded Arrow output batches for payload-exploding mapInPandas
-operators.
+"""mapInPandas helpers: bounded Arrow output batches for
+payload-exploding operators, and the per-variant probe table.
 
 A generator that yields one DataFrame per INPUT batch hands the JVM
 one Arrow record batch per task-split — for payload columns that can
@@ -25,6 +25,7 @@ Usage inside a mapInPandas generator::
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql.types import DataType
 
 FLUSH_BYTES = 8 << 20
 FLUSH_ROWS = 10_000
@@ -79,3 +80,28 @@ def spread_small_scan(df):
     except Exception:  # non-standard sessions: keep the plan untouched
         pass
     return df
+
+
+def probe_table(spark, variant_fn, schema, variants: int):
+    """``variant_fn(v)`` for v in ``0..variants-1``, computed ON
+    EXECUTORS via mapInPandas — the codec probe shape: each variant
+    returns one row dict, the table is metadata-sized and
+    broadcast-joinable against a corpus keyed on ``id % variants``, so
+    encode/decode cost is per variant, never per corpus row.
+
+    ``schema`` is a DDL string; output columns follow its order.  The
+    range has one slice per variant, capped at the core count: more
+    slices than variants would run empty tasks, and more than cores
+    would queue a second wave of tasks."""
+    struct = DataType.fromDDL(schema)
+    cols = struct.fieldNames()
+    n = int(variants)
+
+    def gen(batches):
+        for pdf in batches:
+            if len(pdf):
+                rows = [variant_fn(int(v)) for v in pdf["id"]]
+                yield pd.DataFrame(rows)[cols]
+
+    parts = max(1, min(n, spark.sparkContext.defaultParallelism))
+    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, struct)

@@ -49,10 +49,22 @@ def literal_vector(values: list[float]) -> Column:
     ``array(...)`` is the IDENTICAL CreateArray-of-Literals expression
     tree.  ``repr(float)`` round-trips bit-exactly through the SQL
     double parser (shortest-decimal repr + correctly-rounded parse),
-    verified down to denormals, max-double and -0.0."""
-    return F.expr(
-        "array(" + ",".join(repr(float(v)) + "D" for v in values) + ")"
-    )
+    verified down to denormals, max-double and -0.0.  Non-finite
+    values have no numeric literal; they are written as string casts
+    (``CAST('NaN' AS DOUBLE)``), still inside the one parse."""
+    return F.expr("array(" + ",".join(map(_double_sql, values)) + ")")
+
+
+_NON_FINITE_SQL = {
+    "inf": "CAST('Infinity' AS DOUBLE)",
+    "-inf": "CAST('-Infinity' AS DOUBLE)",
+    "nan": "CAST('NaN' AS DOUBLE)",
+}
+
+
+def _double_sql(v: float) -> str:
+    r = repr(float(v))
+    return _NON_FINITE_SQL.get(r, r + "D")
 
 
 def sign_bucket(a: Column | str, num_dims: int = 8) -> Column:

@@ -469,21 +469,6 @@ COG_PROBE_SCHEMA = (
 )
 
 
-def cog_probe_table(spark, variants: int = 8):
-    """The per-variant netCDF→COG reference conversions as a DataFrame,
-    computed ON EXECUTORS via mapInPandas (Arrow-batched).  variants is
-    a small constant (8): the table is metadata-sized and broadcast-
-    joinable against a corpus keyed on ``id % variants`` — at scale the
-    encode cost is paid once per variant, not once per row."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame([_cog_variant(int(x)) for x in pdf["id"]])
-
-    return spark.range(int(variants)).mapInPandas(gen, COG_PROBE_SCHEMA)
-
-
 def _cog_szip_variant(v: int) -> dict:
     """The :func:`_cog_variant` conversion with an HDF5/szip SOURCE:
     the same SQL-expressible grid is written as a REAL HDF5 file whose
@@ -533,17 +518,6 @@ def _cog_szip_variant(v: int) -> dict:
         "n_levels": len(read_tiff_meta(blob)),
         "nodata": meta["nodata"][0],
     }
-
-
-def cog_szip_probe_table(spark, variants: int = 8):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_cog_szip_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(int(variants)).mapInPandas(gen, COG_PROBE_SCHEMA)
 
 
 def _stac_raster_variant(v: int) -> dict:
@@ -606,20 +580,3 @@ STAC_PROBE_SCHEMA = (
     "data_type string, vmin double, vmax double, vsum double, "
     "vsumsq double, valid_count long, n_cells long"
 )
-
-
-def stac_probe_table(spark, variants: int = 8):
-    """Per-variant probe rows computed ON EXECUTORS (mapInPandas) —
-    the per-variant encode/probe cost is O(variants), never per-row;
-    callers broadcast-join the result against the corpus."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                rows = [_stac_raster_variant(int(x)) for x in pdf["id"]]
-                cols = [
-                    c.split()[0] for c in STAC_PROBE_SCHEMA.split(", ")
-                ]
-                yield pd.DataFrame(rows)[cols]
-
-    return spark.range(int(variants)).mapInPandas(gen, STAC_PROBE_SCHEMA)

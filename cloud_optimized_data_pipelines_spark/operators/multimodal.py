@@ -283,19 +283,6 @@ def _wav_variant(v: int) -> dict:
     }
 
 
-def wav_probe_table(spark, variants: int = 8) -> DataFrame:
-    """Per-variant WAV reference conversions computed ON EXECUTORS via
-    mapInPandas — metadata-sized, broadcast-joinable (see
-    :func:`png_probe_table`)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame([_wav_variant(int(x)) for x in pdf["id"]])
-
-    return spark.range(int(variants)).mapInPandas(gen, WAV_PROBE_SCHEMA)
-
-
 G711_PROBE_SCHEMA = (
     "variant bigint, wav_md5 string, sample_sum bigint, n_frames bigint, "
     "channels bigint, sample_rate bigint, law string"
@@ -346,17 +333,6 @@ def _wav_g711_variant(v: int) -> dict:
         "sample_rate": rate,
         "law": law,
     }
-
-
-def wav_g711_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_wav_g711_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(int(variants)).mapInPandas(gen, G711_PROBE_SCHEMA)
 
 
 AVI_PROBE_SCHEMA = (
@@ -421,15 +397,6 @@ def _avi_variant(v: int) -> dict:
         "fps": fps,
         "codec": codec,
     }
-
-
-def avi_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame([_avi_variant(int(x)) for x in pdf["id"]])
-
-    return spark.range(int(variants)).mapInPandas(gen, AVI_PROBE_SCHEMA)
 
 
 ADPCM_PROBE_SCHEMA = (
@@ -514,17 +481,6 @@ def _wav_adpcm_variant(v: int) -> dict:
     }
 
 
-def wav_adpcm_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_wav_adpcm_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(int(variants)).mapInPandas(gen, ADPCM_PROBE_SCHEMA)
-
-
 _MS_ADPCM_FRAMES = 1803  # 3 blocks of 500 + a fact-cropped tail
 
 
@@ -596,17 +552,6 @@ def _wav_ms_adpcm_variant(v: int) -> dict:
             np.abs(dec.astype(np.int64) - sig.astype(np.int64)).max()
         ),
     }
-
-
-def wav_ms_adpcm_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_wav_ms_adpcm_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(int(variants)).mapInPandas(gen, ADPCM_PROBE_SCHEMA)
 
 
 def downscale_box(arr: np.ndarray, fy: int, fx: int) -> np.ndarray:
@@ -756,17 +701,6 @@ def _png_resize_variant(v: int) -> dict:
     }
 
 
-def png_resize_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_png_resize_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(int(variants)).mapInPandas(gen, PNG_RESIZE_PROBE_SCHEMA)
-
-
 WAV_DOWNSAMPLE_PROBE_SCHEMA = (
     "variant bigint, down_md5 string, down_sum bigint, n_frames bigint, "
     "channels bigint, sample_rate bigint, bits bigint"
@@ -810,19 +744,6 @@ def _wav_downsample_variant(v: int, factor: int = 4) -> dict:
         "sample_rate": rate // factor,
         "bits": bits,
     }
-
-
-def wav_downsample_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_wav_downsample_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(int(variants)).mapInPandas(
-        gen, WAV_DOWNSAMPLE_PROBE_SCHEMA
-    )
 
 
 PNG_PALETTE_PROBE_SCHEMA = (
@@ -878,18 +799,6 @@ def _png_palette_variant(v: int) -> dict:
         "n_palette": npal,
         "interlaced": interlaced,
     }
-
-
-def png_palette_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_png_palette_variant(int(v)) for v in pdf["id"]]
-            )
-
-    return spark.range(int(variants)).mapInPandas(
-        gen, PNG_PALETTE_PROBE_SCHEMA
-    )
 
 
 GIF_PROBE_SCHEMA = (
@@ -954,14 +863,6 @@ def _gif_variant(v: int) -> dict:
         "height": _GIF_H,
         "n_palette": npal,
     }
-
-
-def gif_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame([_gif_variant(int(v)) for v in pdf["id"]])
-
-    return spark.range(int(variants)).mapInPandas(gen, GIF_PROBE_SCHEMA)
 
 
 def _gif_interlaced_variant(v: int) -> dict:
@@ -1047,16 +948,6 @@ def _gif_interlaced_variant(v: int) -> dict:
         "height": _GIF_H,
         "n_palette": npal,
     }
-
-
-def gif_interlaced_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_gif_interlaced_variant(int(v)) for v in pdf["id"]]
-            )
-
-    return spark.range(int(variants)).mapInPandas(gen, GIF_PROBE_SCHEMA)
 
 
 # sub-rect patch geometry for the composite probe: frame f (1..5) is a
@@ -1162,16 +1053,6 @@ def _gif_composite_variant(v: int) -> dict:
     }
 
 
-def gif_composite_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_gif_composite_variant(int(v)) for v in pdf["id"]]
-            )
-
-    return spark.range(int(variants)).mapInPandas(gen, GIF_PROBE_SCHEMA)
-
-
 JPEG_PROBE_SCHEMA = (
     "variant bigint, jpeg_md5 string, px_sum bigint, width bigint, "
     "height bigint, channels bigint, restart bigint"
@@ -1266,14 +1147,6 @@ def _jpeg12_variant(v: int) -> dict:
     }
 
 
-def jpeg12_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame([_jpeg12_variant(int(v)) for v in pdf["id"]])
-
-    return spark.range(int(variants)).mapInPandas(gen, JPEG_PROBE_SCHEMA)
-
-
 JPEGLL_PROBE_SCHEMA = (
     "variant bigint, jpeg_md5 string, px_sum bigint, width bigint, "
     "height bigint, bits bigint, predictor bigint"
@@ -1316,16 +1189,6 @@ def _jpeg_lossless_variant(v: int) -> dict:
         "bits": bits,
         "predictor": predictor,
     }
-
-
-def jpeg_lossless_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_jpeg_lossless_variant(int(x)) for x in pdf["id"]]
-            )
-
-    return spark.range(int(variants)).mapInPandas(gen, JPEGLL_PROBE_SCHEMA)
 
 
 JPEG_ARITH_PROBE_SCHEMA = (
@@ -1396,29 +1259,6 @@ def _jpeg_arith_variant(v: int) -> dict:
     }
 
 
-def jpeg_arith_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_jpeg_arith_variant(int(x)) for x in pdf["id"]]
-            )
-
-    return spark.range(int(variants)).mapInPandas(
-        gen, JPEG_ARITH_PROBE_SCHEMA
-    )
-
-
-def jpeg_probe_table(spark, variants: int = 8) -> DataFrame:
-    """Per-variant JPEG encode->decode probes computed ON EXECUTORS
-    via Arrow ``mapInPandas`` (same shape as :func:`png_probe_table`)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame([_jpeg_variant(int(v)) for v in pdf["id"]])
-
-    return spark.range(int(variants)).mapInPandas(gen, JPEG_PROBE_SCHEMA)
-
-
 JPEG_SUBSAMPLED_SCHEMA = (
     "variant bigint, jpeg_md5 string, px_sum bigint, width bigint, "
     "height bigint, channels bigint, restart bigint, subsampling string"
@@ -1468,16 +1308,6 @@ def _jpeg_subsampled_variant(v: int) -> dict:
         "restart": restart,
         "subsampling": ss,
     }
-
-
-def jpeg_subsampled_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_jpeg_subsampled_variant(int(v)) for v in pdf["id"]]
-            )
-
-    return spark.range(int(variants)).mapInPandas(gen, JPEG_SUBSAMPLED_SCHEMA)
 
 
 JPEG_PROGRESSIVE_SCHEMA = (
@@ -1549,31 +1379,6 @@ def _jpeg_progressive_variant(v: int) -> dict:
         "subsampling": ss,
         "successive": successive,
     }
-
-
-def jpeg_progressive_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_jpeg_progressive_variant(int(v)) for v in pdf["id"]]
-            )
-
-    return spark.range(int(variants)).mapInPandas(gen, JPEG_PROGRESSIVE_SCHEMA)
-
-
-def png_probe_table(spark, variants: int = 8) -> DataFrame:
-    """The per-variant PNG reference conversions as a DataFrame computed
-    ON EXECUTORS via mapInPandas (cog_probe_table pattern): the table
-    is metadata-sized and broadcast-joinable against a corpus keyed on
-    ``id % variants`` — encode/decode cost is per-variant, not
-    per-row."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame([_png_variant(int(x)) for x in pdf["id"]])
-
-    return spark.range(int(variants)).mapInPandas(gen, PNG_PROBE_SCHEMA)
 
 
 def extract_features(
@@ -1713,25 +1518,6 @@ def _phash_variant(v: int) -> dict:
     }
 
 
-def phash_probe_table(spark, variants: int = 16) -> DataFrame:
-    """Per-variant image fingerprints computed ON EXECUTORS
-    (mapInPandas, png_probe_table pattern): metadata-sized,
-    broadcast-joinable against a corpus keyed on ``id % variants``.
-    At 100 TB of real images the same shape holds with per-ASSET
-    decode: mapInPandas over the binary column, aHash per row, then
-    the banded join below — decode cost rides the scan, the join sees
-    only (id, 2 BIGINT) rows."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_phash_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(int(variants)).mapInPandas(gen, PHASH_PROBE_SCHEMA)
-
-
 def image_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -1861,22 +1647,6 @@ def _afp_variant(v: int) -> dict:
     }
 
 
-def audio_fingerprint_table(spark, variants: int = 16) -> DataFrame:
-    """Per-variant audio fingerprints computed ON EXECUTORS
-    (mapInPandas) — metadata-sized, broadcast-joinable.  At 100 TB of
-    real audio the same shape holds per asset: decode + fingerprint
-    ride the binary-column scan; the near-dup join (shared
-    :func:`image_near_dup_pairs`, it is modality-agnostic over two
-    32-bit words) sees only (id, 2 BIGINT) rows."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame([_afp_variant(int(x)) for x in pdf["id"]])
-
-    return spark.range(int(variants)).mapInPandas(gen, AFP_PROBE_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Video fingerprint near-dup (temporal-mean aHash over the real AVI codec)
 # ---------------------------------------------------------------------------
@@ -1941,21 +1711,6 @@ def _vfp_variant(v: int) -> dict:
         "vfp_lo": lo,
         "n_frames": _VFP_FRAMES,
     }
-
-
-def video_fingerprint_table(spark, variants: int = 16) -> DataFrame:
-    """Per-variant video fingerprints computed ON EXECUTORS
-    (mapInPandas).  At 100 TB the same shape holds per asset: container
-    walk + frame decode + temporal-mean hash ride the binary-column
-    scan; the near-dup join (the shared, modality-agnostic
-    :func:`image_near_dup_pairs`) sees only (id, 2 BIGINT) rows."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame([_vfp_variant(int(x)) for x in pdf["id"]])
-
-    return spark.range(int(variants)).mapInPandas(gen, VFP_PROBE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2077,17 +1832,30 @@ PHASH_WIDE_PROBE_SCHEMA = (
 )
 
 
-def _phash_wide_variant(v: int, rows: int, cols: int) -> dict:
+def _phash_wide_variant(
+    v: int, rows: int, cols: int, real_bytes: bool = True
+) -> dict:
     """Reference conversion (the :func:`_phash_variant` pattern): raster
     -> REAL PNG encode -> decode -> round-trip verify -> wide aHash of
     the DECODED pixels, so an oracle recomputing the hash from the grid
-    formula checks the whole codec chain non-circularly."""
+    formula checks the whole codec chain non-circularly.  ``rows`` x
+    ``cols`` is the block grid (``_WIDE_GRIDS[words]``).
+    ``real_bytes=False`` skips the PNG round trip (formula -> hash
+    directly) — the scale-probe path, where the join is under test,
+    not the codec."""
     from cloud_optimized_data_pipelines_spark.operators.png_codec import (
         decode_png,
         encode_png,
     )
 
     arr = _phash_wide_raster(v)
+    if not real_bytes:
+        return {
+            "variant": v,
+            "png_md5": None,
+            "fp": ahash_wide(arr, rows, cols),
+            "px_sum": int(arr.sum(dtype=np.int64)),
+        }
     png = encode_png(arr.reshape(_PROBE_H, _PROBE_W, 1), filter_cycle=True)
     dec = decode_png(png).reshape(_PROBE_H, _PROBE_W)
     if not np.array_equal(dec, arr):
@@ -2098,44 +1866,6 @@ def _phash_wide_variant(v: int, rows: int, cols: int) -> dict:
         "fp": ahash_wide(dec, rows, cols),
         "px_sum": int(dec.sum(dtype=np.int64)),
     }
-
-
-def phash_wide_probe_table(
-    spark, variants: int, words: int, real_bytes: bool = True
-) -> DataFrame:
-    """Per-variant WIDE image fingerprints on executors.  ``words``
-    picks the block grid (60 bits each: 1 -> 6x10 ... 8 -> 24x20).
-    ``real_bytes=False`` skips the PNG round trip (formula -> hash
-    directly) — the scale-probe path, where the join is under test,
-    not the codec."""
-    rows, cols = _WIDE_GRIDS[words]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if real_bytes:
-                yield pd.DataFrame(
-                    [_phash_wide_variant(int(x), rows, cols)
-                     for x in pdf["id"]]
-                )
-            else:
-                recs = []
-                for x in pdf["id"]:
-                    arr = _phash_wide_raster(int(x))
-                    recs.append(
-                        {
-                            "variant": int(x),
-                            "png_md5": None,
-                            "fp": ahash_wide(arr, rows, cols),
-                            "px_sum": int(arr.sum(dtype=np.int64)),
-                        }
-                    )
-                yield pd.DataFrame(recs)
-
-    return spark.range(int(variants)).mapInPandas(
-        gen, PHASH_WIDE_PROBE_SCHEMA
-    )
 
 
 def banded_hamming_pairs(
@@ -2352,18 +2082,6 @@ def _mp2_variant(v: int) -> dict:
     }
 
 
-def mp2_probe_table(spark, variants: int = 16) -> DataFrame:
-    """Per-variant MPEG-1 Layer II fingerprint probes on executors
-    (the codec-probe pattern): broadcast-joinable, metadata-sized."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame([_mp2_variant(int(x)) for x in pdf["id"]])
-
-    return spark.range(int(variants)).mapInPandas(gen, MP2_PROBE_SCHEMA)
-
-
 MP2_SCF_FP_SCHEMA = "variant bigint, mp2_md5 string, fp array<bigint>"
 
 
@@ -2413,17 +2131,6 @@ def _mp2_scf_fp_variant(v: int) -> dict:
         "mp2_md5": hashlib.md5(mp2).hexdigest(),
         "fp": words,
     }
-
-
-def mp2_scf_fingerprint_table(spark, variants: int = 16) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_mp2_scf_fp_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(int(variants)).mapInPandas(gen, MP2_SCF_FP_SCHEMA)
 
 
 JPEG_ARITH_PROG_PROBE_SCHEMA = (
@@ -2479,18 +2186,6 @@ def _jpeg_arith_prog_variant(v: int) -> dict:
         "n_scans": len(_default_scan_script(ch)),
         "delta_vs_seq": len(pro) - len(seq),
     }
-
-
-def jpeg_arith_prog_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_jpeg_arith_prog_variant(int(x)) for x in pdf["id"]]
-            )
-
-    return spark.range(int(variants)).mapInPandas(
-        gen, JPEG_ARITH_PROG_PROBE_SCHEMA
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2552,14 +2247,6 @@ def _mp4_variant(v: int) -> dict:
     }
 
 
-def mp4_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame([_mp4_variant(int(x)) for x in pdf["id"]])
-
-    return spark.range(int(variants)).mapInPandas(gen, MP4_PROBE_SCHEMA)
-
-
 MPEG_STREAM_PROBE_SCHEMA = (
     "variant bigint, mpeg_md5 string, n_frames bigint, "
     "total_samples bigint, duration_ms bigint, is_vbr boolean, "
@@ -2616,18 +2303,6 @@ def _mpeg_stream_variant(v: int) -> dict:
     }
 
 
-def mpeg_stream_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_mpeg_stream_variant(int(x)) for x in pdf["id"]]
-            )
-
-    return spark.range(int(variants)).mapInPandas(
-        gen, MPEG_STREAM_PROBE_SCHEMA
-    )
-
-
 VFP_WIDE_PROBE_SCHEMA = (
     "variant bigint, avi_md5 string, fp array<bigint>, acc_sum bigint"
 )
@@ -2680,19 +2355,6 @@ def _vfp_wide_variant(v: int, words: int) -> dict:
     }
 
 
-def vfp_wide_probe_table(spark, variants: int, words: int) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_vfp_wide_variant(int(x), words) for x in pdf["id"]]
-                )
-
-    return spark.range(int(variants)).mapInPandas(
-        gen, VFP_WIDE_PROBE_SCHEMA
-    )
-
-
 FLAC_PROBE_SCHEMA = (
     "variant bigint, flac_md5 string, flac_bytes bigint, "
     "n_samples bigint, channels bigint, bits bigint, "
@@ -2736,19 +2398,6 @@ def _flac_variant(v: int) -> dict:
     }
 
 
-def flac_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_flac_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(
-        0, int(variants), numPartitions=int(variants)
-    ).mapInPandas(gen, FLAC_PROBE_SCHEMA)
-
-
 ZSTD_PROBE_SCHEMA = (
     "variant bigint, zst_md5 string, zst_bytes bigint, "
     "payload_md5 string, n_lines bigint, payload_bytes bigint, "
@@ -2761,12 +2410,13 @@ def _zstd_variant(v: int) -> dict:
     format modern training corpora ship in: L = 500 + 100v lines of
     '{"id":I,"v":(7I+v) mod 100}', compressed by the in-container
     REFERENCE coder (zstd CLI, --single-thread for deterministic
-    frames; stored-frame fallback when no CLI), decoded back by OUR
-    RFC 8878 decoder (operators/zstd_codec.py), equality-checked, and
+    frames; stored-frame fallback when no CLI), decoded back with the
+    default engine (operators/zstd_codec.py), equality-checked, and
     the graded aggregates derive from the DECODED bytes.  payload_md5
-    makes the conformance check part of the driver hash: the oracle
-    md5s the SQL-reconstructed payload, the engine md5s what the
-    decoder produced."""
+    makes the round trip part of the driver hash: the oracle md5s the
+    SQL-reconstructed payload, the engine md5s what the decoder
+    produced.  The pure RFC 8878 decoder's conformance on these
+    frames is pinned in tests/test_zstd_codec.py."""
     import hashlib
     import shutil
     import subprocess
@@ -2791,14 +2441,10 @@ def _zstd_variant(v: int) -> dict:
         zst = r.stdout
     else:  # pragma: no cover - container always has the CLI
         zst = zstd_compress_stored(payload)
-    # default engine (auto -> CLI when present) is the graded path;
-    # the pure RFC 8878 decoder must agree byte-for-byte so the
-    # conformance check survives the fast default
+    # default engine (auto -> CLI when present) is the graded path
     decoded = zstd_decompress(zst)
     if decoded != payload:  # pragma: no cover - codec guard
         raise RuntimeError(f"zstd variant {v}: decode mismatch")
-    if zstd_decompress(zst, engine="pure") != payload:  # pragma: no cover
-        raise RuntimeError(f"zstd variant {v}: pure-engine mismatch")
     # aggregates from the DECODED jsonl, not the formula
     import json as _json
 
@@ -2819,19 +2465,6 @@ def _zstd_variant(v: int) -> dict:
     }
 
 
-def zstd_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_zstd_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(
-        0, int(variants), numPartitions=int(variants)
-    ).mapInPandas(gen, ZSTD_PROBE_SCHEMA)
-
-
 COMPRESSED_PROBE_SCHEMA = (
     "variant bigint, codec string, comp_md5 string, comp_bytes bigint, "
     "payload_md5 string, n_lines bigint, payload_bytes bigint, "
@@ -2847,8 +2480,9 @@ def _compressed_variant(v: int) -> dict:
     '{"id":I,"v":(3I+v) mod 50}'), compressed by that codec's
     deterministic writer, sniffed + decoded back through
     sources/compressed.decompress_auto with the DEFAULT engines (zstd
-    auto -> CLI when present; the pure decoder is equality-checked
-    alongside), and equality-checked before grading."""
+    auto -> CLI when present; the pure decoder's conformance on these
+    frames is pinned in tests/test_zstd_codec.py), and
+    equality-checked before grading."""
     import bz2 as _bz2
     import hashlib
     import lzma as _lzma
@@ -2899,10 +2533,6 @@ def _compressed_variant(v: int) -> dict:
     decoded = decompress_auto(blob)
     if decoded != payload:  # pragma: no cover - codec guard
         raise RuntimeError(f"compressed variant {v}: decode mismatch")
-    if codec == "zstd" and decompress_auto(
-        blob, zstd_engine="pure"
-    ) != payload:  # pragma: no cover - codec guard
-        raise RuntimeError(f"compressed variant {v}: pure-engine mismatch")
     import json as _json
 
     vals = sum(_json.loads(line)["v"] for line in decoded.splitlines())
@@ -2916,19 +2546,6 @@ def _compressed_variant(v: int) -> dict:
         "payload_bytes": len(decoded),
         "val_sum": vals,
     }
-
-
-def compressed_probe_table(spark, variants: int = 10) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_compressed_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(
-        0, int(variants), numPartitions=int(variants)
-    ).mapInPandas(gen, COMPRESSED_PROBE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3019,19 +2636,6 @@ def _mp3_variant(v: int) -> dict:
             for chs in fr["granules"] for gg in chs
         )),
     }
-
-
-def mp3_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_mp3_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(
-        0, int(variants), numPartitions=int(variants)
-    ).mapInPandas(gen, MP3_PROBE_SCHEMA)
 
 
 MP3_BIG_TABLES_SCHEMA = (
@@ -3130,19 +2734,6 @@ def _mp3_big_tables_variant(v: int) -> dict:
     }
 
 
-def mp3_big_tables_table(spark, variants: int = 10) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_mp3_big_tables_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(
-        0, int(variants), numPartitions=int(variants)
-    ).mapInPandas(gen, MP3_BIG_TABLES_SCHEMA)
-
-
 MP3_SCF_FP_SCHEMA = "variant bigint, mp3_md5 string, fp array<bigint>"
 
 
@@ -3208,17 +2799,6 @@ def _mp3_scf_fp_variant(v: int) -> dict:
         "mp3_md5": hashlib.md5(enc).hexdigest(),
         "fp": words,
     }
-
-
-def mp3_scf_fingerprint_table(spark, variants: int = 16) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_mp3_scf_fp_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(int(variants)).mapInPandas(gen, MP3_SCF_FP_SCHEMA)
 
 
 MP3_LSF_SCHEMA = (
@@ -3346,19 +2926,6 @@ def _mp3_lsf_variant(v: int) -> dict:
     }
 
 
-def mp3_lsf_probe_table(spark, variants: int = 10) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [_mp3_lsf_variant(int(x)) for x in pdf["id"]]
-                )
-
-    return spark.range(
-        0, int(variants), numPartitions=int(variants)
-    ).mapInPandas(gen, MP3_LSF_SCHEMA)
-
-
 ADTS_PROBE_SCHEMA = (
     "variant bigint, adts_md5 string, n_frames bigint, "
     "total_samples bigint, duration_ms bigint, sample_rate bigint, "
@@ -3427,13 +2994,3 @@ def _adts_variant(v: int) -> dict:
         "has_id3v1": info["has_id3v1"],
         "fp": bare_fp >> 64,  # top 56 of the 120-bit payload digest
     }
-
-
-def adts_probe_table(spark, variants: int = 8) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_adts_variant(int(x)) for x in pdf["id"]]
-            )
-
-    return spark.range(int(variants)).mapInPandas(gen, ADTS_PROBE_SCHEMA)

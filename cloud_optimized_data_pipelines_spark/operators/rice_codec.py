@@ -299,23 +299,6 @@ class _VecBitWriter:
         return np.packbits(bits).tobytes()
 
 
-def _se_ms(block: np.ndarray) -> list[int]:
-    """Second-extension FS values per pair — PYTHON ints: at 32
-    bits/sample m = (d0+d1)(d0+d1+1)/2 + d1 overflows int64 (a negative
-    'cost' silently won the option race before this guard)."""
-    s = [int(v) for v in block]
-    out = []
-    for d0, d1 in zip(s[0::2], s[1::2]):
-        t = d0 + d1
-        out.append(t * (t + 1) // 2 + d1)
-    return out
-
-
-def _se_cost(block: np.ndarray) -> int:
-    ms = _se_ms(block)
-    return sum(ms) + len(ms)
-
-
 def rice_encode(
     samples: np.ndarray,
     n_bits: int,

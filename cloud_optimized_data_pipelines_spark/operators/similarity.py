@@ -1510,11 +1510,7 @@ def _project_signs_udf(signs: list[list[float]], scale: float):
 
     S = np.array(signs, dtype=np.float64)
 
-    @pandas_udf("array<double>")
-    def proj(col: pd.Series) -> pd.Series:
-        if not len(col):
-            return pd.Series([], dtype=object)
-        X = np.array(list(col), dtype=np.float64)
+    def project(X):
         n = X.shape[0]
         out = np.empty((n, S.shape[0]), dtype=np.float64)
         for j in range(S.shape[0]):
@@ -1522,9 +1518,32 @@ def _project_signs_udf(signs: list[list[float]], scale: float):
             for i in range(S.shape[1]):
                 acc = acc + X[:, i] * S[j, i]
             out[:, j] = acc * scale
-        return pd.Series(list(out))
+        return list(out)
+
+    @pandas_udf("array<double>")
+    def proj(col: pd.Series) -> pd.Series:
+        # the fold's components are each null for a null vector
+        return _map_non_null(col, project, [None] * S.shape[0])
 
     return proj
+
+
+def _map_non_null(col: pd.Series, kernel, null) -> pd.Series:
+    """Run a batch ``kernel`` (2-D float64 matrix -> one result per
+    row) over the non-null vectors of ``col``; null vectors get
+    ``null``, the value the declarative fold yields for them."""
+    import numpy as np
+
+    valid = col.notna().to_numpy()
+    if not valid.any():
+        return pd.Series([null] * len(col), dtype=object)
+    got = kernel(np.array(list(col[valid]), dtype=np.float64))
+    if valid.all():
+        return pd.Series(got)
+    out = [null] * len(col)
+    for i, r in zip(np.flatnonzero(valid), got):
+        out[i] = r
+    return pd.Series(out, dtype=object)
 
 
 def ivf_pq_topk(
@@ -1709,17 +1728,18 @@ def _pq_codes_udf(codebooks: list[list[list[float]]]):
     sub = len(codebooks[0][0])
     C = [np.array(b, dtype=np.float64) for b in codebooks]
 
-    @pandas_udf("array<int>")
-    def codes(col: pd.Series) -> pd.Series:
-        if not len(col):
-            return pd.Series([], dtype=object)
-        X = np.array(list(col), dtype=np.float64)
+    def encode(X):
         out = np.empty((X.shape[0], m_sub), dtype=np.int32)
         for s in range(m_sub):
             out[:, s] = _seq_sqdist_argmin(
                 X[:, s * sub:(s + 1) * sub], C[s]
             )
-        return pd.Series(list(out))
+        return list(out)
+
+    @pandas_udf("array<int>")
+    def codes(col: pd.Series) -> pd.Series:
+        # the fold's per-subspace codes are each null for a null vector
+        return _map_non_null(col, encode, [None] * m_sub)
 
     return codes
 
@@ -1735,10 +1755,9 @@ def _assign_lists_udf(centroids: list[list[float]]):
 
     @pandas_udf("int")
     def lid(col: pd.Series) -> pd.Series:
-        if not len(col):
-            return pd.Series([], dtype="int32")
-        X = np.array(list(col), dtype=np.float64)
-        return pd.Series(_seq_sqdist_argmin(X, C).astype("int32"))
+        return _map_non_null(
+            col, lambda X: _seq_sqdist_argmin(X, C).astype("int32"), None
+        )
 
     return lid
 

@@ -1429,20 +1429,6 @@ def fse_write_ncount(norm: list[int], accuracy_log: int) -> bytes:
     return bw.bytes()
 
 
-def _seq_cost_predefined(codes, extras, kind: str) -> int:
-    counts, al = _DEFAULTS[kind]
-    # approximate: per-symbol cost = AL - log2(count) bits
-    import math
-
-    cost = 0
-    for c in codes:
-        p = counts[c] if c < len(counts) else 0
-        if p <= 0:
-            return 1 << 30  # symbol outside the predefined table
-        cost += al - int(math.log2(p))
-    return cost + sum(extras)
-
-
 def _build_seq_coder(kind: str, codes: list[int]):
     """Pick predefined vs trained FSE for one code stream; returns
     (mode, header_bytes, ctable)."""

@@ -11,9 +11,12 @@ from __future__ import annotations
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from cloud_optimized_data_pipelines_spark.batching import probe_table
 from cloud_optimized_data_pipelines_spark.functions.dates import extract_dates  # noqa: F401,E501
 from cloud_optimized_data_pipelines_spark.functions.ids import item_id  # noqa: F401
 from cloud_optimized_data_pipelines_spark.functions import text as T  # noqa: F401
@@ -214,11 +217,12 @@ def k1_cogify_real_bytes_q(spark, sf_dir):
     computed on executors (mapInPandas) and broadcast against the
     corpus — at 100 TB the encode cost is per-variant, not per-row."""
     from cloud_optimized_data_pipelines_spark.operators.cogify import (
-        cog_probe_table,
+        COG_PROBE_SCHEMA,
+        _cog_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = cog_probe_table(spark, 8)
+    probe = probe_table(spark, _cog_variant, COG_PROBE_SCHEMA, 8)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -247,11 +251,12 @@ def k1_cogify_szip_q(spark, sf_dir):
     the same: the query proves the szip read path produces the exact
     raster the deflate/netCDF paths do.  Broadcast per-variant probe."""
     from cloud_optimized_data_pipelines_spark.operators.cogify import (
-        cog_szip_probe_table,
+        COG_PROBE_SCHEMA,
+        _cog_szip_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = cog_szip_probe_table(spark, 8)
+    probe = probe_table(spark, _cog_szip_variant, COG_PROBE_SCHEMA, 8)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -374,11 +379,12 @@ def stac_item_raster_q(spark, sf_dir):
         build_items,
     )
     from cloud_optimized_data_pipelines_spark.operators.cogify import (
-        stac_probe_table,
+        STAC_PROBE_SCHEMA,
+        _stac_raster_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = stac_probe_table(spark, 8)
+    probe = probe_table(spark, _stac_raster_variant, STAC_PROBE_SCHEMA, 8)
     events = t["documents"].select(
         "doc_id",
         (F.col("doc_id") % 8).alias("variant"),
@@ -822,13 +828,19 @@ def multimodal_webdataset_samples_q(spark, sf_dir):
     their input splits, samples never straddle shards, and the
     fields map projects per-modality without touching sibling
     payloads."""
+    from cloud_optimized_data_pipelines_spark.sources.warc import (
+        WARC_PROBE_SCHEMA,
+        probe_blob_row,
+    )
     from cloud_optimized_data_pipelines_spark.sources.webdataset import (
-        wds_probe_table,
+        wds_probe_shard,
         wds_samples,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = wds_probe_table(spark, 8).cache()
+    probe = probe_table(
+        spark, partial(probe_blob_row, wds_probe_shard), WARC_PROBE_SCHEMA, 8
+    ).cache()
     samples = wds_samples(probe, "file_id", "blob")
     agg = samples.groupBy("shard_id").agg(
         F.count("*").cast("bigint").alias("n_samples"),

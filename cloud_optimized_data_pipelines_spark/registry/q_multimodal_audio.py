@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from cloud_optimized_data_pipelines_spark.batching import probe_table
 from cloud_optimized_data_pipelines_spark.functions.dates import extract_dates  # noqa: F401,E501
 from cloud_optimized_data_pipelines_spark.functions.ids import item_id  # noqa: F401
 from cloud_optimized_data_pipelines_spark.functions import text as T  # noqa: F401
@@ -103,7 +104,7 @@ JOIN cnt cb ON cb.v = p.vb
 @query("multimodal_audio_near_dup", _afp_pairs_oracle)
 def multimodal_audio_near_dup_q(spark, sf_dir):
     """Audio fingerprint near-dup over real bytes (operators/
-    multimodal.py::audio_fingerprint_table + the modality-agnostic
+    multimodal.py::_afp_variant + the modality-agnostic
     image_near_dup_pairs banded join): 16 waveforms in 8 engineered
     overdub pairs are encoded as actual RIFF/WAVE files, decoded back,
     energy-hashed (integer-exact 64-window abs-energy threshold), and
@@ -113,12 +114,13 @@ def multimodal_audio_near_dup_q(spark, sf_dir):
     multimodal_phash_pairs, completing per-modality dedup (text /
     image / audio / embedding)."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        audio_fingerprint_table,
+        AFP_PROBE_SCHEMA,
+        _afp_variant,
         image_near_dup_pairs,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = audio_fingerprint_table(spark, 16)
+    probe = probe_table(spark, _afp_variant, AFP_PROBE_SCHEMA, 16)
     pairs = image_near_dup_pairs(
         probe, "variant", hi_col="afp_hi", lo_col="afp_lo", max_hamming=3
     )
@@ -210,7 +212,7 @@ JOIN meta m ON m.v = d.doc_id % 8
 @query("multimodal_wav_features", _wav_probe_oracle)
 def multimodal_wav_features_q(spark, sf_dir):
     """REAL-bytes audio decode (operators/wav_codec.py +
-    operators/multimodal.py::wav_probe_table): per variant a formula
+    operators/multimodal.py::_wav_variant): per variant a formula
     waveform is encoded as an actual RIFF/WAVE blob (PCM 8/16/32-bit,
     mono + stereo interleave), decoded back by the pure-numpy codec,
     round-trip-verified executor-side; the query emits the blob md5
@@ -218,11 +220,12 @@ def multimodal_wav_features_q(spark, sf_dir):
     of multimodal_png_features — broadcast per-variant probe, codec
     cost per-variant not per-row."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        wav_probe_table,
+        WAV_PROBE_SCHEMA,
+        _wav_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = wav_probe_table(spark, 8)
+    probe = probe_table(spark, _wav_variant, WAV_PROBE_SCHEMA, 8)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -446,11 +449,12 @@ def multimodal_wav_adpcm_q(spark, sf_dir):
     (tag 2) is graded by multimodal_wav_ms_adpcm (r10).  Broadcast
     per-variant probe."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        wav_adpcm_probe_table,
+        ADPCM_PROBE_SCHEMA,
+        _wav_adpcm_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = wav_adpcm_probe_table(spark, 8)
+    probe = probe_table(spark, _wav_adpcm_variant, ADPCM_PROBE_SCHEMA, 8)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -529,11 +533,12 @@ def multimodal_wav_ms_adpcm_q(spark, sf_dir):
     Broadcast per-variant probe; at 100 TB the decode rides the
     binary-column scan exactly like the other codec probes."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        wav_ms_adpcm_probe_table,
+        ADPCM_PROBE_SCHEMA,
+        _wav_ms_adpcm_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = wav_ms_adpcm_probe_table(spark, 8)
+    probe = probe_table(spark, _wav_ms_adpcm_variant, ADPCM_PROBE_SCHEMA, 8)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -560,11 +565,12 @@ def multimodal_wav_g711_q(spark, sf_dir):
     replays the CCITT quantizer arithmetically in SQL.  Broadcast
     per-variant probe."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        wav_g711_probe_table,
+        G711_PROBE_SCHEMA,
+        _wav_g711_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = wav_g711_probe_table(spark, 8)
+    probe = probe_table(spark, _wav_g711_variant, G711_PROBE_SCHEMA, 8)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -588,11 +594,14 @@ def multimodal_wav_downsample_q(spark, sf_dir):
     + decoded sample sums hash-checked against the waveform formula
     restricted to kept frames."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        wav_downsample_probe_table,
+        WAV_DOWNSAMPLE_PROBE_SCHEMA,
+        _wav_downsample_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = wav_downsample_probe_table(spark, 8)
+    probe = probe_table(
+        spark, _wav_downsample_variant, WAV_DOWNSAMPLE_PROBE_SCHEMA, 8
+    )
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -710,11 +719,12 @@ def multimodal_mp3_features_q(spark, sf_dir):
     fingerprint is the compressed-domain near-dup key (no synthesis,
     the multimodal_audio_compressed_near_dup pattern)."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        mp3_probe_table,
+        MP3_PROBE_SCHEMA,
+        _mp3_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = mp3_probe_table(spark, 8)
+    probe = probe_table(spark, _mp3_variant, MP3_PROBE_SCHEMA, 8)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -879,11 +889,12 @@ def multimodal_mp3_lsf_q(spark, sf_dir):
     shape is the same binary-column Arrow-batch map as every other
     codec probe (payload bytes never shuffle)."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        mp3_lsf_probe_table,
+        MP3_LSF_SCHEMA,
+        _mp3_lsf_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = mp3_lsf_probe_table(spark, 10)
+    probe = probe_table(spark, _mp3_lsf_variant, MP3_LSF_SCHEMA, 10)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 10).alias("variant")
     )
@@ -1009,11 +1020,12 @@ def multimodal_mp2_features_q(spark, sf_dir):
     compressed-domain scan (codes + scalefactors, NO synthesis) rides
     the binary column exactly like the other codec probes."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        mp2_probe_table,
+        MP2_PROBE_SCHEMA,
+        _mp2_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = mp2_probe_table(spark, 16)
+    probe = probe_table(spark, _mp2_variant, MP2_PROBE_SCHEMA, 16)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 16).alias("variant")
     )
@@ -1125,9 +1137,10 @@ def multimodal_audio_compressed_near_dup_q(spark, sf_dir):
     join sees (id, 2 BIGINT) rows, and candidates stay bounded by the
     geometry ladder instead of exploding ~n^2/2^16."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        MP2_SCF_FP_SCHEMA,
+        _mp2_scf_fp_variant,
         band_geometry,
         banded_hamming_pairs,
-        mp2_scf_fingerprint_table,
     )
 
     t = load_tables(spark, sf_dir)
@@ -1135,7 +1148,7 @@ def multimodal_audio_compressed_near_dup_q(spark, sf_dir):
     _, _, width = band_geometry(n, max_hamming=3)
     bpwd = 60 // width
     bands = 2 * bpwd  # the fingerprint is fixed at 2 words (120 bits)
-    probe = mp2_scf_fingerprint_table(spark, 16)
+    probe = probe_table(spark, _mp2_scf_fp_variant, MP2_SCF_FP_SCHEMA, 16)
     pairs = banded_hamming_pairs(
         probe, "variant", "fp",
         num_bands=bands, width=width, max_hamming=3,
@@ -1263,11 +1276,12 @@ def multimodal_flac_features_q(spark, sf_dir):
     archival layer of crawl-audio corpora; at 100 TB this is the same
     binary-column Arrow-batch scan shape as the WAV/MPEG probes."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        flac_probe_table,
+        FLAC_PROBE_SCHEMA,
+        _flac_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = flac_probe_table(spark, 8)
+    probe = probe_table(spark, _flac_variant, FLAC_PROBE_SCHEMA, 8)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -1386,9 +1400,10 @@ def multimodal_mp3_near_dup_q(spark, sf_dir):
     of stream bytes, the join sees (id, 2 BIGINT) rows, candidates
     bounded by the geometry ladder."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        MP3_SCF_FP_SCHEMA,
+        _mp3_scf_fp_variant,
         band_geometry,
         banded_hamming_pairs,
-        mp3_scf_fingerprint_table,
     )
 
     t = load_tables(spark, sf_dir)
@@ -1396,7 +1411,7 @@ def multimodal_mp3_near_dup_q(spark, sf_dir):
     _, _, width = band_geometry(n, max_hamming=3)
     bpwd = 60 // width
     bands = 2 * bpwd
-    probe = mp3_scf_fingerprint_table(spark, 16)
+    probe = probe_table(spark, _mp3_scf_fp_variant, MP3_SCF_FP_SCHEMA, 16)
     pairs = banded_hamming_pairs(
         probe, "variant", "fp",
         num_bands=bands, width=width, max_hamming=3,
@@ -1572,11 +1587,14 @@ def multimodal_mp3_big_tables_q(spark, sf_dir):
     codec probes: at 100 TB the probe is model-sized and the scan
     side stays a pruned parquet read."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        mp3_big_tables_table,
+        MP3_BIG_TABLES_SCHEMA,
+        _mp3_big_tables_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = mp3_big_tables_table(spark, 10)
+    probe = probe_table(
+        spark, _mp3_big_tables_variant, MP3_BIG_TABLES_SCHEMA, 10
+    )
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 10).alias("variant")
     )
@@ -1683,11 +1701,12 @@ def multimodal_adts_stream_info_q(spark, sf_dir):
     its bare twin (retagged-podcast near-dup).  Broadcast per-variant
     probe; at 100 TB this scan reads 7 bytes per frame."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        adts_probe_table,
+        ADTS_PROBE_SCHEMA,
+        _adts_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = adts_probe_table(spark, 8)
+    probe = probe_table(spark, _adts_variant, ADTS_PROBE_SCHEMA, 8)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )

@@ -11,9 +11,12 @@ from __future__ import annotations
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from cloud_optimized_data_pipelines_spark.batching import probe_table
 from cloud_optimized_data_pipelines_spark.functions.dates import extract_dates  # noqa: F401,E501
 from cloud_optimized_data_pipelines_spark.functions.ids import item_id  # noqa: F401
 from cloud_optimized_data_pipelines_spark.functions import text as T  # noqa: F401
@@ -105,7 +108,7 @@ JOIN cnt cb ON cb.v = p.vb
 @query("multimodal_video_near_dup", _vfp_pairs_oracle)
 def multimodal_video_near_dup_q(spark, sf_dir):
     """Video near-dup over real container bytes (operators/
-    multimodal.py::video_fingerprint_table + the modality-agnostic
+    multimodal.py::_vfp_variant + the modality-agnostic
     banded join): 16 four-frame AVIs in 8 engineered one-frame-edit
     pairs are encoded as actual RIFF/AVI containers (DIB streams,
     idx1 index), walked + decoded back, fingerprinted by the
@@ -115,12 +118,13 @@ def multimodal_video_near_dup_q(spark, sf_dir):
     bytes via md5 literals — with phash/afp this completes
     per-modality near-dup: text, image, audio, video, embedding."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        VFP_PROBE_SCHEMA,
+        _vfp_variant,
         image_near_dup_pairs,
-        video_fingerprint_table,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = video_fingerprint_table(spark, 16)
+    probe = probe_table(spark, _vfp_variant, VFP_PROBE_SCHEMA, 16)
     pairs = image_near_dup_pairs(
         probe, "variant", hi_col="vfp_hi", lo_col="vfp_lo", max_hamming=3
     )
@@ -227,11 +231,12 @@ def multimodal_avi_frames_q(spark, sf_dir):
     the video modality is no longer approximated only by GIF.
     Broadcast per-variant probe."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        avi_probe_table,
+        AVI_PROBE_SCHEMA,
+        _avi_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = avi_probe_table(spark, 8)
+    probe = probe_table(spark, _avi_variant, AVI_PROBE_SCHEMA, 8)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -319,11 +324,12 @@ def multimodal_mp4_container_q(spark, sf_dir):
     100 TB metadata/fingerprint scans actually need.  Broadcast
     per-variant probe."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        mp4_probe_table,
+        MP4_PROBE_SCHEMA,
+        _mp4_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = mp4_probe_table(spark, 8)
+    probe = probe_table(spark, _mp4_variant, MP4_PROBE_SCHEMA, 8)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -386,11 +392,14 @@ def multimodal_mpeg_stream_info_q(spark, sf_dir):
     Broadcast per-variant probe; at 100 TB this scan reads ~4 header
     bytes per frame."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        mpeg_stream_probe_table,
+        MPEG_STREAM_PROBE_SCHEMA,
+        _mpeg_stream_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = mpeg_stream_probe_table(spark, 8)
+    probe = probe_table(
+        spark, _mpeg_stream_variant, MPEG_STREAM_PROBE_SCHEMA, 8
+    )
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -510,9 +519,10 @@ def multimodal_video_near_dup_adaptive_q(spark, sf_dir):
     hash from the frame formula arithmetically and replays the
     ladder; AVI bytes md5-pinned."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        VFP_WIDE_PROBE_SCHEMA,
+        _vfp_wide_variant,
         band_geometry,
         banded_hamming_pairs,
-        vfp_wide_probe_table,
     )
 
     t = load_tables(spark, sf_dir)
@@ -520,7 +530,9 @@ def multimodal_video_near_dup_adaptive_q(spark, sf_dir):
     _, _, width = band_geometry(n, max_hamming=3)
     bpwd = 60 // width
     bands = 2 * bpwd  # 2-word (120-bit) temporal fingerprint
-    probe = vfp_wide_probe_table(spark, 32, 2)
+    probe = probe_table(
+        spark, partial(_vfp_wide_variant, words=2), VFP_WIDE_PROBE_SCHEMA, 32
+    )
     pairs = banded_hamming_pairs(
         probe, "variant", "fp",
         num_bands=bands, width=width, max_hamming=3,

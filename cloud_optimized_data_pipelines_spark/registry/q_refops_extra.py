@@ -7,9 +7,12 @@ Split out of q_survey_misc.py in round 14 (VERDICT r13 task 5); registration ord
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from cloud_optimized_data_pipelines_spark.batching import probe_table
 from cloud_optimized_data_pipelines_spark.functions.dates import extract_dates  # noqa: F401,E501
 from cloud_optimized_data_pipelines_spark.functions.ids import item_id  # noqa: F401
 from cloud_optimized_data_pipelines_spark.functions import text as T  # noqa: F401
@@ -641,13 +644,18 @@ def pipeline_crawl_ingest_q(spark, sf_dir):
         exact_dedup_by_hash,
     )
     from cloud_optimized_data_pipelines_spark.sources.warc import (
+        WARC_PROBE_SCHEMA,
         http_text_bodies,
+        probe_blob_row,
         warc_records,
-        warc_text_probe_table,
+        warc_text_probe_blob,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = warc_text_probe_table(spark, 8).cache()
+    probe = probe_table(
+        spark, partial(probe_blob_row, warc_text_probe_blob),
+        WARC_PROBE_SCHEMA, 8,
+    ).cache()
     recs = warc_records(probe, "file_id", "blob")
     # decode ONCE (optimization r14, guide §5): the response records
     # feed three branches (response counts, kept aggregates, survivor

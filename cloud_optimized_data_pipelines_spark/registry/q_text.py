@@ -8,9 +8,12 @@ Split out of the single-file registry in round 11 (VERDICT r10 task
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from cloud_optimized_data_pipelines_spark.batching import probe_table
 from cloud_optimized_data_pipelines_spark.functions.dates import extract_dates  # noqa: F401,E501
 from cloud_optimized_data_pipelines_spark.functions.ids import item_id  # noqa: F401
 from cloud_optimized_data_pipelines_spark.functions import text as T  # noqa: F401
@@ -268,13 +271,18 @@ def text_warc_charsets_q(spark, sf_dir):
     feeding every downstream text operator.  Scan shape: pure map,
     payload bytes never shuffle."""
     from cloud_optimized_data_pipelines_spark.sources.warc import (
+        WARC_PROBE_SCHEMA,
         http_text_bodies,
-        warc_charset_probe_table,
+        probe_blob_row,
+        warc_charset_probe_blob,
         warc_records,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = warc_charset_probe_table(spark, 8)
+    probe = probe_table(
+        spark, partial(probe_blob_row, warc_charset_probe_blob),
+        WARC_PROBE_SCHEMA, 8,
+    )
     recs = warc_records(probe, "file_id", "blob")
     bodies = http_text_bodies(
         recs.filter(F.col("warc_type") == "response")
@@ -526,15 +534,19 @@ def text_warc_records_q(spark, sf_dir):
     partition (pure map, no shuffle), and header-only consumers never
     move payload bytes."""
     from cloud_optimized_data_pipelines_spark.sources.warc import (
+        WARC_PROBE_SCHEMA,
         http_payload_stats,
-        warc_probe_table,
+        probe_blob_row,
+        warc_probe_blob,
         warc_records,
     )
 
     t = load_tables(spark, sf_dir)
     # 8 rows of real bytes feeding three consumers (record explode,
     # HTTP stats, md5/size): cache so the blobs build once.
-    probe = warc_probe_table(spark, 8).cache()
+    probe = probe_table(
+        spark, partial(probe_blob_row, warc_probe_blob), WARC_PROBE_SCHEMA, 8
+    ).cache()
     recs = warc_records(probe, "file_id", "blob")
     hdr = recs.groupBy("file_id").agg(
         F.count("*").cast("bigint").alias("n_records"),
@@ -647,24 +659,22 @@ def text_zstd_shard_q(spark, sf_dir):
     modern training corpora actually ship in: per variant the
     in-container REFERENCE zstd (CLI v1.5, deterministic
     --single-thread frames) compresses a formula jsonl shard on
-    executors, and OUR pure-python RFC 8878 decoder
-    (operators/zstd_codec.py — FSE, 4-stream Huffman, sequences,
-    repeat offsets, XXH64, all built from the spec and CLI-conformance
-    -proven in tests/test_zstd_codec.py) decodes it back; graded
-    aggregates (line/byte counts, field sums, payload md5) derive
-    from the DECODED bytes while the oracle rebuilds the payload in
-    SQL — so the driver hash IS a cross-implementation conformance
-    check.  At 100 TB the shard scan is a pure map over the binary
-    column riding the DEFAULT engine (auto -> reference CLI when the
-    image ships one, pure fallback otherwise); the pure decoder is
-    equality-checked alongside so the cross-implementation proof
-    survives the fast default."""
+    executors, and the DEFAULT engine decodes it back (auto ->
+    reference CLI when the image ships one, otherwise OUR pure-python
+    RFC 8878 decoder in operators/zstd_codec.py — FSE, 4-stream
+    Huffman, sequences, repeat offsets, XXH64, all built from the spec
+    and CLI-conformance-proven in tests/test_zstd_codec.py, on these
+    very frames too); graded aggregates (line/byte counts, field
+    sums, payload md5) derive from the DECODED bytes while the oracle
+    rebuilds the payload in SQL.  At 100 TB the shard scan is a pure
+    map over the binary column."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        zstd_probe_table,
+        ZSTD_PROBE_SCHEMA,
+        _zstd_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = zstd_probe_table(spark, 8)
+    probe = probe_table(spark, _zstd_variant, ZSTD_PROBE_SCHEMA, 8)
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
@@ -768,11 +778,14 @@ def text_compressed_corpus_q(spark, sf_dir):
     SQL.  At 100 TB a mixed-provenance corpus reads as one binary
     column, one decode per shard inside its input split, no shuffle."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-        compressed_probe_table,
+        COMPRESSED_PROBE_SCHEMA,
+        _compressed_variant,
     )
 
     t = load_tables(spark, sf_dir)
-    probe = compressed_probe_table(spark, 10)
+    probe = probe_table(
+        spark, _compressed_variant, COMPRESSED_PROBE_SCHEMA, 10
+    )
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 10).alias("variant")
     )

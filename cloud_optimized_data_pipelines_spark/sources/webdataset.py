@@ -263,26 +263,3 @@ def wds_probe_shard(v: int) -> bytes:
     if len(samples) != n:  # pragma: no cover - codec guard
         raise RuntimeError(f"wds probe {v}: sample count mismatch")
     return blob
-
-
-def wds_probe_table(spark, variants: int = 8):
-    from cloud_optimized_data_pipelines_spark.sources.warc import (
-        WARC_PROBE_SCHEMA,
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    [
-                        {
-                            "file_id": int(x),
-                            "blob": wds_probe_shard(int(x)),
-                        }
-                        for x in pdf["id"]
-                    ]
-                )
-
-    return spark.range(
-        0, int(variants), numPartitions=int(variants)
-    ).mapInPandas(gen, WARC_PROBE_SCHEMA)

@@ -1,8 +1,9 @@
-"""BatchFlusher: bounded Arrow output batches for payload exploders."""
+"""BatchFlusher: bounded Arrow output batches for payload exploders;
+probe_table: the per-variant probe contract."""
 
 import pandas as pd
 
-from cloud_optimized_data_pipelines_spark.batching import BatchFlusher
+from cloud_optimized_data_pipelines_spark.batching import BatchFlusher, probe_table
 
 
 def test_flush_on_bytes():
@@ -33,3 +34,32 @@ def test_flush_on_rows():
 def test_empty_tail():
     fl = BatchFlusher(["id"])
     assert fl.tail() is None
+
+
+PROBE_SCHEMA = "variant bigint, label string, sq bigint"
+
+
+def _probe(spark, n):
+    def row(v):  # nested, so workers unpickle it by value
+        # keys deliberately out of schema order
+        return {"sq": v * v, "label": f"v{v}", "variant": v}
+
+    return probe_table(spark, row, PROBE_SCHEMA, n)
+
+
+def test_probe_table_rows_columns_and_partitions(spark):
+    par = spark.sparkContext.defaultParallelism
+    for n in (max(1, par // 2), par + 3):
+        probe = _probe(spark, n)
+        assert probe.columns == ["variant", "label", "sq"]
+        assert probe.rdd.getNumPartitions() == min(n, par)
+        rows = probe.collect()
+        assert sorted(r["variant"] for r in rows) == list(range(n))
+        assert all(r["sq"] == r["variant"] ** 2 for r in rows)
+        assert all(r["label"] == f"v{r['variant']}" for r in rows)
+
+
+def test_probe_table_zero_variants_is_empty(spark):
+    probe = _probe(spark, 0)
+    assert probe.columns == ["variant", "label", "sq"]
+    assert probe.count() == 0

@@ -336,16 +336,17 @@ def test_stac_item_raster_metadata(spark):
     netCDF -> cogify -> GeoTIFF tag decode -> column assembly."""
     from pyspark.sql import functions as F
 
+    from cloud_optimized_data_pipelines_spark.batching import probe_table
     from cloud_optimized_data_pipelines_spark.operators.build_stac import (
         attach_raster_metadata,
         build_items,
     )
     from cloud_optimized_data_pipelines_spark.operators.cogify import (
+        STAC_PROBE_SCHEMA,
         _stac_raster_variant,
-        stac_probe_table,
     )
 
-    probe = stac_probe_table(spark, 2)
+    probe = probe_table(spark, _stac_raster_variant, STAC_PROBE_SCHEMA, 2)
     events = probe.select(
         "variant",
         "cog_md5",

@@ -11,9 +11,11 @@ import os
 import random
 import struct
 import zlib
+from functools import partial
 
 import pytest
 
+from cloud_optimized_data_pipelines_spark.batching import probe_table
 from cloud_optimized_data_pipelines_spark.operators import deflate_codec as dc
 from cloud_optimized_data_pipelines_spark.sources import warc as W
 
@@ -312,7 +314,10 @@ def test_warc_probe_blob_formula():
 
 
 def test_warc_records_and_http_stats_spark(spark):
-    probe = W.warc_probe_table(spark, 4)
+    probe = probe_table(
+        spark, partial(W.probe_blob_row, W.warc_probe_blob),
+        W.WARC_PROBE_SCHEMA, 4,
+    )
     recs = W.warc_records(probe, "file_id", "blob")
     rows = recs.orderBy("file_id", "record_index").collect()
     # variant v: 1 warcinfo + 2+v%3 responses
@@ -406,7 +411,10 @@ def test_text_probe_duplicate_rule():
 def test_http_text_bodies_spark(spark):
     from pyspark.sql import functions as F
 
-    probe = W.warc_text_probe_table(spark, 2)
+    probe = probe_table(
+        spark, partial(W.probe_blob_row, W.warc_text_probe_blob),
+        W.WARC_PROBE_SCHEMA, 2,
+    )
     recs = W.warc_records(probe, "file_id", "blob")
     bodies = W.http_text_bodies(
         recs.filter(F.col("warc_type") == "response")

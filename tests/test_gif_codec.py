@@ -93,13 +93,15 @@ def test_gif_named_errors():
 
 
 def test_gif_probe_matches_local_reference(spark):
+    from cloud_optimized_data_pipelines_spark.batching import probe_table
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        GIF_PROBE_SCHEMA,
         _GIF_NPAL,
         _gif_variant,
-        gif_probe_table,
     )
 
-    got = {r.variant: r for r in gif_probe_table(spark, 8).collect()}
+    probe = probe_table(spark, _gif_variant, GIF_PROBE_SCHEMA, 8)
+    got = {r.variant: r for r in probe.collect()}
     assert len(got) == 8
     for v in range(8):
         ref = _gif_variant(v)

@@ -175,12 +175,14 @@ def test_quant_tables_are_annex_k():
 
 
 def test_jpeg_probe_table_matches_local_reference(spark):
+    from cloud_optimized_data_pipelines_spark.batching import probe_table
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        JPEG_PROBE_SCHEMA,
         _jpeg_variant,
-        jpeg_probe_table,
     )
 
-    got = {r.variant: r for r in jpeg_probe_table(spark, 8).collect()}
+    probe = probe_table(spark, _jpeg_variant, JPEG_PROBE_SCHEMA, 8)
+    got = {r.variant: r for r in probe.collect()}
     assert len(got) == 8
     for v in range(8):
         ref = _jpeg_variant(v)
@@ -327,13 +329,16 @@ def test_subsampling_named_errors():
 
 
 def test_subsampled_probe_matches_local_reference(spark):
+    from cloud_optimized_data_pipelines_spark.batching import probe_table
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        JPEG_SUBSAMPLED_SCHEMA,
         _jpeg_subsampled_variant,
-        jpeg_subsampled_probe_table,
     )
 
-    got = {r.variant: r for r in
-           jpeg_subsampled_probe_table(spark, 8).collect()}
+    probe = probe_table(
+        spark, _jpeg_subsampled_variant, JPEG_SUBSAMPLED_SCHEMA, 8
+    )
+    got = {r.variant: r for r in probe.collect()}
     assert len(got) == 8
     for v in range(8):
         ref = _jpeg_subsampled_variant(v)

@@ -2,9 +2,11 @@
 extraction (deterministic fake decoder), frame sampling, payload meta."""
 
 import hashlib
+from functools import partial
 
 from pyspark.sql import functions as F
 
+from cloud_optimized_data_pipelines_spark.batching import probe_table
 from cloud_optimized_data_pipelines_spark.operators.multimodal import (
     FEATURE_DIM,
     extract_features,
@@ -82,13 +84,13 @@ def test_phash_pairs_finds_engineered_neardups(spark):
     Hamming is 22 by construction), and the hashes must come from the
     DECODED pixels (round-trip asserted inside _phash_variant)."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        PHASH_PROBE_SCHEMA,
         _phash_variant,
         ahash64,
         image_near_dup_pairs,
-        phash_probe_table,
     )
 
-    probe = phash_probe_table(spark, 16)
+    probe = probe_table(spark, _phash_variant, PHASH_PROBE_SCHEMA, 16)
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in image_near_dup_pairs(probe, "variant").collect()
@@ -120,12 +122,12 @@ def test_audio_fingerprint_finds_engineered_neardups(spark):
     distance is 14 by construction) and the fingerprints come from the
     DECODED samples (round-trip asserted inside _afp_variant)."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        AFP_PROBE_SCHEMA,
         _afp_variant,
-        audio_fingerprint_table,
         image_near_dup_pairs,
     )
 
-    probe = audio_fingerprint_table(spark, 16)
+    probe = probe_table(spark, _afp_variant, AFP_PROBE_SCHEMA, 16)
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in image_near_dup_pairs(
@@ -145,12 +147,12 @@ def test_video_fingerprint_finds_engineered_neardups(spark):
     from frames decoded out of the real container (round-trip asserted
     inside _vfp_variant)."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        VFP_PROBE_SCHEMA,
         _vfp_variant,
         image_near_dup_pairs,
-        video_fingerprint_table,
     )
 
-    probe = video_fingerprint_table(spark, 16)
+    probe = probe_table(spark, _vfp_variant, VFP_PROBE_SCHEMA, 16)
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in image_near_dup_pairs(
@@ -216,17 +218,24 @@ def test_banded_hamming_pairs_adaptive_recall_and_completeness(spark):
     import pytest as _pytest
 
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        PHASH_WIDE_PROBE_SCHEMA,
         _phash_wide_raster,
+        _phash_wide_variant,
         ahash_wide,
         _WIDE_GRIDS,
         band_geometry,
         banded_hamming_pairs,
-        phash_wide_probe_table,
     )
 
     for n_hint in (500, 5000):
         words, bands, width = band_geometry(n_hint, 3)
-        probe = phash_wide_probe_table(spark, 32, words, real_bytes=False)
+        rows, cols = _WIDE_GRIDS[words]
+        probe = probe_table(
+            spark,
+            partial(_phash_wide_variant, rows=rows, cols=cols,
+                    real_bytes=False),
+            PHASH_WIDE_PROBE_SCHEMA, 32,
+        )
         got = {
             (r["id_a"], r["id_b"])
             for r in banded_hamming_pairs(
@@ -235,7 +244,6 @@ def test_banded_hamming_pairs_adaptive_recall_and_completeness(spark):
             ).collect()
         }
         # exhaustive ground truth
-        rows, cols = _WIDE_GRIDS[words]
         fps = {
             v: ahash_wide(_phash_wide_raster(v), rows, cols)
             for v in range(32)
@@ -259,14 +267,17 @@ def test_vfp_wide_adaptive_pairs(spark):
     banded join at the ladder geometry; cross-base pairs stay far
     (min 44) so the output is exactly the 16 siblings."""
     from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        VFP_WIDE_PROBE_SCHEMA,
+        _vfp_wide_variant,
         band_geometry,
         banded_hamming_pairs,
-        vfp_wide_probe_table,
     )
 
     _, _, width = band_geometry(5000, 3)
     bands = 2 * (60 // width)
-    probe = vfp_wide_probe_table(spark, 32, 2)
+    probe = probe_table(
+        spark, partial(_vfp_wide_variant, words=2), VFP_WIDE_PROBE_SCHEMA, 32
+    )
     got = {
         (r["id_a"], r["id_b"])
         for r in banded_hamming_pairs(

@@ -1006,6 +1006,70 @@ def test_random_projection_numpy_fold_parity(spark, sf_dir):
     assert fast == fold
 
 
+def test_literal_vector_non_finite_matches_lit_array(spark):
+    """Non-finite values parse inside the one SQL literal and equal
+    the per-element ``F.lit`` array, IEEE specials and -0.0 included."""
+    vals = [1.5, float("inf"), -0.0, float("-inf"), float("nan"), 5e-324]
+    row = spark.range(1).select(
+        V.literal_vector(vals).alias("a"),
+        F.array(*[F.lit(v) for v in vals]).alias("b"),
+    ).select("a", "b", (F.col("a") == F.col("b")).alias("eq")).first()
+    assert row["eq"]
+    assert [repr(x) for x in row["a"]] == [repr(x) for x in row["b"]]
+    assert [repr(x) for x in row["a"]] == [repr(v) for v in vals]
+
+
+def test_numpy_vector_udfs_null_rows_match_fold(spark, sf_dir):
+    """The Arrow vector UDFs (random_projection, pq_encode, IVF list
+    assignment) give a null vector what the fold form gives it, and
+    stay bit-exact on the non-null rows of the same batch."""
+    from cloud_optimized_data_pipelines_spark.operators import similarity as S
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(40)
+    nulls = emb.limit(3).select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"),
+        F.lit(None).cast(emb.schema["embedding"].dataType).alias("embedding"),
+    )
+    df = emb.select("vec_id", "embedding").unionByName(nulls).coalesce(1)
+
+    def by_id(frame, col):
+        return {r["vec_id"]: r[col] for r in frame.collect()}
+
+    proj = {
+        impl: by_id(S.random_projection(df, "embedding", out_dims=8,
+                                        impl=impl), "projected")
+        for impl in ("fold", "numpy")
+    }
+    assert proj["numpy"] == proj["fold"]
+    assert sum(v == [None] * 8 for v in proj["fold"].values()) == 3
+
+    books = S.pq_train(emb, "embedding", iters=1)
+    codes = {
+        impl: by_id(S.pq_encode(df, "embedding", books, impl=impl),
+                    "pq_codes")
+        for impl in ("fold", "numpy")
+    }
+    assert codes["numpy"] == codes["fold"]
+
+    cents = [
+        [float(x) for x in r["embedding"]] for r in emb.limit(4).collect()
+    ]
+    lists = {
+        "fold": by_id(S._assign_lists(df, "embedding", cents), "list_id"),
+        "numpy": by_id(
+            df.withColumn("list_id", S._assign_lists_udf(cents)(
+                F.col("embedding"))),
+            "list_id",
+        ),
+    }
+    assert lists["numpy"] == lists["fold"]
+    assert sum(v is None for v in lists["fold"].values()) == 3
+    only_null = nulls.coalesce(1).withColumn(
+        "list_id", S._assign_lists_udf(cents)(F.col("embedding"))
+    )
+    assert [r["list_id"] for r in only_null.collect()] == [None] * 3
+
+
 def test_random_projection_preserves_distances(spark, sf_dir):
     """JL distance preservation at 64 -> 16 dims: squared distances
     after projection track the originals within a generous (1 +- eps)

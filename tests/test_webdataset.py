@@ -5,10 +5,16 @@ output), plus the sample-grouping convention and the Spark explode."""
 
 import io
 import tarfile
+from functools import partial
 
 import pytest
 
+from cloud_optimized_data_pipelines_spark.batching import probe_table
 from cloud_optimized_data_pipelines_spark.sources import webdataset as WD
+from cloud_optimized_data_pipelines_spark.sources.warc import (
+    WARC_PROBE_SCHEMA,
+    probe_blob_row,
+)
 
 MEMBERS = [
     ("000001.txt", b"hello sample one"),
@@ -103,7 +109,10 @@ def test_probe_shard_shape():
 def test_wds_samples_spark(spark):
     from pyspark.sql import functions as F
 
-    probe = WD.wds_probe_table(spark, 2)
+    probe = probe_table(
+        spark, partial(probe_blob_row, WD.wds_probe_shard),
+        WARC_PROBE_SCHEMA, 2,
+    )
     out = WD.wds_samples(probe, "file_id", "blob")
     rows = out.orderBy("shard_id", "key").collect()
     assert len(rows) == (20 + 0) + (20 + 5)

@@ -351,3 +351,49 @@ def test_auto_engine_default(monkeypatch):
     assert Z.zstd_decompress(enc, engine="auto") == data
     monkeypatch.setattr(Z, "_CLI_PRESENT", False)
     assert Z.zstd_decompress(enc, engine="auto") == data  # pure fallback
+
+
+# ---------------------------------------------------------------------------
+# probe shards: the pure decoder conforms on the frames the probes grade
+# ---------------------------------------------------------------------------
+
+
+def _probe_zstd_payloads():
+    """The jsonl payloads the zstd-framed probe variants compress:
+    ``text_zstd_shard`` (8 variants of ``_zstd_variant``) and the
+    zstd shards of ``text_compressed_corpus`` (``_compressed_variant``
+    with variant mod 5 == 1, of 10)."""
+    from cloud_optimized_data_pipelines_spark.operators.multimodal import (
+        _compressed_variant,
+        _zstd_variant,
+    )
+
+    out = []
+    for v in range(8):
+        payload = b"".join(
+            b'{"id":%d,"v":%d}\n' % (i, (7 * i + v) % 100)
+            for i in range(500 + 100 * v)
+        )
+        out.append((_zstd_variant, v, payload))
+    for v in (1, 6):
+        payload = b"".join(
+            b'{"id":%d,"v":%d}\n' % (i, (3 * i + v) % 50)
+            for i in range(300 + 40 * v)
+        )
+        out.append((_compressed_variant, v, payload))
+    return out
+
+
+@needs_cli
+def test_pure_engine_decodes_probe_shards():
+    import hashlib
+
+    for variant_fn, v, payload in _probe_zstd_payloads():
+        # the rebuilt payload is the one the probe grades
+        got = variant_fn(v)
+        assert got["payload_md5"] == hashlib.md5(payload).hexdigest()
+        zst = _cli(["zstd", "-9", "--single-thread", "-c"], payload)
+        assert hashlib.md5(zst).hexdigest() == got.get(
+            "zst_md5", got.get("comp_md5")
+        )
+        assert Z.zstd_decompress(zst, engine="pure") == payload

@@ -410,21 +410,27 @@ def main() -> None:
         # pairs (same 16-bit band value) should grow ~linearly in the
         # corpus until buckets saturate, never quadratically; every
         # engineered sibling pair (2b, 2b+1) must be found.
+        from cloud_optimized_data_pipelines_spark.batching import probe_table
         from cloud_optimized_data_pipelines_spark.operators.multimodal import (
-            audio_fingerprint_table,
+            AFP_PROBE_SCHEMA,
+            PHASH_PROBE_SCHEMA,
+            VFP_PROBE_SCHEMA,
+            _afp_variant,
+            _phash_variant,
+            _vfp_variant,
             image_near_dup_pairs,
-            phash_probe_table,
-            video_fingerprint_table,
         )
 
         MODES = (
-            ("image", phash_probe_table, "phash_hi", "phash_lo"),
-            ("audio", audio_fingerprint_table, "afp_hi", "afp_lo"),
-            ("video", video_fingerprint_table, "vfp_hi", "vfp_lo"),
+            ("image", _phash_variant, PHASH_PROBE_SCHEMA,
+             "phash_hi", "phash_lo"),
+            ("audio", _afp_variant, AFP_PROBE_SCHEMA, "afp_hi", "afp_lo"),
+            ("video", _vfp_variant, VFP_PROBE_SCHEMA, "vfp_hi", "vfp_lo"),
         )
-        for mode, table, hi, lo in MODES:
+        for mode, variant_fn, schema, hi, lo in MODES:
             for nv in (160, 1600, 16000):
-                probe = table(spark, nv).localCheckpoint(eager=True)
+                probe = probe_table(spark, variant_fn, schema, nv)
+                probe = probe.localCheckpoint(eager=True)
                 # candidate mass: per (band, value) bucket n*(n-1)/2 —
                 # the join's true input size, counted without running it
                 bands = probe.select(
@@ -471,13 +477,17 @@ def main() -> None:
         # hold candidate mass ~flat per item where the fixed 4x16-bit
         # scheme grows it ~n^2/2^16, at V=16k and the decade V=160k;
         # engineered sibling recall must be exact (pairs within h=3).
+        from functools import partial
+
+        from cloud_optimized_data_pipelines_spark.batching import probe_table
         from cloud_optimized_data_pipelines_spark.operators.multimodal import (
             _WIDE_GRIDS,
+            PHASH_WIDE_PROBE_SCHEMA,
             _phash_wide_raster,
+            _phash_wide_variant,
             ahash_wide,
             band_geometry,
             banded_hamming_pairs,
-            phash_wide_probe_table,
         )
 
         def bucket_candidates(banded):
@@ -490,8 +500,12 @@ def main() -> None:
 
         for nv in (16_000, 160_000):
             words, bands_n, width = band_geometry(nv, 3)
-            probe = phash_wide_probe_table(
-                spark, nv, words, real_bytes=False
+            rows, cols = _WIDE_GRIDS[words]
+            probe = probe_table(
+                spark,
+                partial(_phash_wide_variant, rows=rows, cols=cols,
+                        real_bytes=False),
+                PHASH_WIDE_PROBE_SCHEMA, nv,
             ).localCheckpoint(eager=True)
             bpwd = 60 // width
             mask = (1 << width) - 1
@@ -532,7 +546,6 @@ def main() -> None:
             )
             got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
             # sibling ground truth: true hamming of (2b, 2b+1) <= 3?
-            rows, cols = _WIDE_GRIDS[words]
             missing = 0
             expected = 0
             import numpy as _np
