@@ -1301,7 +1301,6 @@ def simhash_near_dup_pairs(
     num_bands: int = 4,
     max_hamming: int = 3,
     materialize: bool = False,
-    impl: str = "fold",
 ) -> DataFrame:
     """SimHash near-duplicate pairs via banded Hamming blocking — the
     Google web-dedup design (Manku, Jain & Das Sarma 2007, "Detecting
@@ -1327,11 +1326,16 @@ def simhash_near_dup_pairs(
     fingerprint (Manku's production shape) goes beyond — BIGINT
     signedness caps this portable implementation at 60.
 
+    Fingerprints come from :func:`simhash_fingerprints_fast` (Arrow/
+    hashlib), bit-exact to the :func:`simhash` expression, which the
+    parity tests use as the reference.
+
     ``materialize=True`` computes the fingerprint table ONCE via
     ``localCheckpoint(eager=True)``: the self-join's two sides
-    otherwise each re-derive every fingerprint from raw text — the 60
-    per-bit folds are the dominant cost, so paying them twice doubles
-    the stage (measured 4.8 s -> 2.3 s at sf0.1).  EAGER SIDE EFFECT:
+    otherwise each re-derive every fingerprint from raw text —
+    fingerprinting is the dominant cost, so paying it twice doubles
+    the stage (measured 4.8 s -> 2.3 s at sf0.1 with the fold
+    fingerprints).  EAGER SIDE EFFECT:
     with True, *constructing* the DataFrame runs a Spark job and pins
     non-replicated checkpoint blocks (not executor-loss-resilient),
     unlike every other operator here which returns a pure lazy plan —
@@ -1351,18 +1355,9 @@ def simhash_near_dup_pairs(
         )
     width = bits // num_bands
     mask = (1 << width) - 1
-    if impl == "numpy":
-        # Arrow/hashlib fast path — bit-exact integer majority votes
-        sh = simhash_fingerprints_fast(
-            _spread(df), id_col, text_col, bits
-        ).select(F.col(id_col).alias("id"), "sh")
-    elif impl == "fold":
-        sh = _spread(df).select(
-            F.col(id_col).alias("id"),
-            simhash(F.col(text_col), bits).alias("sh"),
-        )
-    else:
-        raise ValueError(f"impl {impl!r} not one of ('fold', 'numpy')")
+    sh = simhash_fingerprints_fast(
+        _spread(df), id_col, text_col, bits
+    ).select(F.col(id_col).alias("id"), "sh")
     if materialize:
         sh = sh.localCheckpoint(eager=True)
     banded = sh.select(
@@ -1542,9 +1537,9 @@ def simhash_wide_fingerprints_fast(
     unlike the cosine fast paths there is no floating-point caveat;
     equality is pinned by test and the shared oracle).
 
-    Why: the fold path evaluates words*bits interpreted per-bit
-    aggregate lambdas per document — the dominant cost of the wide
-    banded join (25.7 s of the 100x probe's pair stage is
+    Why: the :func:`simhash_wide` expression evaluates words*bits
+    interpreted per-bit aggregate lambdas per document — the dominant
+    cost of the wide banded join (25.7 s of the 100x probe's pair stage is
     fingerprinting).  Here each Arrow batch hashes tokens once with
     hashlib (same md5(token || '|w') construction) and counts all 60
     bit positions in one numpy broadcast.
@@ -1618,7 +1613,6 @@ def simhash_wide_near_dup_pairs(
     num_bands: int = 6,
     max_hamming: int = 3,
     materialize: bool = False,
-    impl: str = "fold",
 ) -> DataFrame:
     """Banded Hamming near-dup pairs over the :func:`simhash_wide`
     multi-word fingerprint — :func:`simhash_near_dup_pairs` re-banded
@@ -1635,6 +1629,12 @@ def simhash_wide_near_dup_pairs(
 
     Output: (id_a, id_b, hamming) with id_a < id_b, hamming over the
     full concatenated fingerprint.
+
+    Fingerprints come from :func:`simhash_wide_fingerprints_fast`
+    (Arrow/hashlib), bit-exact to the :func:`simhash_wide` expression,
+    which the parity tests use as the reference; its words*bits
+    interpreted per-bit lambdas dominated the pair stage (SCALE.md
+    round 8).
     """
     if num_bands % words:
         raise ValueError("num_bands must divide evenly across words")
@@ -1647,20 +1647,9 @@ def simhash_wide_near_dup_pairs(
         )
     width = bits_per_word // bands_per_word
     mask = (1 << width) - 1
-    if impl == "numpy":
-        # Arrow/hashlib fast path — bit-exact (integer majority votes);
-        # the fold path's words*bits interpreted lambdas dominate the
-        # pair stage otherwise (see SCALE.md round 8)
-        sh = simhash_wide_fingerprints_fast(
-            _spread(df), id_col, text_col, words, bits_per_word
-        ).select(F.col(id_col).alias("id"), "sh")
-    elif impl == "fold":
-        sh = _spread(df).select(
-            F.col(id_col).alias("id"),
-            simhash_wide(F.col(text_col), words, bits_per_word).alias("sh"),
-        )
-    else:
-        raise ValueError(f"impl {impl!r} not one of ('fold', 'numpy')")
+    sh = simhash_wide_fingerprints_fast(
+        _spread(df), id_col, text_col, words, bits_per_word
+    ).select(F.col(id_col).alias("id"), "sh")
     if materialize:
         sh = sh.localCheckpoint(eager=True)
     banded = sh.select(

@@ -14,9 +14,9 @@ character sum, sort + run-length fold for the top-word count.  Zero
 exchanges: the previous explode -> groupBy(doc, word) ->
 groupBy(doc) -> join-back shape shuffled corpus-token-scale rows
 twice and re-joined on doc; every statistic is a function of one
-document, so no shuffle is fundamentally required (guide §1.1).
-:func:`word_stats` keeps the aggregation form for callers that want
-the token-level relation.
+document, so no shuffle is fundamentally required (guide §1.1).  That
+aggregation form lives in ``tests/fold_reference.py`` as the parity
+reference.
 """
 
 from __future__ import annotations
@@ -29,19 +29,6 @@ from pyspark.sql import functions as F
 from cloud_optimized_data_pipelines_spark.functions.text import tokens
 
 
-def word_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-doc word statistics: n_words, n_unique_words, top_word_cnt,
-    char_sum (sum of word lengths, for mean word length)."""
-    words = df.select(F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("word"))
-    per_word = words.groupBy("doc", "word").agg(F.count("*").alias("cnt"))
-    return per_word.groupBy("doc").agg(
-        F.sum("cnt").cast("long").alias("n_words"),
-        F.count("*").cast("long").alias("n_unique_words"),
-        F.max("cnt").cast("long").alias("top_word_cnt"),
-        F.sum(F.length("word") * F.col("cnt")).cast("long").alias("char_sum"),
-    )
-
-
 def gopher_quality_flags(
     df: DataFrame,
     id_col: str,
@@ -51,7 +38,6 @@ def gopher_quality_flags(
     min_mean_word_len: float = 3.0,
     max_mean_word_len: float = 10.0,
     max_top_word_frac: float = 0.2,
-    impl: str = "rows",
 ) -> DataFrame:
     """MassiveText word-level rules as one declarative pass.
 
@@ -60,58 +46,21 @@ def gopher_quality_flags(
     the output with zero counts and keep=false — filters must never
     silently drop rows they rejected.
 
-    Two bit-identical implementations (parity-pinned in
-    tests/test_quality_decontaminate.py):
-
-    - ``impl='rows'`` (default): per-row array expressions (tokenize
-      once, fold for the char sum, sorted run-length fold for the top
-      word), ZERO exchanges — no shuffle is fundamentally required
-      because every statistic is a function of one document (guide
-      §1.1, §2.4).  Caveat: Catalyst inlines the fold into every
-      reference, so a consumer should read the flag COLUMNS, not
-      re-derive them.
-    - ``impl='agg'``: the :func:`word_stats` explode + two partial-
-      aggregated corpus-token-scale shuffles + doc join.  The
-      exchanges are materialization points shared via ReusedExchange
-      when the flags fan out into many plan branches.
+    The statistics are per-row array expressions (tokenize once, fold
+    for the char sum, sorted run-length fold for the top word), ZERO
+    exchanges — no shuffle is fundamentally required because every
+    statistic is a function of one document (guide §1.1, §2.4).
+    Caveat: Catalyst inlines the fold into every reference, so a
+    consumer should read the flag COLUMNS, not re-derive them.  The
+    explode + two corpus-token aggregations + doc join form lives in
+    ``tests/fold_reference.py``, and the parity test in
+    tests/test_quality_decontaminate.py pins the two bit-identical.
 
     Measured r14 (sf0.1, local[32], interleaved medians): standalone
-    gopher query 2.5 s (agg) -> 1.6 s (rows); composed
-    pipeline_corpus_preprocess 4.8 s (agg) -> 4.1 s (rows) — rows wins
-    in both shapes and removes two corpus-token shuffles at 100 TB.
+    gopher query 2.5 s (aggregation form) -> 1.6 s (per-row); composed
+    pipeline_corpus_preprocess 4.8 s -> 4.1 s — per-row wins in both
+    shapes and removes two corpus-token shuffles at 100 TB.
     """
-    if impl == "agg":
-        stats = word_stats(df, id_col, text_col)
-        out = df.join(stats, df[id_col] == stats["doc"], "left").drop("doc")
-        n_words = F.coalesce(F.col("n_words"), F.lit(0)).cast("long")
-        mean_len = F.when(
-            n_words > 0,
-            F.col("char_sum").cast("double") / n_words.cast("double"),
-        ).otherwise(F.lit(0.0))
-        top_frac = F.when(
-            n_words > 0,
-            F.col("top_word_cnt").cast("double") / n_words.cast("double"),
-        ).otherwise(F.lit(0.0))
-        return (
-            out.withColumn("n_words", n_words)
-            .withColumn(
-                "n_unique_words",
-                F.coalesce(F.col("n_unique_words"), F.lit(0)).cast("long"),
-            )
-            .withColumn("mean_word_len", mean_len)
-            .withColumn("top_word_frac", top_frac)
-            .withColumn(
-                "keep",
-                (n_words >= min_words)
-                & (n_words <= max_words)
-                & (mean_len >= min_mean_word_len)
-                & (mean_len <= max_mean_word_len)
-                & (top_frac < max_top_word_frac),
-            )
-            .drop("top_word_cnt", "char_sum")
-        )
-    if impl != "rows":
-        raise ValueError(f"gopher_quality_flags: unknown impl {impl!r}")
     toks = tokens(F.col(text_col))
     n_words = F.coalesce(F.size(toks), F.lit(0)).cast("long")
     char_sum = F.coalesce(
@@ -388,8 +337,8 @@ def line_repetition(
     """Gopher duplicate-line rules: ``dup_line_frac`` = (lines -
     distinct lines) / lines and ``dup_line_char_frac`` = characters in
     ALL occurrences of lines appearing more than once / total line
-    characters.  Empty lines are dropped before counting.  Same
-    two-shuffle partial-agg shape as :func:`word_stats`."""
+    characters.  Empty lines are dropped before counting.  Two
+    partial-aggregated shuffles: per (doc, line), then per doc."""
     lines = F.filter(F.split(F.col(text_col), F.lit(line_sep)), lambda x: x != "")
     exploded = df.select(
         F.col(id_col).alias("doc"), F.explode(lines).alias("line")
@@ -728,7 +677,6 @@ def train_quality_classifier(
     lr: float = 8.0,
     grad_round: int = 6,
     prob_round: int = 7,
-    impl: str = "numpy",
 ) -> tuple[DataFrame, list[float]]:
     """Train a hashed-feature logistic-regression quality classifier by
     full-batch gradient descent — the distillation step web-scale
@@ -740,17 +688,16 @@ def train_quality_classifier(
     Features are l1-normalized hashed unigram counts (the hashing
     trick: ``portable_hash32(lower(token)) % n_features``); the model
     is ``p = sigmoid(mean_t w[h(t)])``.  Each GD step is ONE
-    distributed pass: the per-doc margin is a codegen'd fold over the
-    let-bound token array (weights ride the plan as literals — no
-    join, no shuffle for inference, exactly like classifier_score),
-    and the gradient is a token-explode + ``n_features``-group sum,
-    map-side combined.  Driver traffic per iteration is ``n_features``
-    doubles — the same bounded-signature shape as the BPE merge loop
-    and the IVF Lloyd step.
+    distributed pass: the per-doc margin is computed over the token
+    array with the weights in the UDF closure (no join, no shuffle for
+    inference), and the gradient is a ``n_features``-group sum of
+    per-batch partials.  Driver traffic per iteration is
+    ``n_features`` doubles — the same bounded-signature shape as the
+    BPE merge loop and the IVF Lloyd step.
 
-    Determinism: the margin fold accumulates in token order over
-    literal weights (bit-reproducible); ``exp`` differs by 1 ulp
-    between the JVM and libm, so the probability is rounded to
+    Determinism: the margin accumulates in token order
+    (bit-reproducible); ``exp`` differs by 1 ulp between the JVM and
+    libm, so the probability is rounded to
     ``prob_round`` digits on identical margin inputs, and the gradient
     (a shuffle-order-dependent float sum) is rounded to ``grad_round``
     BEFORE the weight update — the same reduction-order pinning as
@@ -760,17 +707,17 @@ def train_quality_classifier(
     Returns ``(scored, weights)``: every input row plus ``margin``
     (rounded), ``prob``, ``pred``; and the trained weight list.
 
-    ``impl='numpy'`` (default) computes the RAW margin per doc in an
-    Arrow batch (Python hashlib md5 == the JVM md5, accumulation in
-    token order — the margin doubles are BIT-IDENTICAL to the fold's,
-    so the JVM-side sigmoid/rounding/gradient arithmetic downstream is
-    unchanged) and emits per-batch per-bucket gradient partials
-    instead of exploding every token through a shuffle — the same
-    Arrow treatment as the wide-simhash fingerprints and PQ encode
-    (Catalyst higher-order lambdas run interpreted; the fold path at
-    500k docs costs ~110 s per GD pass, the Arrow path ~7 s).
-    ``impl='fold'`` keeps the declarative form as the property-test
-    cross-check; both match the same unrolled oracle.
+    The RAW margin per doc is computed in an Arrow batch (Python
+    hashlib md5 == the JVM md5, accumulation in token order — the
+    margin doubles are BIT-IDENTICAL to a fold over the token array, so
+    the JVM-side sigmoid/rounding/gradient arithmetic downstream is
+    unchanged), and the gradient is emitted as per-batch per-bucket
+    partials instead of exploding every token through a shuffle — the
+    same Arrow treatment as the wide-simhash fingerprints and PQ
+    encode (Catalyst higher-order lambdas run interpreted; the fold
+    form at 500k docs costs ~110 s per GD pass, the Arrow path ~7 s).
+    The fold form lives in ``tests/fold_reference.py``; both match the
+    same unrolled oracle.
 
     ``n_features='auto'`` sizes the hash space from the data: one
     ``approx_count_distinct`` pre-pass over the lowered tokens, then
@@ -779,19 +726,8 @@ def train_quality_classifier(
     finding from the fixed-64-bucket probe: ~30k distinct tokens into
     64 buckets trains to baseline accuracy).  Driver traffic stays
     ``n_features`` doubles per pass — ~1 MB at a 30k vocabulary.
-    Auto sizing requires ``impl='numpy'``: the fold path embeds every
-    weight as a plan literal, which does not survive 100k+ features.
     """
-    from cloud_optimized_data_pipelines_spark.operators.sketches import (
-        portable_hash32,
-    )
-
     if n_features == "auto":
-        if impl != "numpy":
-            raise ValueError(
-                "n_features='auto' requires impl='numpy' (the fold "
-                "path embeds each weight as a plan literal)"
-            )
         import math as _math
 
         est = int(
@@ -825,35 +761,18 @@ def train_quality_classifier(
     # above) — so the trained weights and scores are identical.
     # Unpersisted after the loop: the returned ``scored`` plan derives
     # from the original lineage, leaving no cache behind.
-    loop_base = base
-    if impl == "numpy":
-        loop_base = base.select("_tk", "_y")
-        ideal = max(1, -(-n_docs // 1000))
-        if ideal < df.sparkSession.sparkContext.defaultParallelism:
-            # corpus smaller than ~1k docs/core: right-size the loop
-            # stages (32 near-empty Python tasks cost more in worker
-            # round trips than they buy); the shuffle moves < 1k-doc
-            # partitions.  Never fires at production corpus sizes.
-            loop_base = loop_base.repartition(ideal)
-        loop_base = loop_base.persist()
+    loop_base = base.select("_tk", "_y")
+    ideal = max(1, -(-n_docs // 1000))
+    if ideal < df.sparkSession.sparkContext.defaultParallelism:
+        # corpus smaller than ~1k docs/core: right-size the loop
+        # stages (32 near-empty Python tasks cost more in worker
+        # round trips than they buy); the shuffle moves < 1k-doc
+        # partitions.  Never fires at production corpus sizes.
+        loop_base = loop_base.repartition(ideal)
+    loop_base = loop_base.persist()
 
     def margin_expr(w: list[float]):
-        if impl == "numpy":
-            return _clf_margin_udf(w, n_features)(F.col("_tk"))
-        wlit = F.array(*[F.lit(float(v)) for v in w])
-        tk = F.col("_tk")
-        s = F.aggregate(
-            tk,
-            F.lit(0.0),
-            lambda acc, t: acc
-            + F.element_at(
-                wlit,
-                (portable_hash32(F.lower(t)) % n_features + 1).cast("int"),
-            ),
-        )
-        return F.when(
-            F.size(tk) > 0, s / F.size(tk).cast("double")
-        ).otherwise(F.lit(0.0))
+        return _clf_margin_udf(w, n_features)(F.col("_tk"))
 
     def prob_expr(w: list[float]):
         return F.round(
@@ -862,24 +781,11 @@ def train_quality_classifier(
 
     w = [0.0] * n_features
     for _ in range(iters):
-        if impl == "numpy":
-            partials = loop_base.select(
-                prob_expr(w).alias("_p"), "_y", "_tk"
-            ).mapInPandas(
-                _clf_grad_partials(n_features), "_b int, _partial double"
-            )
-        else:
-            partials = base.select(
-                prob_expr(w).alias("_p"),
-                "_y",
-                F.size("_tk").cast("double").alias("_n"),
-                F.explode("_tk").alias("_t"),
-            ).select(
-                (portable_hash32(F.lower(F.col("_t"))) % n_features)
-                .cast("int")
-                .alias("_b"),
-                ((F.col("_p") - F.col("_y")) / F.col("_n")).alias("_partial"),
-            )
+        partials = loop_base.select(
+            prob_expr(w).alias("_p"), "_y", "_tk"
+        ).mapInPandas(
+            _clf_grad_partials(n_features), "_b int, _partial double"
+        )
         grads = (
             partials.groupBy("_b")
             .agg(
@@ -891,8 +797,7 @@ def train_quality_classifier(
         )
         g = {r["_b"]: r["_g"] for r in grads}
         w = [w[b] - lr * g.get(b, 0.0) for b in range(n_features)]
-    if loop_base is not base:
-        loop_base.unpersist()
+    loop_base.unpersist()
     scored = base.select(
         *df.columns,
         F.round(margin_expr(w), 6).alias("margin"),
@@ -904,10 +809,10 @@ def train_quality_classifier(
 
 def _clf_bucket(token: str, n_features: int) -> int:
     """ASCII-token assumption: this Python ``str.lower()`` and the fold
-    path's JVM ``F.lower`` (and the oracle's DuckDB ``lower``) agree on
-    ASCII but can diverge on a few Unicode case mappings (e.g. U+0130
+    reference's JVM ``F.lower`` (and the oracle's DuckDB ``lower``) agree
+    on ASCII but can diverge on a few Unicode case mappings (e.g. U+0130
     LATIN CAPITAL LETTER I WITH DOT ABOVE) — a non-ASCII token could
-    bucket differently across paths/engines.  The tokenizers feeding
+    bucket differently across engines.  The tokenizers feeding
     the classifier emit ASCII word tokens, so the assumption holds;
     callers hashing arbitrary Unicode should pre-normalize tokens."""
     import hashlib
@@ -952,8 +857,8 @@ def _clf_grad_partials(n_features: int):
     """Arrow gradient stage: per-batch per-bucket partial sums of
     ``(p - y) / n_tokens`` — 64 rows per batch cross the shuffle
     instead of one row per token.  The final SUM-then-round happens
-    JVM-side, identical to the fold path (both paths' raw sums differ
-    only in reduction order, which ``grad_round`` pins)."""
+    JVM-side, identical to the fold reference's token explode (the raw
+    sums differ only in reduction order, which ``grad_round`` pins)."""
 
     def gen(batches):
         for pdf in batches:

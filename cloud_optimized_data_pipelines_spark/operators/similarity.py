@@ -15,7 +15,7 @@ buckets, cosine >= threshold.
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -284,18 +284,6 @@ def _sq_dist(v, c) -> F.Column:
     )
 
 
-def _assign_lists(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
-    """Argmin-squared-L2 list assignment against broadcast centroid
-    literals — one codegen'd expression, no UDF, no shuffle."""
-    dists = F.array(
-        *[_sq_dist(F.col(vec_col), literal_vector(c)) for c in centroids]
-    )
-    return df.withColumn(
-        "list_id",
-        (F.array_position(dists, F.array_min(dists)) - 1).cast("int"),
-    )
-
-
 def ivf_build(
     df: DataFrame,
     vec_col: str,
@@ -303,7 +291,6 @@ def ivf_build(
     iters: int = 2,
     id_col: str = "vec_id",
     centroid_round: int | None = None,
-    impl: str = "numpy",
     seed_vectors: list[list[float]] | None = None,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Deterministic IVF coarse quantizer (the second ANN scale path,
@@ -333,12 +320,10 @@ def ivf_build(
     no measurable effect on recall (the centroids are coarse list
     anchors, not scored results).
 
-    ``impl='numpy'`` (default, optimization r14) assigns in Arrow
-    batches with the sequential-fold argmin — BIT-EXACT to
-    ``impl='fold'`` (the declarative zip_with/aggregate form, kept as
-    the property-test cross-check; see :func:`pq_encode`) but far
-    faster: Catalyst higher-order lambdas run interpreted and
-    assignment is k_lists folds of dim terms per row.
+    Assignment runs in Arrow batches (:func:`_assign_lists_udf`) with
+    the sequential-fold argmin — BIT-EXACT to the declarative
+    zip_with/aggregate argmin, which lives in
+    ``tests/fold_reference.py`` as the property-test reference.
 
     Optimization r15 (guide §5, the iterative-trainer working set):
     the input is pinned once with a LAZY ``localCheckpoint`` — the
@@ -366,11 +351,9 @@ def ivf_build(
     dim = len(centroids[0])
 
     def assign(frame, cents):
-        if impl == "numpy":
-            return frame.withColumn(
-                "list_id", _assign_lists_udf(cents)(F.col(vec_col))
-            )
-        return _assign_lists(frame, vec_col, cents)
+        return frame.withColumn(
+            "list_id", _assign_lists_udf(cents)(F.col(vec_col))
+        )
 
     for _ in range(iters):
         assigned = assign(df, centroids)
@@ -404,7 +387,6 @@ def ivf_topk(
     centroids: list[list[float]] | None = None,
     round_digits: int | None = 6,
     centroid_round: int | None = None,
-    impl: str = "numpy",
 ) -> DataFrame:
     """IVF probe: rank centroids driver-side (k x dim floats — trivial),
     score only the ``nprobe`` nearest inverted lists.  ``nprobe ==
@@ -412,7 +394,7 @@ def ivf_topk(
     dial is nprobe, independent of corpus size."""
     if assigned is None or centroids is None:
         assigned, centroids = ivf_build(
-            df, vec_col, k_lists, iters, id_col, centroid_round, impl
+            df, vec_col, k_lists, iters, id_col, centroid_round
         )
     ranked = sorted(
         range(len(centroids)),
@@ -1057,7 +1039,9 @@ def ivf_write_index(
 
 def _min_sq_dist(vec: Column, centroids: list[list[float]]) -> Column:
     """Squared L2 distance to the NEAREST centroid (the assignment
-    distance) — same codegen shape as :func:`_assign_lists`."""
+    distance): the minimum of the ``_sq_dist`` folds, so a vector the
+    assignment leaves unassigned (null, or not ``dim`` long) gets
+    null."""
     return F.array_min(
         F.array(*[_sq_dist(vec, literal_vector(c)) for c in centroids])
     )
@@ -1111,9 +1095,9 @@ def ivf_append(
         key=lambda r: r["list_id"],
     )
     centroids = [[float(x) for x in r["centroid"]] for r in cents_rows]
-    assigned = _assign_lists(new_df, vec_col, centroids).withColumn(
-        "_qd", _min_sq_dist(F.col(vec_col), centroids)
-    )
+    assigned = new_df.withColumn(
+        "list_id", _assign_lists_udf(centroids)(F.col(vec_col))
+    ).withColumn("_qd", _min_sq_dist(F.col(vec_col), centroids))
     new_stats = {
         int(r["list_id"]): (int(r["n"]), float(r["sum_sqdist"]))
         for r in assigned.groupBy("list_id")
@@ -1204,7 +1188,6 @@ def pq_train(
     iters: int = 1,
     id_col: str = "vec_id",
     centroid_round: int | None = 6,
-    impl: str = "numpy",
     seed_vectors: list[list[float]] | None = None,
 ) -> list[list[list[float]]]:
     """Product-quantization codebooks (Jégou et al. 2011, "Product
@@ -1257,7 +1240,7 @@ def pq_train(
     ]
     vc = F.col(vec_col)
     for _ in range(iters):
-        enc = pq_encode(df, vec_col, books, "_codes", impl=impl)
+        enc = pq_encode(df, vec_col, books, "_codes")
         cells = F.array(
             *[
                 F.struct(
@@ -1292,44 +1275,23 @@ def pq_train(
     return books
 
 
-def _pq_code(sv: Column, codebook: list[list[float]]) -> Column:
-    """Argmin-squared-L2 code for one subvector against one subspace's
-    codebook literals — codegen'd, ties to the lowest code (the same
-    array_position-of-min idiom as :func:`_assign_lists`)."""
-    dists = F.array(*[_sq_dist(sv, literal_vector(c)) for c in codebook])
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
 def pq_encode(
     df: DataFrame,
     vec_col: str,
     codebooks: list[list[list[float]]],
     code_col: str = "pq_codes",
-    impl: str = "numpy",
 ) -> DataFrame:
     """Attach the PQ code array (``m_sub`` small ints per vector) —
     map-only, no shuffle; the stored form a 100 TB embedding table
     would persist next to (or instead of) the raw vectors.
 
-    ``impl='numpy'`` (default) encodes in Arrow batches with the
-    sequential-fold argmin — BIT-EXACT to ``impl='fold'`` (the
-    declarative zip_with/aggregate form, kept as the property-test
-    cross-check) but ~10-60x faster: Catalyst higher-order lambdas
-    run interpreted, and encode is m_sub*k_codes folds per row."""
-    if impl == "numpy":
-        return df.withColumn(code_col, _pq_codes_udf(codebooks)(F.col(vec_col)))
-    m_sub = len(codebooks)
-    sub = len(codebooks[0][0])
-    vc = F.col(vec_col)
-    return df.withColumn(
-        code_col,
-        F.array(
-            *[
-                _pq_code(F.slice(vc, s * sub + 1, sub), codebooks[s])
-                for s in range(m_sub)
-            ]
-        ),
-    )
+    Encodes in Arrow batches (:func:`_pq_codes_udf`) with the
+    sequential-fold argmin — BIT-EXACT to the declarative
+    zip_with/aggregate form, which lives in ``tests/fold_reference.py``
+    as the property-test reference (Catalyst higher-order lambdas run
+    interpreted, and encode is m_sub*k_codes folds per row, so the
+    Arrow form is ~10-60x faster)."""
+    return df.withColumn(code_col, _pq_codes_udf(codebooks)(F.col(vec_col)))
 
 
 def pq_topk(
@@ -1341,7 +1303,6 @@ def pq_topk(
     id_col: str = "vec_id",
     code_col: str | None = None,
     round_digits: int | None = 6,
-    impl: str = "numpy",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: the query's
     distance to every codebook centroid is precomputed driver-side
@@ -1374,7 +1335,7 @@ def pq_topk(
     out = df
     if code_col is None:
         code_col = "_pq_codes"
-        out = pq_encode(out, vec_col, codebooks, code_col, impl=impl)
+        out = pq_encode(out, vec_col, codebooks, code_col)
     adc = F.lit(0.0)
     for s in range(m_sub):
         dt = literal_vector(dtable[s])
@@ -1397,7 +1358,6 @@ def pq_refine_topk(
     refine: int = 100,
     id_col: str = "vec_id",
     round_digits: int | None = 6,
-    impl: str = "numpy",
 ) -> DataFrame:
     """ADC shortlist + exact re-rank (Jégou et al. 2011 §VI, the
     "IVFADC+R" refinement): :func:`pq_topk` picks ``refine``
@@ -1411,7 +1371,7 @@ def pq_refine_topk(
     the result — is deterministic and oracle-checkable."""
     short = pq_topk(
         df, vec_col, query, codebooks, k=refine, id_col=id_col,
-        code_col=None, round_digits=round_digits, impl=impl,
+        code_col=None, round_digits=round_digits,
     ).select(id_col)
     cand = df.join(F.broadcast(short), id_col)
     dist = _sq_dist(F.col(vec_col), literal_vector(query))
@@ -1431,7 +1391,6 @@ def random_projection(
     in_dims: int | None = None,
     id_col: str = "vec_id",
     out_col: str = "projected",
-    impl: str = "numpy",
 ) -> DataFrame:
     """Sign random projection (Achlioptas 2003's database-friendly
     Johnson-Lindenstrauss transform): ``y_j = (1/sqrt(out_dims)) *
@@ -1442,19 +1401,16 @@ def random_projection(
 
     The projection matrix is never materialized: each sign is the md5
     parity of ``"j:i"`` (the same portable hash family as the
-    sketches), computed driver-side and embedded as +-1 literals, so
-    the whole transform is one codegen'd fold per output dim — no UDF,
-    no shuffle, no broadcast — and both engines derive the IDENTICAL
-    matrix, making the output bit-exact without rounding (every fold
-    is the same ordered sequence of IEEE double ops).
+    sketches), computed driver-side into the UDF closure — no shuffle,
+    no broadcast — and both engines derive the IDENTICAL matrix.
 
-    ``impl='numpy'`` (default, optimization r15, guide §4.2): projects
-    in Arrow batches with the same sequential multiply-add —
-    ``acc = acc + x_i * s_ij`` in dimension order, each step one
-    elementwise IEEE op, so every row's accumulation is the IDENTICAL
-    instruction sequence as the fold (and the oracle's list_reduce):
-    BIT-EXACT, pinned by a fold-vs-numpy parity test.  The fold form
-    is out_dims interpreted Catalyst lambdas of in_dims terms per row.
+    Projects in Arrow batches (:func:`_project_signs_udf`) with the
+    sequential multiply-add ``acc = acc + x_i * s_ij`` in dimension
+    order, each step one elementwise IEEE op, so every row's
+    accumulation is the IDENTICAL instruction sequence as the
+    declarative zip_with/aggregate fold (and the oracle's list_reduce):
+    BIT-EXACT without rounding.  The fold form lives in
+    ``tests/fold_reference.py`` as the property-test reference.
     """
     import hashlib as _hashlib
     import math as _math
@@ -1472,31 +1428,9 @@ def random_projection(
         ]
         for j in range(out_dims)
     ]
-    if impl == "numpy":
-        return df.select(
-            F.col(id_col),
-            _project_signs_udf(signs, scale)(F.col(vec_col)).alias(out_col),
-        )
-    if impl != "fold":
-        raise ValueError(f"impl must be 'fold' or 'numpy', got {impl!r}")
-    vc = F.col(vec_col)
-    comps = [
-        (
-            F.aggregate(
-                F.zip_with(
-                    vc,
-                    literal_vector(signs[j]),
-                    lambda x, s: x.cast("double") * s,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            * F.lit(scale)
-        ).alias(f"_p{j}")
-        for j in range(out_dims)
-    ]
-    return df.select(F.col(id_col), *[c for c in comps]).select(
-        id_col, F.array(*[F.col(f"_p{j}") for j in range(out_dims)]).alias(out_col)
+    return df.select(
+        F.col(id_col),
+        _project_signs_udf(signs, scale)(F.col(vec_col)).alias(out_col),
     )
 
 
@@ -1504,9 +1438,10 @@ def _project_signs_udf(signs: list[list[float]], scale: float):
     """Arrow-batched sign projection — the ±1 matrix in the closure,
     sequential-over-dims multiply-add per batch (see
     :func:`random_projection`: bit-exact to the fold form; ``x * ±1.0``
-    and the power-of-two ``scale`` multiply are exact IEEE ops)."""
+    is an exact IEEE op).  A vector that is not ``in_dims`` long gets
+    all-null components, as the fold's zip_with pads it with nulls."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     S = np.array(signs, dtype=np.float64)
 
@@ -1518,32 +1453,63 @@ def _project_signs_udf(signs: list[list[float]], scale: float):
             for i in range(S.shape[1]):
                 acc = acc + X[:, i] * S[j, i]
             out[:, j] = acc * scale
-        return list(out)
+        return out
 
-    @pandas_udf("array<double>")
-    def proj(col: pd.Series) -> pd.Series:
-        # the fold's components are each null for a null vector
-        return _map_non_null(col, project, [None] * S.shape[0])
+    @arrow_udf("array<double>")
+    def proj(col: pa.Array) -> pa.Array:
+        return _map_vectors(col, S.shape[1], project)
 
     return proj
 
 
-def _map_non_null(col: pd.Series, kernel, null) -> pd.Series:
-    """Run a batch ``kernel`` (2-D float64 matrix -> one result per
-    row) over the non-null vectors of ``col``; null vectors get
-    ``null``, the value the declarative fold yields for them."""
+def _map_vectors(col, width: int, kernel, fold_valid=None):
+    """Run a batch ``kernel`` (float64 matrix of ``width`` columns ->
+    one value, or one row of values, per vector) over an Arrow list
+    array of vectors, and null out what the declarative fold yields
+    as null: every output of a null vector, and those of a vector
+    whose length is not ``width`` unless ``fold_valid(length)`` marks
+    them (a bool per output; the vector is zero-padded or cut to
+    ``width`` for the kernel).  Well-formed batches reshape the values
+    buffer straight into the kernel; only rows of another length take
+    the per-row path.  Arrow output keeps NaN distinct from null."""
     import numpy as np
+    import pyarrow.compute as pc
 
-    valid = col.notna().to_numpy()
-    if not valid.any():
-        return pd.Series([null] * len(col), dtype=object)
-    got = kernel(np.array(list(col[valid]), dtype=np.float64))
-    if valid.all():
-        return pd.Series(got)
-    out = [null] * len(col)
-    for i, r in zip(np.flatnonzero(valid), got):
-        out[i] = r
-    return pd.Series(out, dtype=object)
+    n = len(col)
+    lens = pc.list_value_length(col).fill_null(-1).to_numpy()
+    ok = lens == width
+
+    def matrix(vectors):
+        return (
+            vectors.flatten()
+            .to_numpy(zero_copy_only=False)
+            .astype(np.float64)
+            .reshape(-1, width)
+        )
+
+    odd = np.flatnonzero((lens >= 0) & ~ok)
+    if ok.all():
+        X = matrix(col)
+    else:
+        X = np.zeros((n, width), dtype=np.float64)
+        X[ok] = matrix(col.filter(pa.array(ok)))
+        for i in odd:
+            v = col[int(i)].values.to_numpy(zero_copy_only=False)[:width]
+            X[i, : len(v)] = v
+    with np.errstate(all="ignore"):  # IEEE results, as in the fold
+        vals = kernel(X)
+    null = np.zeros(vals.shape, dtype=bool)
+    null[~ok] = True
+    if fold_valid is not None:
+        for i in odd:
+            null[i] = ~fold_valid(int(lens[i]))
+    if vals.ndim == 1:
+        return pa.array(vals, mask=null)
+    k = vals.shape[1]
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, n * k + 1, k, dtype=np.int32)),
+        pa.array(vals.ravel(), mask=null.ravel()),
+    )
 
 
 def ivf_pq_topk(
@@ -1558,7 +1524,6 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     centroid_round: int | None = 6,
     round_digits: int | None = 6,
-    impl: str = "numpy",
 ) -> DataFrame:
     """IVFADC (Jégou et al. 2011 §IV): the billion-scale ANN layout —
     a coarse IVF quantizer prunes to ``nprobe`` of ``k_lists``
@@ -1596,7 +1561,7 @@ def ivf_pq_topk(
     seed_vecs = [[float(x) for x in r[0]] for r in seed_rows]
     assigned, centroids = ivf_build(
         df, vec_col, k_lists, iters=1, id_col=id_col,
-        centroid_round=centroid_round, impl=impl,
+        centroid_round=centroid_round,
         seed_vectors=seed_vecs,
     )
     dim = len(centroids[0])
@@ -1631,10 +1596,10 @@ def ivf_pq_topk(
     res_seeds = [list(X[i] - C[lids[i]]) for i in range(X.shape[0])]
     books = pq_train(
         res, "_res", m_sub=m_sub, k_codes=k_codes, iters=1,
-        id_col=id_col, centroid_round=centroid_round, impl=impl,
+        id_col=id_col, centroid_round=centroid_round,
         seed_vectors=res_seeds,
     )
-    coded = pq_encode(res, "_res", books, code_col="_codes", impl=impl)
+    coded = pq_encode(res, "_res", books, code_col="_codes")
     # probe the nprobe nearest lists to the query (driver-side: the
     # centroid table is index metadata, k_lists x dim doubles)
     ranked = sorted(
@@ -1715,18 +1680,22 @@ def _seq_sqdist_argmin(X: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
 
 
 def _pq_codes_udf(codebooks: list[list[list[float]]]):
-    """Arrow-batched PQ encoder (pandas_udf): the codebooks ride the
+    """Arrow-batched PQ encoder (arrow_udf): the codebooks ride the
     closure (m*k*subdim float64 — KBs), each batch encodes with
     :func:`_seq_sqdist_argmin` per subspace.  Bit-exact to the fold
-    path (property-pinned in tests), ~10-60x its throughput — Catalyst
-    higher-order lambdas run interpreted, and PQ encode is m*k folds
-    per row."""
+    form (``tests/fold_reference.py``; property-pinned in tests),
+    ~10-60x its throughput — Catalyst higher-order lambdas run
+    interpreted, and PQ encode is m*k folds per row.  As in the fold,
+    which slices the vector per subspace, a subspace the vector does
+    not fully cover gets a null code and dimensions past ``m*subdim``
+    are ignored."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     m_sub = len(codebooks)
     sub = len(codebooks[0][0])
     C = [np.array(b, dtype=np.float64) for b in codebooks]
+    ends = np.arange(1, m_sub + 1) * sub
 
     def encode(X):
         out = np.empty((X.shape[0], m_sub), dtype=np.int32)
@@ -1734,12 +1703,13 @@ def _pq_codes_udf(codebooks: list[list[list[float]]]):
             out[:, s] = _seq_sqdist_argmin(
                 X[:, s * sub:(s + 1) * sub], C[s]
             )
-        return list(out)
+        return out
 
-    @pandas_udf("array<int>")
-    def codes(col: pd.Series) -> pd.Series:
-        # the fold's per-subspace codes are each null for a null vector
-        return _map_non_null(col, encode, [None] * m_sub)
+    @arrow_udf("array<int>")
+    def codes(col: pa.Array) -> pa.Array:
+        return _map_vectors(
+            col, m_sub * sub, encode, lambda n: ends <= n
+        )
 
     return codes
 
@@ -1747,16 +1717,18 @@ def _pq_codes_udf(codebooks: list[list[list[float]]]):
 def _assign_lists_udf(centroids: list[list[float]]):
     """Arrow-batched IVF list assignment — the k_lists x dim centroid
     matrix in the closure, :func:`_seq_sqdist_argmin` per batch;
-    bit-exact to :func:`_assign_lists` (see _pq_codes_udf)."""
+    bit-exact to the fold argmin in ``tests/fold_reference.py`` (see
+    _pq_codes_udf), which leaves a vector that is not ``dim`` long
+    unassigned (null)."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     C = np.array(centroids, dtype=np.float64)
 
-    @pandas_udf("int")
-    def lid(col: pd.Series) -> pd.Series:
-        return _map_non_null(
-            col, lambda X: _seq_sqdist_argmin(X, C).astype("int32"), None
+    @arrow_udf("int")
+    def lid(col: pa.Array) -> pa.Array:
+        return _map_vectors(
+            col, C.shape[1], lambda X: _seq_sqdist_argmin(X, C).astype("int32")
         )
 
     return lid

@@ -47,7 +47,6 @@ def corpus_preprocess(
     source_col: str = "source",
     target_lang: str = "en",
     max_per_source: int = 15,
-    quality_impl: str = "rows",
 ) -> DataFrame:
     """Flag-composed preprocessing pipeline; see module docstring.
 
@@ -62,7 +61,7 @@ def corpus_preprocess(
     canon = hashed.groupBy("_h").agg(F.min(id_col).alias("_canon_id"))
 
     # Optimization r14 (guide §2.4/§5): the quality flags are computed
-    # INLINE on the hashed rows (the default 'rows' impl is a pure
+    # INLINE on the hashed rows (gopher_quality_flags is a pure
     # per-document expression — joining a (doc_id, keep) table back in
     # cost a corpus-scale shuffle for a value already derivable on the
     # row), and the flag table is projected narrow and materialized
@@ -72,7 +71,7 @@ def corpus_preprocess(
     # hash+dedup+quality subtree otherwise — 7 corpus scans in the
     # lazy plan, 2 now.  Per-row values are unchanged.
     flagged = (
-        gopher_quality_flags(hashed, id_col, text_col, impl=quality_impl)
+        gopher_quality_flags(hashed, id_col, text_col)
         .join(canon, "_h")
         .withColumn("lang_ok", lang_ok)
         .withColumn("is_canonical", F.col(id_col) == F.col("_canon_id"))

@@ -810,18 +810,17 @@ def topk_per_customer(spark, sf_dir):
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), F.col("o_orderkey")
     )
+    # rank on the raw double price, as the oracle's OVER clause
+    # resolves the base column; cast the survivors after ranking
     top = (
         t["orders"]
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            F.col("o_totalprice")
-            .cast("decimal(18,2)")
-            .cast("double")
-            .alias("o_totalprice"),
-        )
+        .select("o_custkey", "o_orderkey", "o_totalprice")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
+        .withColumn(
+            "o_totalprice",
+            F.col("o_totalprice").cast("decimal(18,2)").cast("double"),
+        )
     )
     return (
         t["customer"]

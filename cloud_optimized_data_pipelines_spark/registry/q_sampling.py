@@ -197,12 +197,11 @@ def sample_dsir_weights_q(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
-    # impl='numpy': Arrow gram->bucket memo (bit-exact; the fold path's
-    # per-occurrence md5 + (doc, b) groupBy shuffle dominated the
-    # bench time)
+    # the target_filter form runs the Arrow gram->bucket memo (bit-exact
+    # to the declarative per-occurrence md5 + (doc, b) groupBy, whose
+    # shuffle dominated the bench time; that form is the test reference)
     return dsir_importance(
-        docs, "doc_id", "text", target_filter=F.col("lang") == "en",
-        impl="numpy",
+        docs, "doc_id", "text", target_filter=F.col("lang") == "en"
     )
 
 
@@ -237,8 +236,7 @@ def sample_dsir_select_q(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
     w = dsir_importance(
-        docs, "doc_id", "text", target_filter=F.col("lang") == "en",
-        impl="numpy",
+        docs, "doc_id", "text", target_filter=F.col("lang") == "en"
     )
     return gumbel_topk(w.filter(F.col("n_feats") > 0), "doc_id", "log_weight", 100)
 

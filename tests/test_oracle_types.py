@@ -9,7 +9,8 @@ sweep makes the class a *local* failure: every registered oracle's
 declared DuckDB output types must be in the portable set.
 
 Window rotations can never re-introduce the class: the sweep covers
-the full registry, not the graded window.
+the full registry, not the graded window.  One Spark-vs-oracle row
+check sits here too, on prices the generated fixtures never hold.
 """
 
 import os
@@ -73,3 +74,38 @@ def test_oracle_output_types_portable(con, name):
         "BIGINT/DOUBLE/VARCHAR/... or the driver hasher will red this "
         "row despite equal values"
     )
+
+
+def test_window_topk_per_customer_ranks_raw_price_like_oracle(
+    spark, monkeypatch
+):
+    """The oracle's OVER clause ranks on the base ``o_totalprice``, not
+    the DECIMAL(18,2)-cast alias; prices that only differ past the
+    second decimal must rank the same way on Spark."""
+    import pandas as pd
+
+    from cloud_optimized_data_pipelines_spark.registry import q_relational
+
+    orders = pd.DataFrame(
+        {
+            "o_orderkey": [10, 11, 12, 13, 20],
+            "o_custkey": [1, 1, 1, 1, 2],
+            "o_totalprice": [5.001, 5.004, 5.002, 5.003, 7.0],
+        }
+    )
+    customer = pd.DataFrame({"c_custkey": [1, 2]})
+    tables = {
+        "orders": spark.createDataFrame(orders),
+        "customer": spark.createDataFrame(customer),
+    }
+    monkeypatch.setattr(q_relational, "load_tables", lambda *_: tables)
+    got = sorted(
+        tuple(r)
+        for r in q_relational.topk_per_customer(spark, None).collect()
+    )
+    c = duckdb.connect()
+    c.register("orders", orders)
+    c.register("customer", customer)
+    want = sorted(c.execute(q_relational._TOPK_PER_CUST).fetchall())
+    assert got == want
+    assert {r[1]: r[3] for r in got if r[0] == 1} == {11: 1, 13: 2, 12: 3}

@@ -240,3 +240,29 @@ def test_coverage_ledger_tolerates_future_round(tmp_path):
         ledger.build_rows(max_round=committed_through),
         committed_through,
     )
+
+
+def test_operators_have_no_implementation_switch():
+    """Each operator has one production implementation: no public
+    function in ``operators/`` or ``plans/`` takes a parameter that
+    picks between implementations (``impl`` or ``*_impl``).  Reference
+    forms belong in ``tests/fold_reference.py``."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    from cloud_optimized_data_pipelines_spark import operators, plans
+
+    offenders = []
+    for pkg in (operators, plans):
+        for info in pkgutil.iter_modules(pkg.__path__):
+            mod = importlib.import_module(f"{pkg.__name__}.{info.name}")
+            for name, fn in inspect.getmembers(mod, inspect.isfunction):
+                if name.startswith("_") or fn.__module__ != mod.__name__:
+                    continue
+                offenders += [
+                    f"{mod.__name__}.{name}({p})"
+                    for p in inspect.signature(fn).parameters
+                    if p == "impl" or p.endswith("_impl")
+                ]
+    assert not offenders, offenders

@@ -2,6 +2,12 @@
 decontamination (operators/decontaminate.py)."""
 
 import pytest
+from fold_reference import (
+    dsir_feats,
+    gopher_quality_flags_agg,
+    hamming_pairs,
+    word_stats,
+)
 from pyspark.sql import functions as F
 
 from cloud_optimized_data_pipelines_spark.operators.decontaminate import (
@@ -9,7 +15,6 @@ from cloud_optimized_data_pipelines_spark.operators.decontaminate import (
 )
 from cloud_optimized_data_pipelines_spark.operators.quality import (
     gopher_quality_flags,
-    word_stats,
 )
 
 
@@ -62,12 +67,12 @@ def test_gopher_flags_match_word_stats_aggregation(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     stats = {r.doc: r for r in word_stats(df, "doc_id", "text").collect()}
     results = {}
-    for impl in ("agg", "rows"):
+    for impl, form in (
+        ("agg", gopher_quality_flags_agg),
+        ("rows", gopher_quality_flags),
+    ):
         flags = {
-            r.doc_id: r
-            for r in gopher_quality_flags(
-                df, "doc_id", "text", impl=impl
-            ).collect()
+            r.doc_id: r for r in form(df, "doc_id", "text").collect()
         }
         results[impl] = flags
         for did, _ in docs:
@@ -840,8 +845,8 @@ def test_simhash_wide_banded_blocking_is_complete(spark, sf_dir):
 def test_simhash_wide_fast_fingerprints_bit_exact(spark, sf_dir):
     """The Arrow/hashlib fingerprint path must equal the declarative
     fold BIT-FOR-BIT (integer majority votes — no float caveat),
-    including empty documents, and the banded pairs must be identical
-    under impl='numpy'."""
+    including empty documents, and the banded pairs must equal the
+    all-pairs Hamming scan over the fold fingerprints."""
     from pyspark.sql import functions as F
     from cloud_optimized_data_pipelines_spark.operators import dedup as D
 
@@ -876,16 +881,11 @@ def test_simhash_wide_fast_fingerprints_bit_exact(spark, sf_dir):
         ).collect()
     }
     assert en == ef
-    p1 = {
-        tuple(r)
-        for r in D.simhash_wide_near_dup_pairs(
-            docs, "doc_id", "text", max_hamming=5
-        ).collect()
-    }
+    p1 = hamming_pairs(fold, 5)
     p2 = {
         tuple(r)
         for r in D.simhash_wide_near_dup_pairs(
-            docs, "doc_id", "text", max_hamming=5, impl="numpy"
+            docs, "doc_id", "text", max_hamming=5
         ).collect()
     }
     assert p1 == p2
@@ -1384,6 +1384,7 @@ def test_dsir_target_filter_matches_two_pass(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from cloud_optimized_data_pipelines_spark.operators.sampling import (
+        _dsir_feats_fast,
         dsir_importance,
     )
 
@@ -1397,6 +1398,14 @@ def test_dsir_target_filter_matches_two_pass(spark, sf_dir):
     a = {r.doc_id: (r.n_feats, r.log_weight) for r in two.collect()}
     b = {r.doc_id: (r.n_feats, r.log_weight) for r in one.collect()}
     assert a == b
+    # the filter form's Arrow feature pass equals the declarative one
+    flag = F.col("lang") == "en"
+    fast = _dsir_feats_fast(docs, "doc_id", "text", 10_000, flag)
+    ref = dsir_feats(docs, "doc_id", "text", 10_000, flag)
+    cols = ["doc", "b", "fc", "is_tgt"]
+    assert sorted(fast.select(cols).collect()) == sorted(
+        ref.select(cols).collect()
+    )
     import pytest
 
     with pytest.raises(ValueError):
@@ -1783,7 +1792,8 @@ def test_embedding_contamination_multiprobe_recall_gate(spark, sf_dir):
 def test_simhash_60bit_fast_fingerprints_bit_exact(spark, sf_dir):
     """The 60-bit Arrow/hashlib fingerprint path (now used by the
     graded split/clusters queries) must equal the declarative fold
-    bit-for-bit, and the banded pairs must be identical."""
+    bit-for-bit, and the banded pairs must equal the all-pairs Hamming
+    scan over the fold fingerprints."""
     from pyspark.sql import functions as F
     from cloud_optimized_data_pipelines_spark.operators import dedup as D
 
@@ -1799,17 +1809,11 @@ def test_simhash_60bit_fast_fingerprints_bit_exact(spark, sf_dir):
         for r in D.simhash_fingerprints_fast(docs, "doc_id", "text").collect()
     }
     assert fast == fold
-    p1 = {
-        tuple(r)
-        for r in D.simhash_near_dup_pairs(
-            docs, "doc_id", "text", num_bands=4, max_hamming=3
-        ).collect()
-    }
+    p1 = hamming_pairs(fold, 3)
     p2 = {
         tuple(r)
         for r in D.simhash_near_dup_pairs(
-            docs, "doc_id", "text", num_bands=4, max_hamming=3,
-            impl="numpy",
+            docs, "doc_id", "text", num_bands=4, max_hamming=3
         ).collect()
     }
     assert p1 == p2
@@ -1855,6 +1859,8 @@ def test_train_quality_classifier_numpy_bit_exact_to_fold(spark, sf_dir):
     buckets, per-batch gradient partials) must be BIT-EXACT to the
     declarative fold: identical weights after every GD step and an
     identical scored table."""
+    import fold_reference
+
     from cloud_optimized_data_pipelines_spark.functions.text import tokens
     from cloud_optimized_data_pipelines_spark.operators.quality import (
         train_quality_classifier,
@@ -1866,11 +1872,11 @@ def test_train_quality_classifier_numpy_bit_exact_to_fold(spark, sf_dir):
     labeled = docs.withColumn(
         "label", ((F.size(tk) > 0) & (stop * 16 >= F.size(tk))).cast("int")
     )
-    s1, w1 = train_quality_classifier(
-        labeled, "doc_id", "text", "label", iters=3, lr=64.0, impl="fold"
+    s1, w1 = fold_reference.train_quality_classifier(
+        labeled, "doc_id", "text", "label", iters=3, lr=64.0
     )
     s2, w2 = train_quality_classifier(
-        labeled, "doc_id", "text", "label", iters=3, lr=64.0, impl="numpy"
+        labeled, "doc_id", "text", "label", iters=3, lr=64.0
     )
     assert w1 == w2
     r1 = sorted(

@@ -1,8 +1,12 @@
 """Tests for the text-analysis and vector expression surfaces."""
 
 import math
+from contextlib import nullcontext
 
 import pytest
+from fold_reference import fold_forms
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from cloud_optimized_data_pipelines_spark.functions import text as T
@@ -983,24 +987,24 @@ def test_pq_adc_and_refine_recall(spark, sf_dir):
 
 
 def test_random_projection_numpy_fold_parity(spark, sf_dir):
-    """The Arrow fast path (impl='numpy', r15 default) must be
-    BIT-EXACT to the declarative fold: both accumulate
-    acc = acc + x_i * s_ij in dimension order with exact ±1.0
-    multiplies and a power-of-two scale, so every double must match
-    to the last bit — not epsilon-close."""
+    """The Arrow path (r15) must be BIT-EXACT to the declarative fold
+    reference: both accumulate acc = acc + x_i * s_ij in dimension
+    order with exact ±1.0 multiplies and a power-of-two scale, so every
+    double must match to the last bit — not epsilon-close."""
     from cloud_optimized_data_pipelines_spark.operators import similarity as S
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(300)
-    fold = {
-        r["vec_id"]: list(r["projected"])
-        for r in S.random_projection(
-            emb, "embedding", out_dims=16, impl="fold"
-        ).collect()
-    }
+    with fold_forms():
+        fold = {
+            r["vec_id"]: list(r["projected"])
+            for r in S.random_projection(
+                emb, "embedding", out_dims=16
+            ).collect()
+        }
     fast = {
         r["vec_id"]: list(r["projected"])
         for r in S.random_projection(
-            emb, "embedding", out_dims=16, impl="numpy"
+            emb, "embedding", out_dims=16
         ).collect()
     }
     assert fast == fold
@@ -1035,39 +1039,104 @@ def test_numpy_vector_udfs_null_rows_match_fold(spark, sf_dir):
     def by_id(frame, col):
         return {r["vec_id"]: r[col] for r in frame.collect()}
 
-    proj = {
-        impl: by_id(S.random_projection(df, "embedding", out_dims=8,
-                                        impl=impl), "projected")
-        for impl in ("fold", "numpy")
-    }
-    assert proj["numpy"] == proj["fold"]
-    assert sum(v == [None] * 8 for v in proj["fold"].values()) == 3
-
     books = S.pq_train(emb, "embedding", iters=1)
-    codes = {
-        impl: by_id(S.pq_encode(df, "embedding", books, impl=impl),
-                    "pq_codes")
-        for impl in ("fold", "numpy")
-    }
-    assert codes["numpy"] == codes["fold"]
-
     cents = [
         [float(x) for x in r["embedding"]] for r in emb.limit(4).collect()
     ]
-    lists = {
-        "fold": by_id(S._assign_lists(df, "embedding", cents), "list_id"),
-        "numpy": by_id(
-            df.withColumn("list_id", S._assign_lists_udf(cents)(
-                F.col("embedding"))),
-            "list_id",
-        ),
-    }
+    proj, codes, lists = {}, {}, {}
+    for impl, forms in (("fold", fold_forms), ("numpy", nullcontext)):
+        with forms():
+            proj[impl] = by_id(
+                S.random_projection(df, "embedding", out_dims=8), "projected"
+            )
+            codes[impl] = by_id(
+                S.pq_encode(df, "embedding", books), "pq_codes"
+            )
+            lists[impl] = by_id(
+                df.withColumn("list_id", S._assign_lists_udf(cents)(
+                    F.col("embedding"))),
+                "list_id",
+            )
+    assert proj["numpy"] == proj["fold"]
+    assert sum(v == [None] * 8 for v in proj["fold"].values()) == 3
+    assert codes["numpy"] == codes["fold"]
     assert lists["numpy"] == lists["fold"]
     assert sum(v is None for v in lists["fold"].values()) == 3
     only_null = nulls.coalesce(1).withColumn(
         "list_id", S._assign_lists_udf(cents)(F.col("embedding"))
     )
     assert [r["list_id"] for r in only_null.collect()] == [None] * 3
+
+
+_EDGE = [float("nan"), float("inf"), float("-inf"), 0.0, -0.0]
+_elem = st.one_of(
+    st.floats(-1e3, 1e3, allow_nan=False), st.sampled_from(_EDGE)
+)
+_vector = st.one_of(
+    st.none(),
+    st.lists(_elem, min_size=4, max_size=4),  # well-formed (dim 4)
+    st.lists(_elem, min_size=0, max_size=6),  # empty, short, long
+)
+_edge_text = st.one_of(
+    st.none(),
+    st.text(alphabet=" \t\n\x0b\f\r", max_size=4),
+    st.text(alphabet="ab \t", max_size=10),
+)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
+)
+@given(
+    st.lists(_vector, min_size=0, max_size=12),
+    st.lists(_edge_text, min_size=0, max_size=8),
+)
+def test_arrow_udfs_match_fold_reference_on_edge_input(spark, vectors, texts):
+    """The production Arrow paths give every row the fold reference's
+    value — null, NaN, ±inf, empty, short and long vectors alike, with
+    one partition or with several (some holding zero rows) — and the
+    fast simhash fingerprints equal the fold expressions on null, empty
+    and whitespace-only text."""
+    import fold_reference as R
+
+    from cloud_optimized_data_pipelines_spark.operators import dedup as D
+    from cloud_optimized_data_pipelines_spark.operators import similarity as S
+
+    cents = [[0.0, 0.0, 0.0, 0.0], [1.0, 2.0, 3.0, 4.5], [-5.0, 9.0, 0.5, 2.0]]
+    books = [[[0.0, 0.0], [1.0, 2.0], [-3.0, 1.0]], [[3.0, 4.0], [0.0, 0.0]]]
+    signs = [[1.0, -1.0, 1.0, 1.0], [-1.0, -1.0, 1.0, -1.0]]
+    vecs = spark.createDataFrame(
+        list(enumerate(vectors)), "id int, v array<double>"
+    )
+    docs = spark.createDataFrame(list(enumerate(texts)), "id int, t string")
+    v = F.col("v")
+    pairs = [
+        (
+            S._project_signs_udf(signs, 0.5)(v),
+            R.fold_project_signs(signs, 0.5)(v),
+        ),
+        (S._pq_codes_udf(books)(v), R.fold_pq_codes(books)(v)),
+        (S._assign_lists_udf(cents)(v), R.fold_assign_lists(cents)(v)),
+    ]
+    for layout in (1, len(vectors) + 3):
+        frame = vecs.repartition(layout)
+        got = frame.select(
+            "id", *[p.alias(f"p{i}") for i, (p, _) in enumerate(pairs)]
+        )
+        want = frame.select(
+            "id", *[f.alias(f"p{i}") for i, (_, f) in enumerate(pairs)]
+        )
+        assert repr(sorted(got.collect())) == repr(sorted(want.collect()))
+
+        dframe = docs.repartition(layout)
+        fast = D.simhash_fingerprints_fast(dframe, "id", "t", 60)
+        fold = dframe.select("id", D.simhash(F.col("t"), 60).alias("sh"))
+        assert sorted(fast.collect()) == sorted(fold.collect())
+        fast = D.simhash_wide_fingerprints_fast(dframe, "id", "t")
+        fold = dframe.select("id", D.simhash_wide(F.col("t")).alias("sh"))
+        assert sorted(fast.collect()) == sorted(fold.collect())
 
 
 def test_random_projection_preserves_distances(spark, sf_dir):
@@ -1150,34 +1219,35 @@ def test_pq_numpy_impl_bit_exact_to_fold(spark, sf_dir):
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    b_fold = S.pq_train(emb, "embedding", iters=1, impl="fold")
-    b_np = S.pq_train(emb, "embedding", iters=1, impl="numpy")
+    with fold_forms():
+        b_fold = S.pq_train(emb, "embedding", iters=1)
+        c_fold = {
+            r["vec_id"]: list(r["pq_codes"])
+            for r in S.pq_encode(emb, "embedding", b_fold).collect()
+        }
+        t_fold = [
+            (r["vec_id"], r["adc"])
+            for r in S.pq_topk(emb, "embedding", qv, b_fold).collect()
+        ]
+        i_fold = [
+            (r["vec_id"], r["adc"])
+            for r in S.ivf_pq_topk(emb, "embedding", qv, k_lists=8).collect()
+        ]
+    b_np = S.pq_train(emb, "embedding", iters=1)
     assert b_fold == b_np
-    c_fold = {
-        r["vec_id"]: list(r["pq_codes"])
-        for r in S.pq_encode(emb, "embedding", b_np, impl="fold").collect()
-    }
     c_np = {
         r["vec_id"]: list(r["pq_codes"])
-        for r in S.pq_encode(emb, "embedding", b_np, impl="numpy").collect()
+        for r in S.pq_encode(emb, "embedding", b_np).collect()
     }
     assert c_fold == c_np
-    t_fold = [
-        (r["vec_id"], r["adc"])
-        for r in S.pq_topk(emb, "embedding", qv, b_np, impl="fold").collect()
-    ]
     t_np = [
         (r["vec_id"], r["adc"])
-        for r in S.pq_topk(emb, "embedding", qv, b_np, impl="numpy").collect()
+        for r in S.pq_topk(emb, "embedding", qv, b_np).collect()
     ]
     assert t_fold == t_np
-    i_fold = [
-        (r["vec_id"], r["adc"])
-        for r in S.ivf_pq_topk(emb, "embedding", qv, k_lists=8, impl="fold").collect()
-    ]
     i_np = [
         (r["vec_id"], r["adc"])
-        for r in S.ivf_pq_topk(emb, "embedding", qv, k_lists=8, impl="numpy").collect()
+        for r in S.ivf_pq_topk(emb, "embedding", qv, k_lists=8).collect()
     ]
     assert i_fold == i_np
 
@@ -1190,8 +1260,9 @@ def test_ivf_append_probe_parity_and_drift(spark, sf_dir, tmp_path):
     unflagged while (d) flagging a shifted append via the qerr ratio."""
     from pyspark.sql import functions as F
 
+    from fold_reference import assign_lists as _assign_lists
+
     from cloud_optimized_data_pipelines_spark.operators.similarity import (
-        _assign_lists,
         brute_force_topk,
         ivf_append,
         ivf_topk_indexed,

@@ -226,7 +226,7 @@ def main() -> None:
     if "split" in want:
         # leakage_safe_split e2e: fast fingerprints -> 60-bit banded
         # pair join -> star contraction -> label join -> md5 bucket
-        # split (the graded query's exact composition, impl='numpy')
+        # split (the graded query's exact composition)
         from cloud_optimized_data_pipelines_spark.operators.sampling import (
             leakage_safe_split,
         )
@@ -235,7 +235,7 @@ def main() -> None:
             def run(d=docs):
                 p = D.simhash_near_dup_pairs(
                     d, "doc_id", "text", num_bands=4, max_hamming=3,
-                    materialize=True, impl="numpy",
+                    materialize=True,
                 ).localCheckpoint(eager=False)
                 out = leakage_safe_split(d, p, "doc_id").select(
                     "doc_id", "split_unit", "split"
