@@ -1,5 +1,6 @@
 """mapInPandas helpers: bounded Arrow output batches for
-payload-exploding operators, and the per-variant probe table.
+payload-exploding operators, the small-scan spread, and the
+per-variant probe table.
 
 A generator that yields one DataFrame per INPUT batch hands the JVM
 one Arrow record batch per task-split — for payload columns that can
@@ -23,6 +24,8 @@ Usage inside a mapInPandas generator::
 """
 
 from __future__ import annotations
+
+import re
 
 import pandas as pd
 from pyspark.sql.types import DataType
@@ -63,19 +66,36 @@ class BatchFlusher:
         return out
 
 
+# executed-plan nodes whose ``execute()`` runs Spark jobs: AQE
+# materializes every query stage, a broadcast runs its build side, and
+# a subquery runs itself
+_JOB_NODE = re.compile(
+    r"^[ :+\-|*()\d]*(AdaptiveSparkPlan|\w*Exchange|\w*QueryStage|\w*Subquery\w*)\b",
+    re.M,
+)
+
+
 def spread_small_scan(df):
     """Repartition an UNDER-PARALLEL input to the cluster's default
-    parallelism before a payload exploder — the small-corpus floor fix
-    (SCALE.md r12: a 64-shard parquet scans as 2 input splits under
-    128 MB maxPartitionBytes, so 30 of 32 cores idle through the whole
-    decode).  The branch only fires when the scan yields FEWER
-    partitions than cores: at production scale (many input splits) the
-    condition is false and no shuffle is added; when it does fire the
-    one-time shuffle moves only the small corpus's compressed bytes
-    and buys cores-per-shard decode parallelism."""
+    parallelism — the small-corpus floor fix (SCALE.md r12: a 64-shard
+    parquet scans as 2 input splits under 128 MB maxPartitionBytes, so
+    30 of 32 cores idle through a payload decode or a shingle/hash
+    pipeline).
+
+    Only an input whose executed plan has no exchange, broadcast or
+    subquery (a scan, a pinned table, narrow transforms of them) is
+    counted: its partition count is planning-only, no Spark job.  Any
+    other input comes back unchanged — reading its partition count
+    would run every upstream query stage, once here and again in the
+    consumer, and AQE's coalescing already sized its post-shuffle
+    partitions.  At production scale (many input splits) the count is
+    not below the parallelism and no shuffle is added."""
     try:
+        jplan = df._jdf.queryExecution().executedPlan()
+        if _JOB_NODE.search(jplan.toString()):
+            return df
         par = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
+        if jplan.execute().getNumPartitions() < par:
             return df.repartition(par)
     except Exception:  # non-standard sessions: keep the plan untouched
         pass

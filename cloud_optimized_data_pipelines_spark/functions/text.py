@@ -1,9 +1,15 @@
 """Text-analysis column expressions for the training-data pipeline surface.
 
 No reference counterpart (SURVEY section 7.7 extensions) — language ID,
-quality scoring, token counting, shingling, and document fingerprinting,
-all as pure JVM-side expressions so a 100 TB documents scan never leaves
-whole-stage codegen.
+quality scoring, token counting, shingling, and document fingerprinting.
+
+Most helpers are JVM expressions.  Those built on higher-order
+functions (``filter``/``transform``/``aggregate``/``array_sort``) are
+``CodegenFallback`` in Spark 4: their lambdas run interpreted, per
+token, inside an otherwise codegen'd stage.  Language ID and the
+Gopher word statistics, which per document need a tokenize, a count
+per distinct word and a stopword lookup, therefore run as ONE Arrow
+kernel (:func:`text_stats`) that sends each text to Python once.
 
 Hashing note: every content hash on this surface is ``md5`` of a UTF-8
 string.  md5 is bit-identical across Spark, DuckDB, and Python, which is
@@ -14,6 +20,10 @@ over hex strings is a valid uniform order.
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -109,10 +119,6 @@ def punct_ratio(text: Column | str) -> Column:
     )
 
 
-def _lowered_tokens(text: Column | str) -> Column:
-    return F.transform(tokens(text), lambda t: F.lower(t))
-
-
 def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
     """Let-bound (see :func:`word_shingles`): the lowered token array is
     computed once, not once per reference."""
@@ -123,15 +129,17 @@ def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Co
         n = F.size(toks)
         return F.when(n > 0, hits.cast("double") / n).otherwise(F.lit(0.0))
 
-    return F.transform(F.array(_lowered_tokens(text)), build)[0]
+    lowered = F.transform(tokens(text), lambda t: F.lower(t))
+    return F.transform(F.array(lowered), build)[0]
 
 
 def quality_score(text: Column | str) -> Column:
     """Composite [0,1] quality heuristic: length, punctuation, stopwords.
 
-    Designed for filter-at-scan usage — it is a single codegen'd
-    expression, so `documents.filter(quality_score(...) > t)` pushes the
-    whole computation into the scan stage (no shuffle, no Python).
+    Designed for filter-at-scan usage — it is a single JVM expression,
+    so `documents.filter(quality_score(...) > t)` evaluates it in the
+    scan stage (no shuffle, no Python); its token lambdas run
+    interpreted (see the module docstring).
     """
     t = _c(text)
     n_tok = token_count(t)
@@ -145,44 +153,94 @@ def quality_score(text: Column | str) -> Column:
     )
 
 
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    """Stopword-hit count per language (the n-gram-free langid heuristic)."""
-    toks = _lowered_tokens(text)
-    out: dict[str, Column] = {}
-    for lang in LANG_ORDER:
-        sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-        out[lang] = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return out
+# The tokens of :func:`tokens` (Java's split on \s+, empties dropped):
+# Java's \s is exactly these six ASCII characters, while Python's \s
+# and str.split() also split on Unicode spaces such as U+00A0.
+_JVM_TOKEN = re.compile(r"[^ \t\n\x0b\f\r]+")
+
+# lower-cased stopword -> indexes into LANG_ORDER of the lists holding it
+_STOP_LANGS: dict[str, tuple[int, ...]] = {
+    w: tuple(i for i, lang in enumerate(LANG_ORDER) if w in LANG_STOPWORDS[lang])
+    for words in LANG_STOPWORDS.values()
+    for w in words
+}
+
+_STATS_NAMES = ("lang", "n_words", "n_unique_words", "char_sum", "top_cnt")
+_STATS_TYPE = (
+    "struct<lang:string,n_words:bigint,n_unique_words:bigint,"
+    "char_sum:bigint,top_cnt:bigint>"
+)
+
+
+def text_stats_kernel():
+    """The per-batch function of :func:`text_stats`: texts (str or
+    None) -> five column lists (lang, n_words, n_unique_words,
+    char_sum, top_cnt).
+
+    Tokens are the JVM's (see ``_JVM_TOKEN``), lengths are code points
+    (Spark ``length``), and words are compared case-sensitively; only
+    the stopword lookup lower-cases.  ``lang`` is the language with the
+    most stopword hits, the earlier one in LANG_ORDER on ties, and
+    'und' without any hit.  A null or token-less text has zero counts
+    and 'und'.  Everything it reads is bound in its closure, so the
+    function pickles by value and the Python workers need not import
+    this package."""
+    find_tokens = _JVM_TOKEN.findall
+    stop_langs = _STOP_LANGS
+    order = tuple(LANG_ORDER)
+    # lower() never shortens a string, so a longer token cannot lower
+    # to a stopword
+    longest = max(map(len, stop_langs))
+
+    def rows(texts):
+        langs, n_words, n_unique, char_sum, top_cnt = [], [], [], [], []
+        for text in texts:
+            toks = find_tokens(text) if text else []
+            counts = Counter(toks)
+            hits = [0] * len(order)
+            for w, c in counts.items():
+                if len(w) <= longest:
+                    for i in stop_langs.get(w.lower(), ()):
+                        hits[i] += c
+            best = max(hits)
+            langs.append(order[hits.index(best)] if best > 0 else "und")
+            n_words.append(len(toks))
+            n_unique.append(len(counts))
+            char_sum.append(sum(map(len, toks)))
+            top_cnt.append(max(counts.values(), default=0))
+        return langs, n_words, n_unique, char_sum, top_cnt
+
+    return rows
+
+
+def text_stats(text: Column | str) -> Column:
+    """STRUCT<lang, n_words, n_unique_words, char_sum, top_cnt> per
+    document, from one Arrow kernel (:func:`text_stats_kernel`).
+
+    Language ID and the Gopher rules both read this struct, so a plan
+    that needs both binds it once as a column and sends each text to
+    Python once.  The declarative forms it replaced are kept in
+    ``tests/fold_reference.py`` as parity references."""
+    rows = text_stats_kernel()
+    names = list(_STATS_NAMES)
+    types = [pa.string()] + [pa.int64()] * (len(names) - 1)
+
+    @F.arrow_udf(_STATS_TYPE)
+    def stats(col: pa.Array) -> pa.Array:
+        return pa.StructArray.from_arrays(
+            [pa.array(c, type=t) for c, t in zip(rows(col.to_pylist()), types)],
+            names=names,
+        )
+
+    return stats(_c(text))
 
 
 def detect_language(text: Column | str) -> Column:
-    """argmax over lang_scores with fixed LANG_ORDER tie-break;
-    'und' (undetermined) when no stopword hits at all.
-
-    Double let-binding: the lowered token array is computed once, the
-    per-language hit counts once (as one bound array) — the naive
-    composition re-evaluated the token split and each language filter
-    per reference (~18 evaluations/row across argmax + tie-break)."""
-
-    def build_scores(toks: Column) -> Column:
-        def hits(lang: str) -> Column:
-            sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-            return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-
-        return F.array(*[hits(lang) for lang in LANG_ORDER])
-
-    def build_argmax(sarr: Column) -> Column:
-        best = F.array_max(sarr)
-        result = F.lit("und")
-        # build reverse so earlier languages win ties via later override
-        for idx in reversed(range(len(LANG_ORDER))):
-            result = F.when(
-                (best > 0) & (sarr[idx] == best), F.lit(LANG_ORDER[idx])
-            ).otherwise(result)
-        return result
-
-    scores_arr = F.transform(F.array(_lowered_tokens(text)), build_scores)[0]
-    return F.transform(F.array(scores_arr), build_argmax)[0]
+    """Stopword-count language ID: argmax over LANG_ORDER of the
+    stopword hits among the lower-cased tokens, earlier language on
+    ties, 'und' (undetermined) when no stopword hits at all.  The
+    ``lang`` field of :func:`text_stats`."""
+    return text_stats(text)["lang"]
 
 
 def doc_fingerprint(text: Column | str, n: int = 3) -> Column:

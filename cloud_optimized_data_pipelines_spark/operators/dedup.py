@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cloud_optimized_data_pipelines_spark.batching import spread_small_scan
 from cloud_optimized_data_pipelines_spark.functions.text import (
     lsh_band_hashes,
     minhash_signature,
@@ -86,17 +87,6 @@ def exact_dedup_by_hash(df: DataFrame, content_col: str, id_col: str) -> DataFra
     )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition an under-partitioned input up to the cluster's
-    parallelism.  A small corpus arriving as one parquet file would
-    otherwise run the whole shingle/hash pipeline on a single core; at
-    real scale (many input splits) this is a no-op."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
-
-
 def _guard_shingle_freq(idx: DataFrame, max_shingle_freq: int | None) -> DataFrame:
     """Drop over-frequent shingles with ONE shuffle: a count over a
     shingle-partitioned window instead of groupBy+self-join (the join
@@ -114,13 +104,13 @@ def _guard_shingle_freq(idx: DataFrame, max_shingle_freq: int | None) -> DataFra
 
 
 def shingle_index(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Inverted index: one row per (doc, shingle) occurrence.
+    """Inverted index: one row per (doc, distinct shingle).
 
-    Shingles are NOT deduped per doc — the synthetic corpus never
-    repeats a 3-gram within a doc (measured dup factor 1.0) and the
-    Jaccard oracle counts occurrences on both sides identically, so a
-    distinct here would only add a shuffle."""
-    return _spread(df).select(
+    ``word_shingles`` applies ``array_distinct`` per document, so a
+    3-gram repeated within a doc is indexed once (set semantics, as
+    Jaccard needs) without a shuffle; a doc shorter than n words is
+    one whole-text shingle."""
+    return spread_small_scan(df).select(
         F.col(id_col).alias("doc"),
         F.explode(word_shingles(text_col, n)).alias("shingle"),
     )
@@ -401,7 +391,7 @@ def positional_shingle_index(
 
     grams = F.transform(F.array(tokens(F.col(text_col))), _grams)[0]
     return (
-        _spread(df)
+        spread_small_scan(df)
         .select(F.col(id_col).alias("doc"), F.explode(grams).alias("g"))
         .select("doc", F.col("g.pos").alias("pos"), F.col("g.shingle").alias("shingle"))
     )
@@ -517,7 +507,7 @@ def cdc_chunks(
 
     rows = F.transform(F.array(tokens(F.col(text_col))), _chunks)[0]
     return (
-        _spread(df)
+        spread_small_scan(df)
         .select(F.col(id_col).alias("doc"), F.explode(rows).alias("c"))
         .select("doc", "c.chunk_idx", "c.start_pos", "c.n_tokens", "c.chunk_md5")
     )
@@ -638,7 +628,7 @@ def _fuzzy_prefixes(
     df: DataFrame, id_col: str, text_col: str, prefix_len: int
 ) -> DataFrame:
     prefix = F.substring(F.col(text_col), 1, prefix_len)
-    return _spread(df).select(F.col(id_col).alias("doc"), prefix.alias("_pref"))
+    return spread_small_scan(df).select(F.col(id_col).alias("doc"), prefix.alias("_pref"))
 
 
 def fuzzy_prefix_index(
@@ -1356,7 +1346,7 @@ def simhash_near_dup_pairs(
     width = bits // num_bands
     mask = (1 << width) - 1
     sh = simhash_fingerprints_fast(
-        _spread(df), id_col, text_col, bits
+        spread_small_scan(df), id_col, text_col, bits
     ).select(F.col(id_col).alias("id"), "sh")
     if materialize:
         sh = sh.localCheckpoint(eager=True)
@@ -1648,7 +1638,7 @@ def simhash_wide_near_dup_pairs(
     width = bits_per_word // bands_per_word
     mask = (1 << width) - 1
     sh = simhash_wide_fingerprints_fast(
-        _spread(df), id_col, text_col, words, bits_per_word
+        spread_small_scan(df), id_col, text_col, words, bits_per_word
     ).select(F.col(id_col).alias("id"), "sh")
     if materialize:
         sh = sh.localCheckpoint(eager=True)

@@ -8,15 +8,14 @@ the document taken by its single most frequent word).  Documents
 failing any rule get ``keep = false``; the decision thresholds are
 arguments so a pipeline can tune per-source.
 
-Scale shape (r14, guide §2.4): the document rules are computed as
-per-row ARRAY expressions on the scan — tokenize once, fold for the
-character sum, sort + run-length fold for the top-word count.  Zero
-exchanges: the previous explode -> groupBy(doc, word) ->
-groupBy(doc) -> join-back shape shuffled corpus-token-scale rows
-twice and re-joined on doc; every statistic is a function of one
-document, so no shuffle is fundamentally required (guide §1.1).  That
-aggregation form lives in ``tests/fold_reference.py`` as the parity
-reference.
+Scale shape: the document rules need only per-document integers (word
+count, distinct words, character sum, top-word count), which one Arrow
+kernel computes per row on the scan (``functions.text.text_stats``).
+Zero exchanges: every statistic is a function of one document, so no
+shuffle is fundamentally required (guide §1.1).  The declarative
+forms — per-row array folds, and explode -> groupBy(doc, word) ->
+groupBy(doc) -> join-back — live in ``tests/fold_reference.py`` as
+parity references.
 """
 
 from __future__ import annotations
@@ -26,7 +25,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cloud_optimized_data_pipelines_spark.functions.text import tokens
+from cloud_optimized_data_pipelines_spark.functions.text import (
+    text_stats,
+    tokens,
+)
 
 
 def gopher_quality_flags(
@@ -39,72 +41,57 @@ def gopher_quality_flags(
     max_mean_word_len: float = 10.0,
     max_top_word_frac: float = 0.2,
 ) -> DataFrame:
-    """MassiveText word-level rules as one declarative pass.
+    """MassiveText word-level rules, one Arrow pass per document.
 
     Adds n_words, n_unique_words, mean_word_len, top_word_frac and the
     combined ``keep`` flag.  Empty documents (no tokens) are kept in
     the output with zero counts and keep=false — filters must never
     silently drop rows they rejected.
 
-    The statistics are per-row array expressions (tokenize once, fold
-    for the char sum, sorted run-length fold for the top word), ZERO
-    exchanges — no shuffle is fundamentally required because every
-    statistic is a function of one document (guide §1.1, §2.4).
-    Caveat: Catalyst inlines the fold into every reference, so a
-    consumer should read the flag COLUMNS, not re-derive them.  The
-    explode + two corpus-token aggregations + doc join form lives in
-    ``tests/fold_reference.py``, and the parity test in
-    tests/test_quality_decontaminate.py pins the two bit-identical.
-
-    Measured r14 (sf0.1, local[32], interleaved medians): standalone
-    gopher query 2.5 s (aggregation form) -> 1.6 s (per-row); composed
-    pipeline_corpus_preprocess 4.8 s -> 4.1 s — per-row wins in both
-    shapes and removes two corpus-token shuffles at 100 TB.
+    The integer word statistics come from the ``text_stats`` Arrow
+    kernel (functions/text.py); the ratios and ``keep`` stay JVM
+    expressions over those integers, so every double is the one the
+    declarative forms give.  ZERO exchanges: every statistic is a
+    function of one document.  The per-row array-fold form and the
+    explode + two corpus-token aggregations + doc join form live in
+    ``tests/fold_reference.py``, and the parity tests pin all three
+    identical.
     """
-    toks = tokens(F.col(text_col))
-    n_words = F.coalesce(F.size(toks), F.lit(0)).cast("long")
-    char_sum = F.coalesce(
-        F.aggregate(
-            toks, F.lit(0).cast("long"), lambda a, t: a + F.length(t)
-        ),
-        F.lit(0).cast("long"),
-    )
-    n_unique = F.coalesce(F.size(F.array_distinct(toks)), F.lit(0)).cast(
-        "long"
-    )
-    # top word count = longest equal-run in the sorted token array
-    # (tokens are non-empty, so the "" sentinel never matches)
-    run = F.aggregate(
-        F.array_sort(toks),
-        F.struct(
-            F.lit("").alias("prev"),
-            F.lit(0).cast("long").alias("run"),
-            F.lit(0).cast("long").alias("best"),
-        ),
-        lambda acc, t: F.struct(
-            t.alias("prev"),
-            F.when(t == acc["prev"], acc["run"] + 1)
-            .otherwise(F.lit(1).cast("long"))
-            .alias("run"),
-            F.greatest(
-                acc["best"],
-                F.when(t == acc["prev"], acc["run"] + 1).otherwise(
-                    F.lit(1).cast("long")
-                ),
-            ).alias("best"),
-        ),
-        lambda acc: acc["best"],
-    )
-    top_cnt = F.coalesce(run, F.lit(0).cast("long"))
+    return gopher_flags_from_stats(
+        df.withColumn("_ts", text_stats(F.col(text_col))),
+        "_ts",
+        min_words,
+        max_words,
+        min_mean_word_len,
+        max_mean_word_len,
+        max_top_word_frac,
+    ).drop("_ts")
+
+
+def gopher_flags_from_stats(
+    df: DataFrame,
+    stats_col: str,
+    min_words: int = 50,
+    max_words: int = 100_000,
+    min_mean_word_len: float = 3.0,
+    max_mean_word_len: float = 10.0,
+    max_top_word_frac: float = 0.2,
+) -> DataFrame:
+    """The :func:`gopher_quality_flags` columns from a ``text_stats``
+    struct column that ``df`` already carries — for a plan that also
+    reads the struct's language (plans/corpus.py), so the kernel runs
+    once per document."""
+    st = F.col(stats_col)
+    n_words = st["n_words"]
     mean_len = F.when(
-        n_words > 0, char_sum.cast("double") / n_words.cast("double")
+        n_words > 0, st["char_sum"].cast("double") / n_words.cast("double")
     ).otherwise(F.lit(0.0))
     top_frac = F.when(
-        n_words > 0, top_cnt.cast("double") / n_words.cast("double")
+        n_words > 0, st["top_cnt"].cast("double") / n_words.cast("double")
     ).otherwise(F.lit(0.0))
     return (
         df.withColumn("n_words", n_words)
-        .withColumn("n_unique_words", n_unique)
+        .withColumn("n_unique_words", st["n_unique_words"])
         .withColumn("mean_word_len", mean_len)
         .withColumn("top_word_frac", top_frac)
         .withColumn(
@@ -504,7 +491,10 @@ def c4_line_filter(
     ``text_clean`` (kept lines re-joined) and ``keep``; callers filter
     on ``keep`` so nothing is silently dropped.
     """
-    from cloud_optimized_data_pipelines_spark.functions.text import tokens
+    from cloud_optimized_data_pipelines_spark.functions.text import (
+    text_stats,
+    tokens,
+)
 
     def build(lines):
         nonempty = F.filter(lines, lambda l: l != "")

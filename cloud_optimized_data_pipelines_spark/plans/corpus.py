@@ -3,9 +3,9 @@ training-data user actually runs (CCNet / C4 / RefinedWeb recipe):
 
     language ID -> exact dedup -> quality gate -> per-source cap
 
-expressed as ONE lazy DataFrame so Catalyst plans the whole chain
-(filters fused into the scans, the dedup and quality aggregations
-pipelined, one final per-source window over the small eligible set).
+expressed as ONE DataFrame so Catalyst plans the whole chain (language
+and quality from one Arrow pass over the scan, the dedup aggregation
+beside it, one final per-source window over the small eligible set).
 
 Survivorship contract: every input row comes back with per-stage flags
 (``lang_ok``, ``is_canonical``, ``quality_ok``, ``eligible``,
@@ -13,10 +13,10 @@ Survivorship contract: every input row comes back with per-stage flags
 each stage's pass rate is one aggregation away (the alarm-channel
 pattern of ``dedup_fuzzy_guard_report``).
 
-Scale shape: stages 1-3 are scan expressions + doc-keyed partial
-aggregations (no corpus-sized join); the cap stage runs ONLY over
-eligible docs AND uses the two-pass bucket cumsum
-(operators/sampling.py::cap_per_group) rather than a per-source
+Scale shape: stages 1-3 are per-document values on the scan + one
+partial aggregation on the content digest, joined back on the digest;
+the cap stage runs ONLY over eligible docs AND uses the two-pass bucket
+cumsum (operators/sampling.py::cap_per_group) rather than a per-source
 ROW_NUMBER window — even after filtering, one dominant crawl source's
 eligible docs at 100 TB are hundreds of millions of rows, and a
 single-window formulation would serialize them through ONE task.  The
@@ -31,9 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cloud_optimized_data_pipelines_spark.functions.text import detect_language
+from cloud_optimized_data_pipelines_spark.functions.text import text_stats
 from cloud_optimized_data_pipelines_spark.operators.quality import (
-    gopher_quality_flags,
+    gopher_flags_from_stats,
 )
 from cloud_optimized_data_pipelines_spark.operators.sampling import (
     cap_per_group,
@@ -54,26 +54,24 @@ def corpus_preprocess(
     the per-source cap, where cap rank orders ELIGIBLE docs by the
     deterministic md5(id) permutation (the C4 anti-megasite rule).
     """
-    lang_ok = detect_language(F.col(text_col)) == target_lang
-
     # exact-dedup survivor: min id per content digest (partial agg)
     hashed = docs.withColumn("_h", F.md5(F.col(text_col)))
     canon = hashed.groupBy("_h").agg(F.min(id_col).alias("_canon_id"))
 
-    # Optimization r14 (guide §2.4/§5): the quality flags are computed
-    # INLINE on the hashed rows (gopher_quality_flags is a pure
-    # per-document expression — joining a (doc_id, keep) table back in
-    # cost a corpus-scale shuffle for a value already derivable on the
-    # row), and the flag table is projected narrow and materialized
-    # ONCE with an eager localCheckpoint: three consumers (the
-    # eligible filter feeding the cap, the cap's second cumsum pass,
-    # and the final selected join) each replayed the whole
-    # hash+dedup+quality subtree otherwise — 7 corpus scans in the
-    # lazy plan, 2 now.  Per-row values are unchanged.
+    # Language and quality flags are per-document values: one
+    # text_stats struct (one Arrow pass, each text sent to Python once)
+    # feeds both, on the hashed rows before the canon join, so no
+    # corpus-scale join carries a value derivable on the row.  The
+    # narrow flag table is pinned ONCE with an eager localCheckpoint:
+    # its three consumers (the eligible filter feeding the cap, the
+    # cap's second cumsum pass, and the final selected join) would each
+    # replay the hash + dedup + stats subtree otherwise.
     flagged = (
-        gopher_quality_flags(hashed, id_col, text_col)
+        gopher_flags_from_stats(
+            hashed.withColumn("_ts", text_stats(F.col(text_col))), "_ts"
+        )
+        .withColumn("lang_ok", F.col("_ts.lang") == target_lang)
         .join(canon, "_h")
-        .withColumn("lang_ok", lang_ok)
         .withColumn("is_canonical", F.col(id_col) == F.col("_canon_id"))
         .withColumn("quality_ok", F.col("keep"))
         .withColumn(

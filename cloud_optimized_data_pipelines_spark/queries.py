@@ -26,6 +26,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cloud_optimized_data_pipelines_spark.batching import spread_small_scan
 from cloud_optimized_data_pipelines_spark.functions.dates import extract_dates
 from cloud_optimized_data_pipelines_spark.functions.ids import item_id
 from cloud_optimized_data_pipelines_spark.functions import text as T
@@ -73,7 +74,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     import os
 
     dfs = {}
-    parallelism = spark.sparkContext.defaultParallelism
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
         df = spark.read.parquet(path)
@@ -88,13 +88,13 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         # single-row-group test files scan as ONE partition regardless of
         # maxPartitionBytes, serializing all downstream CPU work; spread
         # fact-sized tables across the cluster.  At production scale
-        # (many input splits) the condition never triggers.
+        # (many input splits) the spread never triggers.
         try:
             fsize = os.path.getsize(path)
         except OSError:
             fsize = 0
-        if fsize > 512 * 1024 and df.rdd.getNumPartitions() < parallelism:
-            df = df.repartition(parallelism)
+        if fsize > 512 * 1024:
+            df = spread_small_scan(df)
         df.createOrReplaceTempView(t)
         dfs[t] = df
     _TABLE_CACHE[cache_key] = dfs

@@ -623,8 +623,10 @@ def text_gopher_quality_q(spark, sf_dir):
     """MassiveText/Gopher word-level quality rules (operators/
     quality.py): word-count bounds, mean-word-length bounds, and the
     top-word repetition fraction, combined into a keep flag.  One
-    explode + two partial-aggregated doc-keyed shuffles — no joins
-    against the corpus, no Python."""
+    Arrow pass over the documents computes the per-document word
+    integers; the ratios and the flag are JVM expressions over them —
+    no shuffle, no join.  The oracle is the explode + two aggregations
+    + doc join form."""
     from cloud_optimized_data_pipelines_spark.operators.quality import (
         gopher_quality_flags,
     )

@@ -1,9 +1,10 @@
 """Declarative reference forms of the Arrow/numpy operator paths.
 
 Each production operator runs one implementation.  The forms here are
-the declarative (zip_with/aggregate fold, explode/groupBy) models the
-Arrow paths were written to match bit for bit; the parity tests run
-both and compare.  None of this is imported by the package.
+the declarative (zip_with/aggregate fold, filter/array_sort lambdas,
+explode/groupBy) models the Arrow paths were written to match bit for
+bit; the parity tests run both and compare.  None of this is imported
+by the package.
 """
 
 from __future__ import annotations
@@ -14,7 +15,11 @@ from itertools import combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cloud_optimized_data_pipelines_spark.functions.text import tokens
+from cloud_optimized_data_pipelines_spark.functions.text import (
+    LANG_ORDER,
+    LANG_STOPWORDS,
+    tokens,
+)
 from cloud_optimized_data_pipelines_spark.functions.vectors import (
     literal_vector,
 )
@@ -114,6 +119,109 @@ def assign_lists(
 
 
 # --- quality ---------------------------------------------------------
+
+
+def _lowered_tokens(text):
+    return F.transform(tokens(text), lambda t: F.lower(t))
+
+
+def detect_language(text):
+    """``functions.text.detect_language`` as JVM lambdas: argmax over
+    the per-language stopword hits with the LANG_ORDER tie-break, 'und'
+    when no stopword hits at all.  Let-bound twice (single-element
+    transforms): the lowered token array and the hit-count array are
+    each computed once per row."""
+
+    def build_scores(toks):
+        def hits(lang):
+            sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
+            return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
+
+        return F.array(*[hits(lang) for lang in LANG_ORDER])
+
+    def build_argmax(sarr):
+        best = F.array_max(sarr)
+        result = F.lit("und")
+        # built in reverse so earlier languages win ties
+        for idx in reversed(range(len(LANG_ORDER))):
+            result = F.when(
+                (best > 0) & (sarr[idx] == best), F.lit(LANG_ORDER[idx])
+            ).otherwise(result)
+        return result
+
+    scores_arr = F.transform(F.array(_lowered_tokens(text)), build_scores)[0]
+    return F.transform(F.array(scores_arr), build_argmax)[0]
+
+
+def gopher_quality_flags_rows(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    min_words: int = 50,
+    max_words: int = 100_000,
+    min_mean_word_len: float = 3.0,
+    max_mean_word_len: float = 10.0,
+    max_top_word_frac: float = 0.2,
+) -> DataFrame:
+    """``quality.gopher_quality_flags`` as per-row array expressions:
+    tokenize once, ``aggregate`` for the char sum, ``array_distinct``
+    for the unique count, and a run-length fold over ``array_sort``
+    for the top-word count."""
+    toks = tokens(F.col(text_col))
+    n_words = F.coalesce(F.size(toks), F.lit(0)).cast("long")
+    char_sum = F.coalesce(
+        F.aggregate(
+            toks, F.lit(0).cast("long"), lambda a, t: a + F.length(t)
+        ),
+        F.lit(0).cast("long"),
+    )
+    n_unique = F.coalesce(F.size(F.array_distinct(toks)), F.lit(0)).cast(
+        "long"
+    )
+    # top word count = longest equal-run in the sorted token array
+    # (tokens are non-empty, so the "" sentinel never matches)
+    run = F.aggregate(
+        F.array_sort(toks),
+        F.struct(
+            F.lit("").alias("prev"),
+            F.lit(0).cast("long").alias("run"),
+            F.lit(0).cast("long").alias("best"),
+        ),
+        lambda acc, t: F.struct(
+            t.alias("prev"),
+            F.when(t == acc["prev"], acc["run"] + 1)
+            .otherwise(F.lit(1).cast("long"))
+            .alias("run"),
+            F.greatest(
+                acc["best"],
+                F.when(t == acc["prev"], acc["run"] + 1).otherwise(
+                    F.lit(1).cast("long")
+                ),
+            ).alias("best"),
+        ),
+        lambda acc: acc["best"],
+    )
+    top_cnt = F.coalesce(run, F.lit(0).cast("long"))
+    mean_len = F.when(
+        n_words > 0, char_sum.cast("double") / n_words.cast("double")
+    ).otherwise(F.lit(0.0))
+    top_frac = F.when(
+        n_words > 0, top_cnt.cast("double") / n_words.cast("double")
+    ).otherwise(F.lit(0.0))
+    return (
+        df.withColumn("n_words", n_words)
+        .withColumn("n_unique_words", n_unique)
+        .withColumn("mean_word_len", mean_len)
+        .withColumn("top_word_frac", top_frac)
+        .withColumn(
+            "keep",
+            (n_words >= min_words)
+            & (n_words <= max_words)
+            & (mean_len >= min_mean_word_len)
+            & (mean_len <= max_mean_word_len)
+            & (top_frac < max_top_word_frac),
+        )
+    )
 
 
 def word_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

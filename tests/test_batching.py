@@ -1,5 +1,6 @@
 """BatchFlusher: bounded Arrow output batches for payload exploders;
-probe_table: the per-variant probe contract."""
+spread_small_scan: the parallelism floor, planning-only; probe_table:
+the per-variant probe contract."""
 
 import pandas as pd
 
@@ -63,3 +64,61 @@ def test_probe_table_zero_variants_is_empty(spark):
     probe = _probe(spark, 0)
     assert probe.columns == ["variant", "label", "sq"]
     assert probe.count() == 0
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spread_runs_no_job_on_a_shuffled_input(spark):
+    """Building a dedup operator over a joined input plans only: the
+    spread helper does not read the partition count of a plan with an
+    exchange (that would run every upstream query stage), and hands
+    the input through unchanged."""
+    from cloud_optimized_data_pipelines_spark.batching import spread_small_scan
+    from cloud_optimized_data_pipelines_spark.operators.dedup import (
+        minhash_lsh_dedup,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i % 7} w{i % 5} w{i % 3} tail {i % 4}") for i in range(40)],
+        "doc_id long, text string",
+    )
+    keys = spark.range(0, 40, 2).withColumnRenamed("id", "doc_id")
+    joined = docs.join(keys.repartition(3, "doc_id"), "doc_id")
+    deduped, jobs = _jobs_in_group(
+        spark,
+        "spread-shuffled-input",
+        lambda: minhash_lsh_dedup(joined, "doc_id", "text"),
+    )
+    assert jobs == []
+    assert spread_small_scan(joined) is joined
+    # same rows as the operator over a local copy of the joined input
+    local = spark.createDataFrame(joined.collect(), joined.schema)
+    want = minhash_lsh_dedup(local, "doc_id", "text")
+    assert sorted(deduped.collect()) == sorted(want.collect())
+
+
+def test_spread_widens_a_one_file_scan(spark, tmp_path):
+    """A one-file parquet scan (one input split) is still spread to the
+    default parallelism, without a job for the partition count."""
+    from cloud_optimized_data_pipelines_spark.batching import spread_small_scan
+
+    path = str(tmp_path / "one.parquet")
+    spark.range(200).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    spread, jobs = _jobs_in_group(
+        spark, "spread-one-file", lambda: spread_small_scan(scan)
+    )
+    assert jobs == []
+    par = spark.sparkContext.defaultParallelism
+    assert scan.rdd.getNumPartitions() == 1 < par
+    assert spread.rdd.getNumPartitions() == par
+    assert sorted(r.id for r in spread.collect()) == list(range(200))

@@ -266,3 +266,55 @@ def test_operators_have_no_implementation_switch():
                     if p == "impl" or p.endswith("_impl")
                 ]
     assert not offenders, offenders
+
+
+def test_corpus_preprocess_runs_one_arrow_pass(spark, sf_dir, monkeypatch):
+    """Language ID and the Gopher statistics of the composed corpus
+    pipeline come from ONE Arrow evaluation per document, and no
+    interpreted array lambda (``ArrayFilter``, ``ArrayAggregate``,
+    ``ArraySort`` are CodegenFallback) is left in its plans.  The flag
+    table is pinned at construction, so its plan is captured before
+    the materialization boundary."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    frame_cls = type(docs)
+    pin = frame_cls.localCheckpoint
+    plans = []
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return pin(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    from cloud_optimized_data_pipelines_spark.plans.corpus import (
+        corpus_preprocess,
+    )
+
+    out = corpus_preprocess(docs)
+    plans.append(out._jdf.queryExecution().executedPlan().toString())
+    plan = "\n".join(plans)
+    assert plan.count("ArrowEvalPython") == 1, plan
+    lambdas = re.findall(r"\b(filter|aggregate|array_sort|lambdafunction)\(", plan)
+    assert not lambdas, lambdas
+
+
+def test_only_the_spread_helper_reads_partition_counts():
+    """``DataFrame.rdd`` (and any partition count) on a plan with an
+    exchange runs every upstream query stage just to answer a question
+    about partitions.  The package reads a partition count in one
+    place, ``batching.spread_small_scan``, which asks it of
+    exchange-free plans only, and never converts a frame to an RDD."""
+    import inspect
+    import pathlib
+
+    import cloud_optimized_data_pipelines_spark as pkg
+    from cloud_optimized_data_pipelines_spark.batching import spread_small_scan
+
+    access = re.compile(r"\.rdd\b|getNumPartitions")
+    root = pathlib.Path(pkg.__file__).parent
+    found = {
+        str(p.relative_to(root)): access.findall(p.read_text())
+        for p in sorted(root.rglob("*.py"))
+    }
+    found = {k: v for k, v in found.items() if v}
+    helper = access.findall(inspect.getsource(spread_small_scan))
+    assert helper == ["getNumPartitions"] and found == {"batching.py": helper}, found

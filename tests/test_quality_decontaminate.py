@@ -5,6 +5,7 @@ import pytest
 from fold_reference import (
     dsir_feats,
     gopher_quality_flags_agg,
+    gopher_quality_flags_rows,
     hamming_pairs,
     word_stats,
 )
@@ -49,10 +50,11 @@ def test_gopher_flags_rules(spark):
 
 
 def test_gopher_flags_match_word_stats_aggregation(spark):
-    """r14 parity pin: gopher_quality_flags computes its statistics as
-    per-row array expressions (zero shuffles); this asserts they equal
-    the explode/groupBy word_stats relation exactly — including ties in
-    the top-word count, unicode tokens, repeated runs, single-token and
+    """Parity pin: gopher_quality_flags computes its statistics in one
+    Arrow pass (zero shuffles); this asserts that it, the per-row
+    array-fold form and the explode/groupBy aggregation form all equal
+    the word_stats relation exactly — including ties in the top-word
+    count, unicode tokens, repeated runs, single-token and
     whitespace-only docs."""
     docs = [
         (1, "a bb a ccc a bb"),            # top run 3 among interleaved
@@ -69,6 +71,7 @@ def test_gopher_flags_match_word_stats_aggregation(spark):
     results = {}
     for impl, form in (
         ("agg", gopher_quality_flags_agg),
+        ("fold", gopher_quality_flags_rows),
         ("rows", gopher_quality_flags),
     ):
         flags = {
@@ -98,8 +101,9 @@ def test_gopher_flags_match_word_stats_aggregation(spark):
                     got.mean_word_len == 0.0 and got.top_word_frac == 0.0
                 ), (impl, did)
                 assert not got.keep, (impl, did)
-    for did, _ in docs:  # the two impls are bit-identical row-for-row
+    for did, _ in docs:  # the three forms are bit-identical row-for-row
         assert results["agg"][did] == results["rows"][did], did
+        assert results["fold"][did] == results["rows"][did], did
 
 
 def test_contamination_flags(spark):
