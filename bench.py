@@ -17,6 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from cloud_optimized_data_pipelines_spark.batching import pins  # noqa: E402
 from cloud_optimized_data_pipelines_spark.session import get_spark  # noqa: E402
 
 # Cross-round drift anchors (r13): re-timed once per ANCHOR_EVERY
@@ -337,9 +338,12 @@ def main() -> None:
     # every query's median is reported raw AND divided by its
     # segment's factor ("normalized").
     def _noop(name: str) -> None:
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        # each run releases its own pins (the unpersist does not block),
+        # so no run reads blocks an earlier one left behind
+        with pins(spark):
+            QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
 
     anchor_runs: dict[str, list[float]] = {a: [] for a in ANCHORS}
 

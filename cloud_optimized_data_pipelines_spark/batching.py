@@ -1,6 +1,7 @@
 """mapInPandas helpers: bounded Arrow output batches for
-payload-exploding operators, the small-scan spread, and the
-per-variant probe table.
+payload-exploding operators, the small-scan spread, the per-variant
+probe table, and the one way to pin an intermediate (``pin`` and its
+release scope ``pins``).
 
 A generator that yields one DataFrame per INPUT batch hands the JVM
 one Arrow record batch per task-split — for payload columns that can
@@ -26,6 +27,7 @@ Usage inside a mapInPandas generator::
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql.types import DataType
@@ -125,3 +127,39 @@ def probe_table(spark, variant_fn, schema, variants: int):
 
     parts = max(1, min(n, spark.sparkContext.defaultParallelism))
     return spark.range(0, n, numPartitions=parts).mapInPandas(gen, struct)
+
+
+def pin(df, eager: bool = True):
+    """Materialize ``df`` once and cut its lineage: every later
+    consumer reads the stored rows instead of replaying the plan.
+
+    The session decides how: with a checkpoint dir set
+    (``spark.checkpoint.dir`` or ``SparkContext.setCheckpointDir``) the
+    pin is a reliable ``checkpoint`` whose files survive executor loss;
+    otherwise it is a ``localCheckpoint`` held in executor storage,
+    which dies with its executor and is released by :func:`pins`.
+    ``eager`` runs the job now; a lazy pin is stored by the first job
+    that computes it."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)
+
+
+@contextmanager
+def pins(spark):
+    """Release, on exit, every RDD that became persistent while the
+    scope was open: the local pins made inside it, nested scopes
+    included.  RDDs persistent before it opened are left alone, so a
+    pin made outside any scope lives as long as the session.  The
+    unpersist does not block on the executors.
+
+    Consume every frame built on a local pin before its scope closes:
+    the pin has no lineage, so a read after the release can fail."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    try:
+        yield
+    finally:
+        held = jsc.getPersistentRDDs()
+        for rdd_id in set(held.keySet()) - before:
+            held[rdd_id].unpersist(False)

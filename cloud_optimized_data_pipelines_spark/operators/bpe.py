@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cloud_optimized_data_pipelines_spark.batching import pin
 from cloud_optimized_data_pipelines_spark.functions import text as T
 
 
@@ -106,30 +107,30 @@ def bpe_encode(text_col, rules: list[tuple[str, str]]):
     return F.flatten(F.transform(T.tokens(F.coalesce(c, F.lit(""))), encode_word))
 
 
+_REPIN_EVERY = 4
+
+
 def bpe_train(
     docs: DataFrame,
     text_col: str = "text",
     n_merges: int = 10,
-    checkpoint_every: int = 4,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
     """Learn ``n_merges`` merge rules; returns (rules, final vocab).
 
     Driver traffic is one row per iteration (the argmax); ties break
     deterministically (count desc, then pair lexicographic).
 
-    The vocab working set is localCheckpointed EAGERLY up front: the
-    corpus is scanned exactly once (the word_freq_table build) and
-    every merge iteration then runs on the vocab-sized table.  Without
-    this, each iteration's pair_counts action replayed the corpus
-    explode + word groupBy from scratch — n_merges corpus scans for
-    one (optimization r14; the same persisted-working-set shape as
-    quality.train_quality_classifier).  Each merge nests one fold into
-    the plan, so the vocab is re-checkpointed every
-    ``checkpoint_every`` iterations to keep expression depth bounded
-    (checkpoint blocks are vocab-sized — KBs, left to Spark's storage
-    management).
+    The vocab working set is pinned up front: the corpus is scanned
+    exactly once (the word_freq_table build) and every merge iteration
+    then runs on the vocab-sized table.  Unpinned, each iteration's
+    pair_counts action replays the corpus explode + word groupBy —
+    n_merges corpus scans for one (the same pinned-working-set shape
+    as quality.train_quality_classifier).  Each merge nests one fold
+    into the plan, so the vocab is re-pinned every
+    ``_REPIN_EVERY`` iterations to keep expression depth bounded (the
+    pins are vocab-sized — KBs).
     """
-    vocab = word_freq_table(docs, text_col).localCheckpoint(eager=True)
+    vocab = pin(word_freq_table(docs, text_col))
     rules: list[tuple[str, str]] = []
     for it in range(n_merges):
         top = (
@@ -143,6 +144,6 @@ def bpe_train(
         a, b = top[0]["a"], top[0]["b"]
         rules.append((a, b))
         vocab = apply_merge(vocab, a, b)
-        if (it + 1) % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint(eager=True)
+        if (it + 1) % _REPIN_EVERY == 0:
+            vocab = pin(vocab)
     return rules, vocab

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cloud_optimized_data_pipelines_spark.batching import spread_small_scan
+from cloud_optimized_data_pipelines_spark.batching import pin, spread_small_scan
 from cloud_optimized_data_pipelines_spark.functions.text import (
     lsh_band_hashes,
     minhash_signature,
@@ -907,9 +907,7 @@ def minhash_lsh_verified_pairs(
     )
 
 
-def cluster_labels(
-    edges: DataFrame, max_iter: int = 60, checkpoint_dir=None
-) -> DataFrame:
+def cluster_labels(edges: DataFrame, max_iter: int = 60) -> DataFrame:
     """Connected components over a bipartite (doc, bucket) graph by
     iterative min-label propagation: doc labels flow to buckets
     (groupBy min), bucket minima flow back to docs, until fixpoint.
@@ -921,18 +919,17 @@ def cluster_labels(
     without a fixpoint RAISES rather than returning silently wrong
     labels.  For deep/chained graphs prefer
     :func:`connected_components` (O(log^2 n) rounds regardless of
-    diameter).  ``localCheckpoint`` truncates the lineage each round
-    so the plan doesn't grow with iterations — the standard Spark
-    iterative-algorithm pattern.
+    diameter).  Each round's labels are pinned, so the plan doesn't
+    grow with iterations — the standard Spark iterative-algorithm
+    pattern.
 
     Input: (doc, bkt) rows.  Output: (doc, label) where label = min doc
     id of the doc's component.
     """
-    # materialize the edge list ONCE — every iteration references it
-    # twice, and without this the full upstream lineage (LSH banding:
-    # shingle explode + signature agg) re-executes per reference
-    ckpt = _make_ckpt(edges, True, checkpoint_dir)
-    edges = ckpt(edges)
+    # every round reads the edge list twice; unpinned, each read would
+    # replay its upstream lineage (LSH banding: shingle explode +
+    # signature agg)
+    edges = pin(edges)
     labels = edges.select("doc").distinct().withColumn("label", F.col("doc"))
     for _ in range(max_iter):
         bucket_min = (
@@ -940,7 +937,7 @@ def cluster_labels(
             .groupBy("bkt")
             .agg(F.min("label").alias("_bmin"))
         )
-        new_labels = ckpt(
+        new_labels = pin(
             edges.join(bucket_min, "bkt")
             .groupBy("doc")
             .agg(F.min("_bmin").alias("label"))
@@ -974,7 +971,6 @@ def minhash_lsh_clusters(
     num_bands: int = 4,
     n: int = 3,
     max_iter: int = 20,
-    checkpoint_dir=None,
 ) -> DataFrame:
     """Assign every doc a near-dup ``cluster_id`` (min doc id of its
     connected component in the LSH collision graph).
@@ -1005,9 +1001,7 @@ def minhash_lsh_clusters(
         .filter(F.col("doc") != F.col("bmin"))
         .select(F.col("doc").alias("src"), F.col("bmin").alias("dst"))
     )
-    labels = connected_components(
-        star, "src", "dst", max_iter, checkpoint_dir=checkpoint_dir
-    )
+    labels = connected_components(star, "src", "dst", max_iter)
     return (
         df.join(labels, df[id_col] == labels.node, "left")
         .drop("node")
@@ -1290,7 +1284,6 @@ def simhash_near_dup_pairs(
     bits: int = 60,
     num_bands: int = 4,
     max_hamming: int = 3,
-    materialize: bool = False,
 ) -> DataFrame:
     """SimHash near-duplicate pairs via banded Hamming blocking — the
     Google web-dedup design (Manku, Jain & Das Sarma 2007, "Detecting
@@ -1318,22 +1311,8 @@ def simhash_near_dup_pairs(
 
     Fingerprints come from :func:`simhash_fingerprints_fast` (Arrow/
     hashlib), bit-exact to the :func:`simhash` expression, which the
-    parity tests use as the reference.
-
-    ``materialize=True`` computes the fingerprint table ONCE via
-    ``localCheckpoint(eager=True)``: the self-join's two sides
-    otherwise each re-derive every fingerprint from raw text —
-    fingerprinting is the dominant cost, so paying it twice doubles
-    the stage (measured 4.8 s -> 2.3 s at sf0.1 with the fold
-    fingerprints).  EAGER SIDE EFFECT:
-    with True, *constructing* the DataFrame runs a Spark job and pins
-    non-replicated checkpoint blocks (not executor-loss-resilient),
-    unlike every other operator here which returns a pure lazy plan —
-    hence the default is False; hot paths (the registered queries /
-    bench) opt in.  On a real cluster prefer
-    ``persist(StorageLevel.MEMORY_AND_DISK)`` or a parquet
-    fingerprint table (the Manku production shape stores fingerprints
-    anyway).
+    parity tests use as the reference.  The fingerprint table is
+    pinned at construction, so building the frame runs one Spark job.
     """
     if bits % num_bands:
         raise ValueError("bits must divide evenly into num_bands")
@@ -1345,11 +1324,13 @@ def simhash_near_dup_pairs(
         )
     width = bits // num_bands
     mask = (1 << width) - 1
-    sh = simhash_fingerprints_fast(
-        spread_small_scan(df), id_col, text_col, bits
-    ).select(F.col(id_col).alias("id"), "sh")
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    # fingerprinting is the dominant cost, and the self-join's two
+    # sides would each re-derive every fingerprint from raw text
+    sh = pin(
+        simhash_fingerprints_fast(
+            spread_small_scan(df), id_col, text_col, bits
+        ).select(F.col(id_col).alias("id"), "sh")
+    )
     banded = sh.select(
         "id",
         "sh",
@@ -1602,7 +1583,6 @@ def simhash_wide_near_dup_pairs(
     bits_per_word: int = 60,
     num_bands: int = 6,
     max_hamming: int = 3,
-    materialize: bool = False,
 ) -> DataFrame:
     """Banded Hamming near-dup pairs over the :func:`simhash_wide`
     multi-word fingerprint — :func:`simhash_near_dup_pairs` re-banded
@@ -1637,11 +1617,13 @@ def simhash_wide_near_dup_pairs(
         )
     width = bits_per_word // bands_per_word
     mask = (1 << width) - 1
-    sh = simhash_wide_fingerprints_fast(
-        spread_small_scan(df), id_col, text_col, words, bits_per_word
-    ).select(F.col(id_col).alias("id"), "sh")
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    # pinned once: the self-join's two sides read it (as in
+    # simhash_near_dup_pairs)
+    sh = pin(
+        simhash_wide_fingerprints_fast(
+            spread_small_scan(df), id_col, text_col, words, bits_per_word
+        ).select(F.col(id_col).alias("id"), "sh")
+    )
     banded = sh.select(
         "id",
         "sh",
@@ -1693,53 +1675,6 @@ def simhash_wide_near_dup_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-# last (applicationId, dir) requested in this process — the guard state
-# for the session-global setCheckpointDir side effect (see _make_ckpt)
-_CKPT_DIR_SET: list[tuple[str, str]] = []
-
-
-def _make_ckpt(df: DataFrame, checkpoint: bool, checkpoint_dir):
-    """Lineage-truncation policy for iterative operators.
-
-    ``checkpoint_dir`` set -> reliable ``df.checkpoint()`` (survives
-    executor loss — the right default on a real cluster, where losing
-    one executor mid-contraction otherwise restarts the whole job);
-    else ``checkpoint`` -> ``localCheckpoint`` (fast, blocks pinned on
-    executors, NOT loss-resilient — fine for local[] and tests); else
-    identity (pure lazy plan, lineage grows per round).
-
-    GLOBAL SIDE EFFECT: ``setCheckpointDir`` is session-wide state —
-    every other reliable checkpoint in the SparkSession lands under the
-    last dir set.  Two concurrently-running iterative operators passed
-    DIFFERENT dirs would race; set one dir at session setup (or pass
-    the same dir everywhere) for concurrent use.  Redirecting an
-    already-set differing dir is guarded with a ``UserWarning`` so the
-    redirect is at least visible, never silent.
-    """
-    if checkpoint_dir is not None:
-        sc = df.sparkSession.sparkContext
-        want = str(checkpoint_dir)
-        prev = _CKPT_DIR_SET[-1] if _CKPT_DIR_SET else None
-        if prev is not None and prev != (sc.applicationId, want):
-            if prev[0] == sc.applicationId:
-                import warnings
-
-                warnings.warn(
-                    "setCheckpointDir is session-global: redirecting the "
-                    f"checkpoint dir from {prev[1]!r} to {want!r}; "
-                    "concurrent iterative operators should share one dir",
-                    UserWarning,
-                    stacklevel=3,
-                )
-        if prev != (sc.applicationId, want):
-            sc.setCheckpointDir(want)
-            _CKPT_DIR_SET[:] = [(sc.applicationId, want)]
-        return lambda d, eager=True: d.checkpoint(eager=eager)
-    if checkpoint:
-        return lambda d, eager=True: d.localCheckpoint(eager=eager)
-    return lambda d, eager=True: d
 
 
 _INT_ID_TYPES = {"tinyint", "smallint", "int", "bigint"}
@@ -1803,8 +1738,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint: bool = True,
-    checkpoint_dir=None,
     stats: dict | None = None,
 ) -> DataFrame:
     """Duplicate-cluster labeling: connected components of a near-dup
@@ -1836,13 +1769,9 @@ def connected_components(
 
     Convergence = canonical edge set stable (count + xxhash64-sum
     signature; a changed edge set collides with probability ~2^-64
-    per round).  Per-round lineage truncation: pass
-    ``checkpoint_dir`` for reliable ``df.checkpoint()`` (survives
-    executor loss — use this on a real cluster); the default
-    ``checkpoint=True`` uses ``localCheckpoint`` (fast, but pinned
-    blocks die with their executor); without either the plan doubles
-    per iteration and Catalyst analysis time, not the data, becomes
-    the bottleneck.
+    per round).  Each round's edge set is pinned: unpinned, the plan
+    doubles per iteration and Catalyst analysis time, not the data,
+    becomes the bottleneck.
 
     Id columns may be ANY orderable type: integer ids run the
     contraction directly; string/other ids (URLs, content hashes) are
@@ -1861,7 +1790,6 @@ def connected_components(
     rounds to the stable signature) and ``input_edges`` — the scale
     probes assert rounds stay O(log^2 n) as the graph grows.
     """
-    ckpt = _make_ckpt(edges, checkpoint, checkpoint_dir)
     dt = dict(edges.dtypes)
     numeric_ids = dt[src] in _INT_ID_TYPES and dt[dst] in _INT_ID_TYPES
     if numeric_ids:
@@ -1873,19 +1801,14 @@ def connected_components(
         # dense long ids for arbitrary node types.  monotonically_
         # increasing_id is partition-local (no single-task stage) but
         # NON-DETERMINISTIC across re-evaluations, so the mapping MUST
-        # be pinned before it is joined twice — localCheckpoint even
-        # when checkpoint=False (correctness, not an optimization).
+        # be pinned before it is joined twice (correctness, not an
+        # optimization).
         nodes = (
             edges.select(F.col(src).alias("_orig"))
             .union(edges.select(F.col(dst).alias("_orig")))
             .distinct()
         )
-        mapping = nodes.withColumn("_nid", F.monotonically_increasing_id())
-        mapping = (
-            ckpt(mapping)
-            if checkpoint or checkpoint_dir is not None
-            else mapping.localCheckpoint(eager=True)
-        )
+        mapping = pin(nodes.withColumn("_nid", F.monotonically_increasing_id()))
         m_src = mapping.select(F.col("_orig").alias("_s"), F.col("_nid").alias("u"))
         m_dst = mapping.select(F.col("_orig").alias("_d"), F.col("_nid").alias("v"))
         e0 = (
@@ -1916,11 +1839,11 @@ def connected_components(
     # fully intra-partition graph converges on the first confirmation
     # round)
     e = _partition_star_contract(e)
-    # LAZY checkpoint: the signature action right below is what
-    # materializes (and truncates) it — one job per round, not two
-    # (Spark checkpoints marked ancestors at the end of any job that
-    # computes them)
-    e = ckpt(e, eager=False)
+    # LAZY pin: the signature action right below is what materializes
+    # (and truncates) it — one job per round, not two (Spark
+    # checkpoints marked ancestors at the end of any job that computes
+    # them)
+    e = pin(e, eager=False)
 
     def _signature(canon: DataFrame) -> tuple:
         row = canon.agg(
@@ -1977,7 +1900,7 @@ def connected_components(
             )
             .distinct()
         )
-        e = ckpt(e, eager=False)  # the signature action materializes it
+        e = pin(e, eager=False)  # the signature action materializes it
         rounds_run += 1
         new_sig = _signature(e)
         if new_sig == sig:
@@ -2016,7 +1939,6 @@ def duplicate_clusters(
     id_col: str,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    checkpoint_dir=None,
 ) -> DataFrame:
     """Cluster-complete dedup labels for a corpus: every document that
     appears in the near-dup ``pairs`` graph gets its connected
@@ -2024,9 +1946,7 @@ def duplicate_clusters(
     component minimum (``is_survivor``).  Join back to ``df`` to drop
     ``component IS NOT NULL AND NOT is_survivor`` rows.
     """
-    labels = connected_components(
-        pairs, id_a, id_b, checkpoint_dir=checkpoint_dir
-    )
+    labels = connected_components(pairs, id_a, id_b)
     sizes = labels.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
     return (
         labels.join(sizes, "component")

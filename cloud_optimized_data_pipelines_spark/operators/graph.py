@@ -42,8 +42,7 @@ current rank table (both keyed on the source node — AQE picks
 broadcast while ranks fit, sort-merge beyond) plus one
 partial-aggregated groupBy on the destination; the redistribute
 variant adds one left-semi + 1-row sum (metadata traffic) per round;
-lineage is truncated per round (``checkpoint_dir`` for executor-loss
-resilience, same knob as ``dedup.connected_components``).
+the rank table is pinned every other round so the plan stays shallow.
 """
 
 from __future__ import annotations
@@ -51,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cloud_optimized_data_pipelines_spark.operators.dedup import _make_ckpt
+from cloud_optimized_data_pipelines_spark.batching import pin
 
 
 def pagerank(
@@ -62,8 +61,6 @@ def pagerank(
     scale: int = 1_000_000_000,
     damping_num: int = 17,
     damping_den: int = 20,
-    checkpoint: bool = True,
-    checkpoint_dir=None,
     dangling: str = "leak",
 ) -> DataFrame:
     """Integer-scaled PageRank; see module docstring.
@@ -75,15 +72,17 @@ def pagerank(
     """
     if dangling not in ("leak", "redistribute"):
         raise ValueError(f"dangling must be 'leak' or 'redistribute', got {dangling!r}")
-    ckpt = _make_ckpt(edges, checkpoint, checkpoint_dir)
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = ckpt(e)
-    nodes = (
+    # the edge and node sets are read by the node count, the loop
+    # invariants below and every round; unpinned, each read replays
+    # the distinct over the input edges
+    e = pin(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    )
+    nodes = pin(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nodes = ckpt(nodes)
     # One count() action: enforces the int64 bound (total mass is
     # ~n*scale and every contribution is multiplied by damping_num
     # before the DIV) and feeds the redistribute share's denominator.
@@ -95,15 +94,14 @@ def pagerank(
             "(e.g. 10^6 at 10^9 nodes)"
         )
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # loop-invariant hoists (optimization r14, guide §2.4): the
-    # edge |x| outdeg join and the sink-node set do not change across
-    # iterations — materialize each once instead of re-joining /
-    # re-anti-joining every round (saves one shuffle join per
-    # iteration; deg attached before vs after the rank join is the
-    # same integer per edge, so every contribution is unchanged).
-    edeg = ckpt(e.join(outdeg, "src"))
+    # loop invariants: the edge |x| outdeg join and the sink-node set
+    # are read by every round; pinned once, no round re-joins or
+    # re-anti-joins them (one shuffle join saved per iteration; deg
+    # attached before vs after the rank join is the same integer per
+    # edge, so every contribution is unchanged).
+    edeg = pin(e.join(outdeg, "src"))
     sinks = (
-        ckpt(
+        pin(
             nodes.join(
                 outdeg.select(F.col("src").alias("node")), "node", "left_anti"
             )
@@ -151,13 +149,11 @@ def pagerank(
             .cast("long")
             .alias("r"),
         )
-        # lineage truncation every OTHER round (optimization r14): a
-        # two-round plan is still shallow, and halving the eager
-        # checkpoint actions halves the per-iteration job barrier
-        # count; the final round stays lazy (the caller's action
-        # computes it).
+        # pinned every OTHER round: a two-round plan is still shallow,
+        # and each eager pin is one job barrier; the final round stays
+        # lazy (the caller's action computes it).
         if (it + 1) % 2 == 0 and (it + 1) < iters:
-            ranks = ckpt(ranks)
+            ranks = pin(ranks)
     return ranks.select("node", F.col("r").alias("rank"))
 
 
@@ -172,24 +168,22 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     un-oracle-able; synchronous min-tie-break is the standard
     deterministic variant).
 
-    Scale shape per round (optimization r14, guide §2.4/§5): the edge
-    list — often an expensive derived subquery — and the node set are
-    materialized ONCE with an eager ``localCheckpoint`` before the
-    loop (the lazy form re-executed the edge derivation for every
-    round's join plus twice for the node union — 5x at 3 rounds);
+    Scale shape per round: the edge list — often an expensive derived
+    subquery — and the node set are pinned once before the loop
+    (unpinned, every round's join replays the edge derivation, plus
+    twice for the node union — 5x at 3 rounds);
     each round is then one edge->label equi-join, a (node,label)
     partial-agg count, and a per-node ``min_by`` argmax over the
     ``(-c, label)`` key — the same max-count/min-label total order as
     the previous row_number window, but partial-aggregable and
     sort-free.  ``iters`` is fixed and small (communities stabilize
     in O(log n) rounds; at 100 TB run rounds until the label-change
-    count converges, checkpointing like ``pagerank``)."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    nodes = (
+    count converges, pinning like ``pagerank``)."""
+    edges = pin(edges.select("src", "dst"))
+    nodes = pin(
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     labels = nodes.withColumn("label", F.col("node"))
     for _ in range(iters):

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cloud_optimized_data_pipelines_spark.batching import pin, pins
 from cloud_optimized_data_pipelines_spark.functions.text import (
     text_stats,
     tokens,
@@ -380,10 +381,12 @@ def classifier_score(
 
     - **hashed weights** (default): each lowered token's weight is
       derived from its md5 (an integer in [-(m-1)/2, (m-1)/2]) — the
-      hashing-trick form.  Inference is a single codegen'd expression
-      over the let-bound token array: NO explode, NO shuffle, NO
-      Python — the whole model application rides the scan, which is
-      the right shape for scoring 100 TB.  Deterministic md5 weights
+      hashing-trick form.  Inference is one per-row expression over
+      the let-bound token array: NO explode, NO shuffle, NO Python —
+      the whole model application rides the scan, which is the right
+      shape for scoring 100 TB.  (Its ``transform``/``aggregate``
+      lambdas are CodegenFallback and evaluate interpreted, per
+      token.)  Deterministic md5 weights
       stand in for a trained table; the execution shape is the point.
     - **weight table** (``weights`` = DataFrame[word, w] from a real
       trained model, ``w`` DOUBLE, one row per word — duplicate words
@@ -557,16 +560,15 @@ def bigram_logprob(
     IDENTICAL argument association on both engines, per-doc sum as a
     fold over the sorted bigram array.
 
-    Scale shape (optimization r14, guide §2.3/§2.4): the model is
+    Scale shape: the model is
     estimated in ONE corpus pass — bigram occurrences and unigram
     tokens ride a single tagged explode into one (kind, key) count
     (map-side combined), the context counts ``c_ctx(w1)`` are derived
     from the MODEL-sized bigram table (``sum(bcnt) group by w1`` —
     identical integers, since every bigram starting with w1 is one w1
-    context occurrence), and the counted table is truncated with an
-    eager ``localCheckpoint`` so the three downstream consumers
-    (bcnt / uni / total) read the materialized counts instead of
-    replaying the corpus explode.  Doc-side scoring pre-joins
+    context occurrence), and the counted table is pinned so the three
+    downstream consumers (bcnt / uni / total) read the stored counts
+    instead of replaying the corpus explode.  Doc-side scoring pre-joins
     bcnt⋈ctx at model scale into a ``(bg, logp_seen)`` table, so the
     corpus-scale bigram stream is shuffle-joined twice (bg, then w2
     for backoff), not three times.  No broadcast hint on the model
@@ -591,11 +593,10 @@ def bigram_logprob(
             lambda w: F.struct(F.lit(1).alias("kind"), w.alias("key")),
         ),
     )
-    cnts = (
+    cnts = pin(
         train.select(F.explode(tagged).alias("t"))
         .groupBy(F.col("t.kind").alias("kind"), F.col("t.key").alias("key"))
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     bcnt = cnts.filter(F.col("kind") == 0).select(
         F.col("key").alias("bg"), F.col("cnt").alias("bcnt")
@@ -736,10 +737,10 @@ def train_quality_classifier(
     base = df.withColumn("_tk", tokens(text_col)).withColumn(
         "_y", F.col(label_col).cast("double")
     )
-    # Iterative-loop working set (optimization r14, guide §5/§2.6): the
-    # GD loop re-reads ONLY (_tk, _y) once per iteration, so persist
-    # that narrow projection instead of re-scanning + re-tokenizing the
-    # corpus ``iters`` times, and spread an under-parallel scan first
+    # Iterative-loop working set: the GD loop re-reads ONLY (_tk, _y)
+    # once per iteration, so pin that narrow projection instead of
+    # re-scanning + re-tokenizing the corpus ``iters`` times, and
+    # spread an under-parallel scan first
     # (a tiny corpus reads as 1-3 input splits, serializing the whole
     # Python margin/gradient stage — the spread_small_scan floor).  The
     # partition target derives from the DATA (~1k docs per GD task,
@@ -749,8 +750,8 @@ def train_quality_classifier(
     # placement moves, and every shuffle-order-dependent float sum
     # downstream is already pinned by grad_round (see determinism note
     # above) — so the trained weights and scores are identical.
-    # Unpersisted after the loop: the returned ``scored`` plan derives
-    # from the original lineage, leaving no cache behind.
+    # Released after the loop: the returned ``scored`` plan derives
+    # from the original lineage, leaving no pin behind.
     loop_base = base.select("_tk", "_y")
     ideal = max(1, -(-n_docs // 1000))
     if ideal < df.sparkSession.sparkContext.defaultParallelism:
@@ -759,7 +760,6 @@ def train_quality_classifier(
         # round trips than they buy); the shuffle moves < 1k-doc
         # partitions.  Never fires at production corpus sizes.
         loop_base = loop_base.repartition(ideal)
-    loop_base = loop_base.persist()
 
     def margin_expr(w: list[float]):
         return _clf_margin_udf(w, n_features)(F.col("_tk"))
@@ -770,24 +770,26 @@ def train_quality_classifier(
         )
 
     w = [0.0] * n_features
-    for _ in range(iters):
-        partials = loop_base.select(
-            prob_expr(w).alias("_p"), "_y", "_tk"
-        ).mapInPandas(
-            _clf_grad_partials(n_features), "_b int, _partial double"
-        )
-        grads = (
-            partials.groupBy("_b")
-            .agg(
-                F.round(
-                    F.sum("_partial") / F.lit(float(n_docs)), grad_round
-                ).alias("_g")
+    with pins(df.sparkSession):
+        # lazy: the first GD pass stores it
+        loop_base = pin(loop_base, eager=False)
+        for _ in range(iters):
+            partials = loop_base.select(
+                prob_expr(w).alias("_p"), "_y", "_tk"
+            ).mapInPandas(
+                _clf_grad_partials(n_features), "_b int, _partial double"
             )
-            .collect()
-        )
-        g = {r["_b"]: r["_g"] for r in grads}
-        w = [w[b] - lr * g.get(b, 0.0) for b in range(n_features)]
-    loop_base.unpersist()
+            grads = (
+                partials.groupBy("_b")
+                .agg(
+                    F.round(
+                        F.sum("_partial") / F.lit(float(n_docs)), grad_round
+                    ).alias("_g")
+                )
+                .collect()
+            )
+            g = {r["_b"]: r["_g"] for r in grads}
+            w = [w[b] - lr * g.get(b, 0.0) for b in range(n_features)]
     scored = base.select(
         *df.columns,
         F.round(margin_expr(w), 6).alias("margin"),

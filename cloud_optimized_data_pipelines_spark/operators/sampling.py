@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cloud_optimized_data_pipelines_spark.batching import pin
 from cloud_optimized_data_pipelines_spark.functions.text import tokens
 
 
@@ -461,9 +462,8 @@ def dsir_importance(
     of the raw one — at 100 TB that halves the dominant scan/explode/
     md5 work (r9, VERDICT r8 wrong #3).  Its feature pass is the Arrow
     extractor :func:`_dsir_feats_fast`, and the (doc, bucket, count)
-    table it yields is pinned with an EAGER ``localCheckpoint`` at
-    construction: building the frame runs a Spark job and holds
-    non-replicated checkpoint blocks.  The declarative explode/md5/
+    table it yields is pinned at construction: building the frame
+    runs a Spark job.  The declarative explode/md5/
     groupBy form of that pass lives in ``tests/fold_reference.py`` as
     the parity reference.  The ``target`` form has no Arrow path: its
     feature passes stay the declarative explode/md5/groupBy.
@@ -497,14 +497,13 @@ def dsir_importance(
         # token count, so most md5s are dict hits).  Emits (doc, b, fc)
         # pre-aggregated — a doc lives in one partition, so no (doc, b)
         # groupBy shuffle.
-        # materialize ONCE (the simhash materialize=True pattern): four
-        # downstream consumers (target model, raw model, the scored
+        # pinned: four consumers (target model, raw model, the scored
         # join, per-doc totals) would otherwise each re-run the
         # tokenize+hash scan — mapInPandas has no exchange for Spark
         # to reuse
-        raw_f = _dsir_feats_fast(
-            df, id_col, text_col, buckets, target_filter
-        ).localCheckpoint(eager=True)
+        raw_f = pin(
+            _dsir_feats_fast(df, id_col, text_col, buckets, target_filter)
+        )
         # BOTH bucket models in ONE aggregation pass over raw_f: the
         # raw count unconditionally, the target count as a conditional
         # sum (tc = 0 where the target slice never hit the bucket —
@@ -675,14 +674,12 @@ def doremi_weights(
         F.col(domain_col).alias("domain"),
         F.explode(tokens(text_col)).alias("word"),
     )
-    # materialized once (optimization r14, guide §5): three consumers
-    # (corpus counts, domain totals, the KL term join) each replayed
-    # the corpus-token explode + count otherwise; the counted table is
-    # vocab x domains — shuffle-output-sized, not corpus-sized
-    dom_counts = (
-        words.groupBy("domain", "word")
-        .agg(F.count("*").alias("c_dw"))
-        .localCheckpoint(eager=True)
+    # pinned: three consumers (corpus counts, domain totals, the KL
+    # term join) would each replay the corpus-token explode + count;
+    # the counted table is vocab x domains — shuffle-output-sized, not
+    # corpus-sized
+    dom_counts = pin(
+        words.groupBy("domain", "word").agg(F.count("*").alias("c_dw"))
     )
     corpus_counts = dom_counts.groupBy("word").agg(
         F.sum("c_dw").alias("c_w")

@@ -20,6 +20,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cloud_optimized_data_pipelines_spark.batching import pin
 from cloud_optimized_data_pipelines_spark.functions.vectors import (
     cosine_similarity,
     literal_vector,
@@ -325,15 +326,14 @@ def ivf_build(
     zip_with/aggregate argmin, which lives in
     ``tests/fold_reference.py`` as the property-test reference.
 
-    Optimization r15 (guide §5, the iterative-trainer working set):
-    the input is pinned once with a LAZY ``localCheckpoint`` — the
-    seed job materializes it, and every Lloyd iteration plus the
-    final assignment then reads executor-resident blocks instead of
-    re-running the upstream scan per pass (the standard persist-the-
-    training-set recipe; rows, order and partitioning are unchanged,
-    so the rounded means are byte-identical).
+    The iterative-trainer working set: the input is pinned once,
+    lazily — the seed job stores it, and every Lloyd iteration plus
+    the final assignment then reads the stored rows instead of
+    re-running the upstream scan per pass (rows, order and
+    partitioning are unchanged, so the rounded means are
+    byte-identical).
     """
-    df = df.localCheckpoint(eager=False)
+    df = pin(df, eager=False)
     if seed_vectors is not None:
         centroids = [[float(x) for x in v] for v in seed_vectors[:k_lists]]
     else:
@@ -494,17 +494,13 @@ def semantic_dedup(
     dedup).  Returns every input row with (id, cid, is_dup) — filters
     never silently drop rows.
     """
-    # assignment materialized ONCE with an eager localCheckpoint
-    # (optimization r14, guide §5): the flags stage references it four
-    # times (both sides of the semi AND anti joins), and each lazy
-    # reference replayed the full n x k crossJoin scoring — the
-    # dominant cost at SemDeDup's k ~ sqrt(n) design point, paid 4x.
-    # Values unchanged (same rows, stored instead of recomputed);
-    # semantic_dedup_indexed gets the same effect from its parquet
-    # round-trip.
-    assigned = _semantic_assign(df, vec_col, id_col, k_lists).localCheckpoint(
-        eager=True
-    )
+    # pinned: the flags stage reads the assignment four times (both
+    # sides of the semi AND anti joins), and each unpinned read would
+    # replay the full n x k crossJoin scoring — the dominant cost at
+    # SemDeDup's k ~ sqrt(n) design point, paid 4x.  Values unchanged
+    # (same rows, stored instead of recomputed); semantic_dedup_indexed
+    # gets the same effect from its parquet round-trip.
+    assigned = pin(_semantic_assign(df, vec_col, id_col, k_lists))
     return _semantic_dedup_flags(
         assigned, vec_col, id_col, threshold, round_digits
     )
@@ -1005,11 +1001,11 @@ def ivf_write_index(
     its nprobe list directories.  Returns the centroids.
     """
     assigned, centroids = ivf_build(df, vec_col, k_lists, iters, id_col)
-    # Optimization r15 (guide §5): the assigned frame feeds BOTH the
-    # partitioned write and the per-list stats aggregation below; pin
-    # it so the Arrow assignment UDF runs once, not twice (the write —
-    # the first consumer — materializes the lazy checkpoint).
-    assigned = assigned.localCheckpoint(eager=False)
+    # the assigned frame feeds BOTH the partitioned write and the
+    # per-list stats aggregation below; pinned, the Arrow assignment
+    # UDF runs once, not twice (the write — the first consumer —
+    # stores the lazy pin).
+    assigned = pin(assigned, eager=False)
     assigned.write.mode("overwrite").partitionBy("list_id").parquet(
         f"{path}/lists"
     )
@@ -1579,13 +1575,13 @@ def ivf_pq_topk(
             lambda x, c: x - c,
         ),
     )
-    # Optimization r15 (guide §5): the residual frame is consumed three
-    # times (pq_train's seed job, its Lloyd aggregation, and the final
-    # encode+ADC scan) and each consumption re-ran the Arrow assignment
-    # UDF plus the interpreted zip_with residual — pin it once; the
-    # first consumer (pq_train's seed TakeOrdered) materializes the
-    # lazy checkpoint, so no extra job is spent.  Values unchanged.
-    res = res.localCheckpoint(eager=False)
+    # the residual frame is read three times (pq_train's seed job, its
+    # Lloyd aggregation, and the final encode+ADC scan); unpinned, each
+    # read re-runs the Arrow assignment UDF plus the interpreted
+    # zip_with residual.  The first consumer (pq_train's seed
+    # TakeOrdered) stores the lazy pin, so no extra job is spent.
+    # Values unchanged.
+    res = pin(res, eager=False)
     # residual seeds for pq_train from the SAME seed rows, computed
     # driver-side: assign each seed vector with the executors' exact
     # argmin kernel and subtract its (rounded, plan-literal) centroid —

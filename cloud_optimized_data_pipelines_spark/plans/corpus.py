@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cloud_optimized_data_pipelines_spark.batching import pin
 from cloud_optimized_data_pipelines_spark.functions.text import text_stats
 from cloud_optimized_data_pipelines_spark.operators.quality import (
     gopher_flags_from_stats,
@@ -62,11 +63,11 @@ def corpus_preprocess(
     # text_stats struct (one Arrow pass, each text sent to Python once)
     # feeds both, on the hashed rows before the canon join, so no
     # corpus-scale join carries a value derivable on the row.  The
-    # narrow flag table is pinned ONCE with an eager localCheckpoint:
-    # its three consumers (the eligible filter feeding the cap, the
-    # cap's second cumsum pass, and the final selected join) would each
-    # replay the hash + dedup + stats subtree otherwise.
-    flagged = (
+    # narrow flag table is pinned once at construction: its three
+    # consumers (the eligible filter feeding the cap, the cap's second
+    # cumsum pass, and the final selected join) would each replay the
+    # hash + dedup + stats subtree otherwise.
+    flagged = pin(
         gopher_flags_from_stats(
             hashed.withColumn("_ts", text_stats(F.col(text_col))), "_ts"
         )
@@ -86,7 +87,6 @@ def corpus_preprocess(
             "quality_ok",
             "eligible",
         )
-        .localCheckpoint(eager=True)
     )
     # cap over the eligible subset only, via the two-pass bucket cumsum
     # (a cap is a token budget with unit weights): per-source

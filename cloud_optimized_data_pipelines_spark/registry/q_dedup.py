@@ -676,8 +676,7 @@ def dedup_simhash_pairs_q(spark, sf_dir):
     fold lambdas dominated this query's wall time."""
     t = load_tables(spark, sf_dir)
     return D.simhash_near_dup_pairs(
-        t["documents"], "doc_id", "text", num_bands=4, max_hamming=3,
-        materialize=True,
+        t["documents"], "doc_id", "text", num_bands=4, max_hamming=3
     )
 
 
@@ -735,7 +734,7 @@ def dedup_simhash_wide_pairs_q(spark, sf_dir):
     test_simhash_wide_fast_fingerprints_bit_exact."""
     t = load_tables(spark, sf_dir)
     return D.simhash_wide_near_dup_pairs(
-        t["documents"], "doc_id", "text", max_hamming=5, materialize=True
+        t["documents"], "doc_id", "text", max_hamming=5
     )
 
 
@@ -754,7 +753,7 @@ def dedup_simhash_wide_pairs_fast_q(spark, sf_dir):
     JVM's ASCII-only \\s class so unicode whitespace cannot diverge."""
     t = load_tables(spark, sf_dir)
     return D.simhash_wide_near_dup_pairs(
-        t["documents"], "doc_id", "text", max_hamming=5, materialize=True
+        t["documents"], "doc_id", "text", max_hamming=5
     )
 
 
@@ -831,8 +830,7 @@ def split_leakage_safe_q(spark, sf_dir):
     # bit-exact Arrow/hashlib fingerprints (3x the fold lambdas at
     # sf0.1, which dominated this query's 5 s bench time)
     pairs = D.simhash_near_dup_pairs(
-        t["documents"], "doc_id", "text", num_bands=4, max_hamming=3,
-        materialize=True,
+        t["documents"], "doc_id", "text", num_bands=4, max_hamming=3
     )
     return leakage_safe_split(t["documents"], pairs, "doc_id").select(
         "doc_id", "split_unit", "split"
@@ -852,8 +850,7 @@ def dedup_duplicate_clusters_q(spark, sf_dir):
     convergence signature per round."""
     t = load_tables(spark, sf_dir)
     pairs = D.simhash_near_dup_pairs(
-        t["documents"], "doc_id", "text", num_bands=4, max_hamming=3,
-        materialize=True,
+        t["documents"], "doc_id", "text", num_bands=4, max_hamming=3
     )
     return D.duplicate_clusters(pairs, "doc_id")
 

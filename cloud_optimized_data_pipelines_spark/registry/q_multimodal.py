@@ -16,7 +16,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from cloud_optimized_data_pipelines_spark.batching import probe_table
+from cloud_optimized_data_pipelines_spark.batching import pin, probe_table
 from cloud_optimized_data_pipelines_spark.functions.dates import extract_dates  # noqa: F401,E501
 from cloud_optimized_data_pipelines_spark.functions.ids import item_id  # noqa: F401
 from cloud_optimized_data_pipelines_spark.functions import text as T  # noqa: F401
@@ -838,9 +838,15 @@ def multimodal_webdataset_samples_q(spark, sf_dir):
     )
 
     t = load_tables(spark, sf_dir)
-    probe = probe_table(
-        spark, partial(probe_blob_row, wds_probe_shard), WARC_PROBE_SCHEMA, 8
-    ).cache()
+    # 8 rows of real bytes read twice (sample decode, md5/size): pinned
+    # lazily, so the shards build once in the query's own job
+    probe = pin(
+        probe_table(
+            spark, partial(probe_blob_row, wds_probe_shard),
+            WARC_PROBE_SCHEMA, 8,
+        ),
+        eager=False,
+    )
     samples = wds_samples(probe, "file_id", "blob")
     agg = samples.groupBy("shard_id").agg(
         F.count("*").cast("bigint").alias("n_samples"),

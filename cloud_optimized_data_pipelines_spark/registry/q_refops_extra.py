@@ -12,7 +12,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from cloud_optimized_data_pipelines_spark.batching import probe_table
+from cloud_optimized_data_pipelines_spark.batching import pin, probe_table
 from cloud_optimized_data_pipelines_spark.functions.dates import extract_dates  # noqa: F401,E501
 from cloud_optimized_data_pipelines_spark.functions.ids import item_id  # noqa: F401
 from cloud_optimized_data_pipelines_spark.functions import text as T  # noqa: F401
@@ -655,15 +655,13 @@ def pipeline_crawl_ingest_q(spark, sf_dir):
     probe = probe_table(
         spark, partial(probe_blob_row, warc_text_probe_blob),
         WARC_PROBE_SCHEMA, 8,
-    ).cache()
-    recs = warc_records(probe, "file_id", "blob")
-    # decode ONCE (optimization r14, guide §5): the response records
-    # feed three branches (response counts, kept aggregates, survivor
-    # digests), and mapInPandas has no exchange for Spark to reuse —
-    # each lazy reference re-ran the gzip+WARC+HTTP decode
-    resp = recs.filter(F.col("warc_type") == "response").localCheckpoint(
-        eager=True
     )
+    recs = warc_records(probe, "file_id", "blob")
+    # pinned: the response records feed three branches (response
+    # counts, kept aggregates, survivor digests), and mapInPandas has
+    # no exchange for Spark to reuse — each unpinned read would re-run
+    # the gzip+WARC+HTTP decode.  The probe blobs are read only here.
+    resp = pin(recs.filter(F.col("warc_type") == "response"))
     bodies = http_text_bodies(resp).withColumn(
         "tokens", TT.token_count("body")
     )

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from cloud_optimized_data_pipelines_spark.batching import pin
 from cloud_optimized_data_pipelines_spark.functions.dates import extract_dates  # noqa: F401,E501
 from cloud_optimized_data_pipelines_spark.functions.ids import item_id  # noqa: F401
 from cloud_optimized_data_pipelines_spark.functions import text as T  # noqa: F401
@@ -278,13 +279,13 @@ def sample_ccnet_buckets_q(spark, sf_dir):
     )
 
     t = load_tables(spark, sf_dir)
-    # scored ONCE (optimization r14, guide §5): both consumers (the
-    # tercile-cutoff aggregate and the labeling pass) otherwise replay
-    # the whole unigram-LM scoring subtree
-    scored = (
-        unigram_logprob(t["documents"], "doc_id", "text")
-        .select("doc_id", "mean_logprob")
-        .localCheckpoint(eager=True)
+    # pinned: both consumers (the tercile-cutoff aggregate and the
+    # labeling pass) would otherwise replay the whole unigram-LM
+    # scoring subtree
+    scored = pin(
+        unigram_logprob(t["documents"], "doc_id", "text").select(
+            "doc_id", "mean_logprob"
+        )
     )
     return perplexity_buckets(scored, "mean_logprob")
 

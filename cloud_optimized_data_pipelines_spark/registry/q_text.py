@@ -13,7 +13,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from cloud_optimized_data_pipelines_spark.batching import probe_table
+from cloud_optimized_data_pipelines_spark.batching import pin, probe_table
 from cloud_optimized_data_pipelines_spark.functions.dates import extract_dates  # noqa: F401,E501
 from cloud_optimized_data_pipelines_spark.functions.ids import item_id  # noqa: F401
 from cloud_optimized_data_pipelines_spark.functions import text as T  # noqa: F401
@@ -543,10 +543,15 @@ def text_warc_records_q(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     # 8 rows of real bytes feeding three consumers (record explode,
-    # HTTP stats, md5/size): cache so the blobs build once.
-    probe = probe_table(
-        spark, partial(probe_blob_row, warc_probe_blob), WARC_PROBE_SCHEMA, 8
-    ).cache()
+    # HTTP stats, md5/size): pinned lazily, so the blobs build once in
+    # the query's own job
+    probe = pin(
+        probe_table(
+            spark, partial(probe_blob_row, warc_probe_blob),
+            WARC_PROBE_SCHEMA, 8,
+        ),
+        eager=False,
+    )
     recs = warc_records(probe, "file_id", "blob")
     hdr = recs.groupBy("file_id").agg(
         F.count("*").cast("bigint").alias("n_records"),

@@ -671,11 +671,12 @@ FROM w
 def text_classifier_score_q(spark, sf_dir):
     """fastText-style linear quality-classifier inference
     (operators/quality.py::classifier_score, hashed-weight form): the
-    whole model application is ONE codegen'd expression over the
+    whole model application is one per-row expression over the
     let-bound token array — no explode, no shuffle, no Python — which
-    is the execution shape for scoring 100 TB of documents.  Integer
-    weight sums keep the result exact; the only float is the final
-    scaled division."""
+    is the execution shape for scoring 100 TB of documents.  Its
+    ``transform``/``aggregate`` lambdas are CodegenFallback, so they
+    evaluate interpreted, per token.  Integer weight sums keep the
+    result exact; the only float is the final scaled division."""
     from cloud_optimized_data_pipelines_spark.operators.quality import (
         classifier_score,
     )

@@ -20,3 +20,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def session_checkpoint_dir(spark, tmp_path):
+    """Calling it sets the session's checkpoint dir (so ``pin`` makes
+    reliable checkpoints) and returns the dir; afterwards the session
+    has no checkpoint dir again."""
+    sc = spark.sparkContext
+
+    def set_dir():
+        path = tmp_path / "ckpt"
+        sc.setCheckpointDir(str(path))
+        return path
+
+    yield set_dir
+    # SparkContext has no public unset: assign scala.None to the field
+    none = getattr(getattr(spark._jvm, "scala.None$"), "MODULE$")
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(none)
+    assert sc.getCheckpointDir() is None

@@ -1,10 +1,18 @@
 """BatchFlusher: bounded Arrow output batches for payload exploders;
 spread_small_scan: the parallelism floor, planning-only; probe_table:
-the per-variant probe contract."""
+the per-variant probe contract; pin and pins: one way to pin an
+intermediate, released by its scope."""
 
 import pandas as pd
+import pytest
 
-from cloud_optimized_data_pipelines_spark.batching import BatchFlusher, probe_table
+from cloud_optimized_data_pipelines_spark.batching import (
+    BatchFlusher,
+    pin,
+    pins,
+    probe_table,
+)
+from cloud_optimized_data_pipelines_spark.queries import QUERIES
 
 
 def test_flush_on_bytes():
@@ -122,3 +130,55 @@ def test_spread_widens_a_one_file_scan(spark, tmp_path):
     assert scan.rdd.getNumPartitions() == 1 < par
     assert spread.rdd.getNumPartitions() == par
     assert sorted(r.id for r in spread.collect()) == list(range(200))
+
+
+def _pinned(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_nested_pins_release_only_their_own(spark):
+    """A scope releases the pins made while it is open, nested scopes
+    included, and nothing older; a pin made outside any scope stays."""
+    before = _pinned(spark)
+    outside = pin(spark.range(10))
+    base = _pinned(spark)
+    assert len(base - before) == 1
+    with pins(spark):
+        outer = pin(spark.range(20))
+        lazy = pin(spark.range(30), eager=False)
+        mid = _pinned(spark)
+        assert len(mid - base) == 2
+        with pins(spark):
+            inner = pin(spark.range(40))
+            assert len(_pinned(spark) - mid) == 1
+            assert inner.count() == 40
+        assert _pinned(spark) == mid
+        assert outer.count() == 20 and lazy.count() == 30
+    assert _pinned(spark) == base
+    assert outside.count() == 10
+
+
+def test_pin_is_reliable_under_a_session_checkpoint_dir(
+    spark, session_checkpoint_dir
+):
+    """With a checkpoint dir set, a pin is written under it and holds no
+    executor storage, so it outlives the scope that made it."""
+    before = _pinned(spark)
+    ckpt_dir = session_checkpoint_dir()
+    with pins(spark):
+        df = pin(spark.range(50))
+        assert _pinned(spark) == before
+    assert any(p.is_file() for p in ckpt_dir.rglob("*"))
+    assert df.count() == 50
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_query_leaves_no_pin_behind(spark, sf_dir, name):
+    """Every registered query, run inside one scope, leaves the set of
+    persistent RDDs as it found it."""
+    before = _pinned(spark)
+    with pins(spark):
+        QUERIES[name](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    assert _pinned(spark) == before

@@ -242,11 +242,19 @@ def test_coverage_ledger_tolerates_future_round(tmp_path):
     )
 
 
+# parameters that pick a mechanism instead of a result: how a pin is
+# made is the session's choice (``batching.pin``), not the caller's
+MECHANISM_SWITCHES = (
+    "materialize", "checkpoint", "checkpoint_dir", "checkpoint_every"
+)
+
+
 def test_operators_have_no_implementation_switch():
     """Each operator has one production implementation: no public
     function in ``operators/`` or ``plans/`` takes a parameter that
-    picks between implementations (``impl`` or ``*_impl``).  Reference
-    forms belong in ``tests/fold_reference.py``."""
+    picks between implementations (``impl`` or ``*_impl``) or between
+    pinning mechanisms (``MECHANISM_SWITCHES``).  Reference forms
+    belong in ``tests/fold_reference.py``."""
     import importlib
     import inspect
     import pkgutil
@@ -264,6 +272,7 @@ def test_operators_have_no_implementation_switch():
                     f"{mod.__name__}.{name}({p})"
                     for p in inspect.signature(fn).parameters
                     if p == "impl" or p.endswith("_impl")
+                    or p in MECHANISM_SWITCHES
                 ]
     assert not offenders, offenders
 
@@ -274,7 +283,8 @@ def test_corpus_preprocess_runs_one_arrow_pass(spark, sf_dir, monkeypatch):
     interpreted array lambda (``ArrayFilter``, ``ArrayAggregate``,
     ``ArraySort`` are CodegenFallback) is left in its plans.  The flag
     table is pinned at construction, so its plan is captured before
-    the materialization boundary."""
+    the materialization boundary: ``batching.pin`` makes it with
+    ``DataFrame.localCheckpoint`` when no checkpoint dir is set."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     frame_cls = type(docs)
     pin = frame_cls.localCheckpoint
@@ -318,3 +328,27 @@ def test_only_the_spread_helper_reads_partition_counts():
     found = {k: v for k, v in found.items() if v}
     helper = access.findall(inspect.getsource(spread_small_scan))
     assert helper == ["getNumPartitions"] and found == {"batching.py": helper}, found
+
+
+def test_only_the_pin_helper_pins():
+    """One way to pin an intermediate: ``batching.pin`` makes every pin
+    and ``batching.pins`` releases them, so no other code in the
+    package checkpoints, persists, caches or unpersists a frame."""
+    import inspect
+    import pathlib
+
+    import cloud_optimized_data_pipelines_spark as pkg
+    from cloud_optimized_data_pipelines_spark.batching import pin, pins
+
+    access = re.compile(
+        r"localCheckpoint\(|\.checkpoint\(|\.persist\(|\.cache\(\)|unpersist\("
+    )
+    root = pathlib.Path(pkg.__file__).parent
+    found = {
+        str(p.relative_to(root)): access.findall(p.read_text())
+        for p in sorted(root.rglob("*.py"))
+    }
+    found = {k: v for k, v in found.items() if v}
+    helper = access.findall(inspect.getsource(pin) + inspect.getsource(pins))
+    assert helper == [".checkpoint(", "localCheckpoint(", "unpersist("]
+    assert found == {"batching.py": helper}, found

@@ -1137,9 +1137,9 @@ def test_connected_components_string_chain(spark):
     assert {r.component for r in rows} == {"doc000"}
 
 
-def test_connected_components_checkpoint_dir(spark, tmp_path):
-    # reliable-checkpoint mode (real-cluster executor-loss resilience):
-    # same labels as the localCheckpoint default
+def test_connected_components_checkpoint_dir(spark, session_checkpoint_dir):
+    # reliable-checkpoint mode (a session checkpoint dir, real-cluster
+    # executor-loss resilience): same labels as the local pins
     from cloud_optimized_data_pipelines_spark.operators.dedup import (
         connected_components,
     )
@@ -1150,17 +1150,16 @@ def test_connected_components_checkpoint_dir(spark, tmp_path):
         (r.node, r.component)
         for r in connected_components(df, "src", "dst").collect()
     }
+    ckpt_dir = session_checkpoint_dir()
     ckpt = {
         (r.node, r.component)
-        for r in connected_components(
-            df, "src", "dst", checkpoint_dir=str(tmp_path / "ckpt")
-        ).collect()
+        for r in connected_components(df, "src", "dst").collect()
     }
     assert base == ckpt
     # the reliable checkpoint actually wrote RDD state to the dir
     import os
 
-    assert any(os.scandir(tmp_path / "ckpt"))
+    assert any(os.scandir(ckpt_dir))
 
 
 def test_ngram_posting_list_pair_semantics(spark):

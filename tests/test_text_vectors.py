@@ -697,19 +697,18 @@ def test_pagerank_deterministic_across_partitionings(spark):
     assert a == sorted(_pagerank_reference(edges, iters=4).items())
 
 
-def test_pagerank_checkpoint_dir(spark, tmp_path):
+def test_pagerank_checkpoint_dir(spark, session_checkpoint_dir):
+    import os
+
     from cloud_optimized_data_pipelines_spark.operators.graph import pagerank
 
     edges = [("x", "y"), ("y", "z"), ("z", "x"), ("w", "x")]
     df = spark.createDataFrame(edges, "src string, dst string")
     base = sorted(map(tuple, pagerank(df, iters=3).collect()))
-    ck = sorted(
-        map(
-            tuple,
-            pagerank(df, iters=3, checkpoint_dir=str(tmp_path / "ck")).collect(),
-        )
-    )
+    ck_dir = session_checkpoint_dir()
+    ck = sorted(map(tuple, pagerank(df, iters=3).collect()))
     assert base == ck
+    assert any(os.scandir(ck_dir))
 
 
 def test_psi_by_window_known_values(spark):
@@ -784,8 +783,7 @@ def test_leakage_safe_split_clusters_co_travel(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pairs = D.simhash_near_dup_pairs(
-        docs, "doc_id", "text", num_bands=4, max_hamming=3,
-        materialize=True,
+        docs, "doc_id", "text", num_bands=4, max_hamming=3
     )
     out = leakage_safe_split(docs, pairs, "doc_id").select(
         "doc_id", "split_unit", "split"

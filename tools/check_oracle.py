@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from cloud_optimized_data_pipelines_spark.batching import pins  # noqa: E402
 from cloud_optimized_data_pipelines_spark.queries import TABLES  # noqa: E402
 from cloud_optimized_data_pipelines_spark.session import get_spark  # noqa: E402
 
@@ -91,9 +92,10 @@ def main():
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = sdf.collect()
+            with pins(spark):  # each query releases its own pins
+                sdf = fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = sdf.collect()
         except Exception as e:
             print(f"FAIL  {name}: spark error: {str(e)[:200]}")
             failures.append(name)

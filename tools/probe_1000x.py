@@ -119,19 +119,15 @@ def main() -> None:
             t(f"cand60 {label}", lambda d=docs: candidate_count(d, wide=False))
             t(f"candwide {label}", lambda d=docs: candidate_count(d, wide=True))
 
-    # NOTE: construction goes INSIDE the timer — materialize=True eagerly
-    # checkpoints the fingerprint table (the dominant stage) at build time
+    # NOTE: construction goes INSIDE the timer — the pair operators pin
+    # the fingerprint table (the dominant stage) eagerly at build time
     pairs = {}
 
     def build_pairs(docs, wide=True, **kw):
         if wide:
-            p = D.simhash_wide_near_dup_pairs(
-                docs, "doc_id", "text", materialize=True, **kw
-            )
+            p = D.simhash_wide_near_dup_pairs(docs, "doc_id", "text", **kw)
         else:
-            p = D.simhash_near_dup_pairs(
-                docs, "doc_id", "text", materialize=True, **kw
-            )
+            p = D.simhash_near_dup_pairs(docs, "doc_id", "text", **kw)
         p = p.localCheckpoint(eager=False)
         return p.count(), p
 
@@ -234,8 +230,7 @@ def main() -> None:
         for label, docs in (("100x", docs100), ("1000x", docs1000)):
             def run(d=docs):
                 p = D.simhash_near_dup_pairs(
-                    d, "doc_id", "text", num_bands=4, max_hamming=3,
-                    materialize=True,
+                    d, "doc_id", "text", num_bands=4, max_hamming=3
                 ).localCheckpoint(eager=False)
                 out = leakage_safe_split(d, p, "doc_id").select(
                     "doc_id", "split_unit", "split"
