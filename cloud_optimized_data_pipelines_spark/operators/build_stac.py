@@ -65,7 +65,7 @@ def enrich_from_granules(events: DataFrame, granules: DataFrame) -> DataFrame:
     """J3: CMR metadata enrichment join (utils/stac.py:118).
 
     The reference fetches each granule's JSON by concept id, one HTTP
-    call per item, limited to 1 result (W3).  Here: a broadcast left
+    call per item, limited to 1 result (W3).  Here: a left
     join on granule_id that fills start/end datetimes from the granule's
     temporal range for CMR-routed events (F10: granule_id non-null).
     """
@@ -74,9 +74,7 @@ def enrich_from_granules(events: DataFrame, granules: DataFrame) -> DataFrame:
         F.col("time_start").alias("_g_start"),
         F.col("time_end").alias("_g_end"),
     )
-    joined = events.join(
-        F.broadcast(g), events["granule_id"] == F.col("_gid"), "left"
-    )
+    joined = events.join(g, events["granule_id"] == F.col("_gid"), "left")
     return (
         joined.withColumn(
             "start_datetime", F.coalesce("start_datetime", "_g_start")

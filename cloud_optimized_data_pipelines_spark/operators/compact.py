@@ -75,11 +75,12 @@ def merge_upsert(
     is one distributed anti-join + union, no per-record round trips.
 
     Plan shape: updates are typically tiny vs the table, so the
-    left-anti join broadcasts the UPDATE side and the table is read
-    once, streamed straight back out — cost is one table rewrite, the
-    floor for formats without row-level deletes.  (Delta/Iceberg would
-    turn this into a metadata commit + matched-file rewrite; not in
-    this container — the join shape is the part that transfers.)
+    planner broadcasts the UPDATE side of the left-anti join and the
+    table is read once, streamed straight back out — cost is one table
+    rewrite, the floor for formats without row-level deletes.
+    (Delta/Iceberg would turn this into a metadata commit +
+    matched-file rewrite; not in this container — the join shape is the
+    part that transfers.)
 
     Returns (rows_before, rows_after).
     """
@@ -90,7 +91,7 @@ def merge_upsert(
     missing = [c for c in target.columns if c not in updates.columns]
     if missing:
         raise ValueError(f"updates missing target columns: {missing}")
-    kept = target.join(F.broadcast(updates.select(*keys)), on=keys, how="left_anti")
+    kept = target.join(updates.select(*keys), on=keys, how="left_anti")
     merged = kept.unionByName(updates.select(*target.columns))
     tmp = target_path.rstrip("/") + "._merging"
     merged.write.mode("overwrite").parquet(tmp)

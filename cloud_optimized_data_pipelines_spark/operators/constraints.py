@@ -197,14 +197,15 @@ def profile_columns(
                 mean_round,
             ).alias(f"_mean_{c}"),
         ]
-    # ONE lazy plan (optimization r14): the 1-row scalar aggregate is
-    # attached as a broadcast crossJoin (the oracle's scalar-CTE shape)
-    # instead of collected to the driver — no separate action, and the
-    # two broadcast sites share one ReusedExchange, so the table is
-    # still scanned exactly twice.  Bucket arithmetic reads lo/hi from
-    # the stats row with the identical per-row double ops the literal
-    # form compiled to (span = hi - lo is the same IEEE subtract the
-    # driver performed), so every bucket index is unchanged.
+    # ONE lazy plan: the 1-row scalar aggregate is attached as a
+    # crossJoin (the oracle's scalar-CTE shape) instead of collected to
+    # the driver — no separate action.  The planner broadcasts the
+    # 1-row side, and the two broadcast sites share one ReusedExchange,
+    # so the table is still scanned exactly twice.  Bucket arithmetic
+    # reads lo/hi from the stats row with the identical per-row double
+    # ops the literal form compiled to (span = hi - lo is the same IEEE
+    # subtract the driver performed), so every bucket index is
+    # unchanged.
     stats_row = df.agg(*aggs)
     entries = []
     for c in cols:
@@ -228,7 +229,7 @@ def profile_columns(
             F.struct(F.lit(c).alias("column"), bucket.alias("bucket"))
         )
     hist = (
-        df.crossJoin(F.broadcast(stats_row))
+        df.crossJoin(stats_row)
         .select(F.explode(F.array(*entries)).alias("_e"))
         .select(F.col("_e.column").alias("column"),
                 F.col("_e.bucket").alias("bucket"))
@@ -245,7 +246,7 @@ def profile_columns(
         ]
         return F.element_at(F.create_map(*pairs), F.col("column"))
 
-    return hist.crossJoin(F.broadcast(stats_row)).select(
+    return hist.crossJoin(stats_row).select(
         "column",
         F.col("_n").alias("n"),
         lookup(

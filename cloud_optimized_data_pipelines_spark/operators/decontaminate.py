@@ -8,11 +8,11 @@ evaluation document, and is either dropped or flagged before training.
 
 Scale shape (the part that matters at 100 TB):
 
-- The eval/test side is always tiny relative to the corpus (thousands
-  of docs).  Its DISTINCT shingle set is built once and broadcast —
-  the contamination check on the 100 TB train side is then a
-  broadcast semi/inner join against the scan, no fact-side shuffle
-  except the per-doc hit count (doc-keyed, partial-aggregated).
+- The eval/test side is small next to the corpus (thousands of docs).
+  Its DISTINCT shingle set is built once; the train side joins it on
+  the shingle, and the planner sizes that join.  Only the exact
+  embedding check hints a broadcast: its cosine condition has no
+  hashable key, so without the hint it would be a CartesianProduct.
 - n defaults to 5 here (the synthetic corpus is word-soup; public
   pipelines use 8-13-gram windows — one knob).
 """
@@ -26,7 +26,7 @@ from cloud_optimized_data_pipelines_spark.operators.dedup import shingle_index
 
 
 def test_shingle_set(test: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
-    """The held-out side's distinct n-gram set (small: broadcast it)."""
+    """The held-out side's distinct n-gram set."""
     return shingle_index(test, id_col, text_col, n).select("shingle").distinct()
 
 
@@ -36,7 +36,6 @@ def contamination_flags(
     id_col: str,
     text_col: str,
     n: int = 5,
-    broadcast_test: bool = True,
 ) -> DataFrame:
     """Flag train docs sharing >= 1 word n-gram with the test set.
 
@@ -45,12 +44,9 @@ def contamination_flags(
     shingles, so a plain count after the join counts distinct matches
     without a count_distinct aggregate.
     """
-    tsh = test_shingle_set(test, id_col, text_col, n)
-    if broadcast_test:
-        tsh = F.broadcast(tsh)
     hits = (
         shingle_index(train, id_col, text_col, n)
-        .join(tsh, "shingle")
+        .join(test_shingle_set(test, id_col, text_col, n), "shingle")
         .groupBy("doc")
         .agg(F.count("*").alias("n_hits"))
     )
@@ -67,7 +63,6 @@ def embedding_contamination_flags(
     id_col: str = "vec_id",
     threshold: float = 0.95,
     round_digits: int = 6,
-    broadcast_test: bool = True,
 ) -> DataFrame:
     """SEMANTIC decontamination: flag train rows whose embedding is
     within cosine ``threshold`` of ANY eval-set row — the embedding
@@ -91,11 +86,9 @@ def embedding_contamination_flags(
         safe_cos_div,
     )
 
-    tside = test.select(
-        F.col(vec_col).alias("_tv"), norm(vec_col).alias("_tn")
+    tside = F.broadcast(
+        test.select(F.col(vec_col).alias("_tv"), norm(vec_col).alias("_tn"))
     )
-    if broadcast_test:
-        tside = F.broadcast(tside)
     cos = F.round(
         safe_cos_div(dot(F.col(vec_col), F.col("_tv")), F.col("_n") * F.col("_tn")),
         round_digits,
@@ -120,7 +113,6 @@ def embedding_contamination_flags_blocked(
     threshold: float = 0.95,
     round_digits: int = 6,
     num_dims: int = 4,
-    broadcast_test: bool = True,
     multiprobe: bool = False,
 ) -> DataFrame:
     """ANN-BLOCKED semantic decontamination — the scale path of
@@ -168,8 +160,6 @@ def embedding_contamination_flags_blocked(
             F.explode(hamming1_probes(tb, num_dims)) if multiprobe else tb
         ).alias("_tb"),
     )
-    if broadcast_test:
-        tside = F.broadcast(tside)
     cos = F.round(
         safe_cos_div(
             dot(F.col(vec_col), F.col("_tv")), F.col("_n") * F.col("_tn")

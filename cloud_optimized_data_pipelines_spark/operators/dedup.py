@@ -143,8 +143,8 @@ def ngram_jaccard_pairs(
     HAVING COUNT(*) <= k shingle filter, an unguarded call
     (max_shingle_freq=None) with an unpruned oracle.
 
-    Plan shape (r14, guide §2.4): posting lists instead of a
-    self-equi-join — ``groupBy(shingle).collect_list(doc)`` builds the
+    Plan shape: posting lists instead of a self-equi-join —
+    ``groupBy(shingle).collect_list(doc)`` builds the
     per-shingle occurrence list in one map-side-combined exchange, the
     frequency guard becomes a free ``size <= k`` filter (previously a
     window count over the full index), and the ``doc_a < doc_b``
@@ -154,16 +154,17 @@ def ngram_jaccard_pairs(
     :func:`shingle_index`) but on real text the occurrence-pair
     semantics match the oracle's occurrence self-join bit-for-bit.
 
-    Guard order (r15, guide §2.2/§5): the frequency guard is applied
-    BEFORE the list build — a map-side-combinable count finds the hot
-    shingles (near-stopword n-grams) and a left-anti join drops their
+    Guard order: the frequency guard is applied BEFORE the list build
+    — a map-side-combinable count finds the hot shingles
+    (near-stopword n-grams) and a left-anti join drops their
     occurrences from the index, so no ``collect_list`` aggregation
     buffer ever holds a hot shingle's full posting array (at corpus
-    scale a ubiquitous shingle's array is corpus-sized and collect_list
-    cannot spill within a group — the r14 ``size <= k`` post-filter
-    materialized it before dropping it).  The hot set is tiny (total
-    occurrences / k at most), so the anti-join broadcasts; identical
-    output rows (the filter condition is the same count).
+    scale a ubiquitous shingle's array is corpus-sized and
+    collect_list cannot spill within a group; a ``size <= k`` filter
+    after the build would materialize it before dropping it).
+    Identical output rows: the filter condition is the same count.
+    The hot set has up to total occurrences / k rows, millions for a
+    small k on a large corpus, so the planner sizes the anti-join.
     """
     idx = shingle_index(df, id_col, text_col, n)
     if max_shingle_freq is not None:
@@ -173,7 +174,7 @@ def ngram_jaccard_pairs(
             .filter(F.col("_f") > max_shingle_freq)
             .select("shingle")
         )
-        idx = idx.join(F.broadcast(hot), "shingle", "left_anti")
+        idx = idx.join(hot, "shingle", "left_anti")
     posts = idx.groupBy("shingle").agg(F.collect_list("doc").alias("_docs"))
     sizes = (
         posts.select(F.explode("_docs").alias("doc"))
@@ -239,8 +240,8 @@ def ngram_containment_pairs(
     silently distorting the threshold.  The guard's frequency is DOC
     frequency (the standard DF guard), the tighter skew bound.
 
-    Plan shape (r14, guide §2.4): posting lists instead of a
-    self-equi-join — ``groupBy(shingle).collect_set(doc)`` builds the
+    Plan shape: posting lists instead of a self-equi-join —
+    ``groupBy(shingle).collect_set(doc)`` builds the
     per-shingle doc set in ONE map-side-combined exchange (the
     collect_set also IS the distinct), the DF guard becomes a free
     ``size(docs) <= k`` filter (previously a window count over the
@@ -248,16 +249,16 @@ def ngram_containment_pairs(
     list (exactly the rows the self-join produced — the guard bounds
     the fan-out at k^2 per shingle either way), and per-doc set sizes
     re-aggregate the exploded postings.  3 exchanges total vs 5 plus a
-    sorted window and an SMJ sort in the self-join form; measured
-    9.2 s -> see OPTIMIZATION_r14.md at sf0.1.
+    sorted window and an SMJ sort in the self-join form.
 
-    Guard order (r15, guide §2.2/§5): the DF guard runs BEFORE the set
-    build — ``count_distinct`` (two-phase, spillable hash aggregation
-    keyed on (shingle, doc)) finds shingles in more than k docs and a
-    broadcast left-anti join drops them from the index, so no
-    ``collect_set`` buffer ever holds a ubiquitous shingle's full doc
-    set (see :func:`ngram_jaccard_pairs` — same hazard, same fix).
-    Identical output rows: size(collect_set) IS the distinct doc count.
+    Guard order: the DF guard runs BEFORE the set build —
+    ``count_distinct`` (two-phase, spillable hash aggregation keyed on
+    (shingle, doc)) finds shingles in more than k docs and a left-anti
+    join drops them from the index, so no ``collect_set`` buffer ever
+    holds a ubiquitous shingle's full doc set (see
+    :func:`ngram_jaccard_pairs` — same hazard, same fix, and the same
+    unbounded hot set, so no broadcast hint).  Identical output rows:
+    size(collect_set) IS the distinct doc count.
 
     Output: (doc_a, doc_b, common, size_a, containment) where
     containment = common / size_a >= threshold — "doc_a is contained
@@ -271,7 +272,7 @@ def ngram_containment_pairs(
             .filter(F.col("_f") > max_shingle_freq)
             .select("shingle")
         )
-        idx = idx.join(F.broadcast(hot), "shingle", "left_anti")
+        idx = idx.join(hot, "shingle", "left_anti")
     posts = idx.groupBy("shingle").agg(F.collect_set("doc").alias("_docs"))
     sizes = (
         posts.select(F.explode("_docs").alias("doc"))

@@ -87,7 +87,7 @@ def psi_from_counts(counts: DataFrame) -> DataFrame:
         F.col("tot_a") + F.col("ncat")
     ).cast("double")
     return (
-        counts.crossJoin(F.broadcast(scalars))
+        counts.crossJoin(scalars)
         .withColumn("p_before", p_b)
         .withColumn("p_after", p_a)
         .withColumn(
@@ -135,7 +135,7 @@ def token_distribution_shift(
         F.col("total_b") + F.col("vocab")
     ).cast("double")
     return (
-        counts.crossJoin(F.broadcast(scalars))
+        counts.crossJoin(scalars)
         .withColumn("p_a", p_a)
         .withColumn("p_b", p_b)
         .withColumn(
@@ -204,11 +204,7 @@ def ks_statistic(
     totals = counts.groupBy(*gcols).agg(
         F.sum("_ca").alias("n_a"), F.sum("_cb").alias("n_b")
     )
-    joined = (
-        cum.join(F.broadcast(totals), gcols)
-        if gcols
-        else cum.crossJoin(F.broadcast(totals))
-    )
+    joined = cum.join(totals, gcols) if gcols else cum.crossJoin(totals)
     return (
         joined.select(
             *gcols,

@@ -87,7 +87,7 @@ def shard_plan(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
-        sized.join(F.broadcast(bases), "_bkt")
+        sized.join(bases, "_bkt")
         .withColumn("_cum", F.col("_base") + F.sum("_bytes").over(in_bucket))
         .withColumn(
             "shard_id", F.expr(f"(_cum - _bytes) div {target_bytes}")

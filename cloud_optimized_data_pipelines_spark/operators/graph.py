@@ -134,7 +134,7 @@ def pagerank(
                     .alias("_dm")
                 )
             )
-            nxt = nxt.crossJoin(F.broadcast(dm)).withColumn(
+            nxt = nxt.crossJoin(dm).withColumn(
                 "_share",
                 F.expr(
                     f"({damping_num} * _dm) DIV ({damping_den} * {n_nodes}L)"

@@ -132,7 +132,8 @@ def unigram_logprob(
     to the long tail) folds words seen fewer than min_count times into
     one OOV bucket scored at the pooled tail mass
     ``log(oov_cnt/total)`` — thresholding is what bounds the vocab in
-    production; the two 1-row scalars (total, oov) stay broadcast.
+    production; the planner broadcasts the two 1-row scalars (total,
+    oov) from their estimated size.
     """
     words = df.select(
         F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("word")
@@ -146,8 +147,8 @@ def unigram_logprob(
         )
         scored = (
             words.join(kept, "word", "left")
-            .crossJoin(F.broadcast(total))
-            .crossJoin(F.broadcast(oov))
+            .crossJoin(total)
+            .crossJoin(oov)
             .select(
                 "doc",
                 "word",
@@ -163,7 +164,7 @@ def unigram_logprob(
     else:
         scored = (
             words.join(vocab, "word")
-            .crossJoin(F.broadcast(total))
+            .crossJoin(total)
             .select(
                 "doc",
                 "word",
@@ -631,7 +632,7 @@ def bigram_logprob(
     scored = (
         doc_bi.join(model, "bg", "left")
         .join(uni, F.substring_index(doc_bi["bg"], " ", -1) == uni["w2"], "left")
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select(
             "doc",
             "bg",

@@ -102,7 +102,7 @@ def bm25_scores(
             for i in range(len(terms))
         ],
     )
-    scored = per.crossJoin(F.broadcast(stats))
+    scored = per.crossJoin(stats)
 
     def idf(i: int):
         return F.round(

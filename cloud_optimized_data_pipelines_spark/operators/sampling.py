@@ -156,10 +156,11 @@ def token_budget_mix(
        order == (bucket, rank) order;
     2. aggregate per-(stratum, bucket) token sums — map-side partial
        agg, output is metadata-sized (strata x 16^bucket_hex rows);
-    3. prefix-sum that tiny summary per stratum and broadcast-join the
-       per-bucket base back; buckets whose base already exceeds the
-       budget are dropped BEFORE the shuffle (most of a large corpus
-       never moves);
+    3. prefix-sum that summary per stratum and join the per-bucket base
+       back on (stratum, bucket) — the keys of the window below, so a
+       shuffled join shares its partitioning; buckets whose base
+       already exceeds the budget are dropped before the window (most
+       of a large corpus never reaches it);
     4. in-bucket cumsum with ``Window.partitionBy(strata, bucket)`` —
        parallelism is strata x 16^bucket_hex tasks, each seeing
        ~1/16^bucket_hex of a stratum; ``cum_tokens`` = bucket base +
@@ -197,7 +198,7 @@ def token_budget_mix(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        ranked.join(F.broadcast(bases), [strata, "_bkt"])
+        ranked.join(bases, [strata, "_bkt"])
         .withColumn("_budget", budget)
         .filter(F.col("_base") < F.col("_budget"))
         .withColumn(
@@ -249,7 +250,7 @@ def temperature_mix(
     )
     tot = weighted.agg(F.sum("w_fixed").cast("long").alias("_tot"))
     return (
-        weighted.crossJoin(F.broadcast(tot))
+        weighted.crossJoin(tot)
         .withColumn(
             "target_frac",
             F.col("w_fixed").cast("double") / F.col("_tot").cast("double"),
@@ -287,7 +288,7 @@ def perplexity_buckets(
             for i, f in enumerate(fractions)
         ]
     )
-    out = df.crossJoin(F.broadcast(cuts))
+    out = df.crossJoin(cuts)
     label: Column = F.lit(labels[0])
     for i in range(len(fractions)):
         label = F.when(
@@ -552,8 +553,8 @@ def dsir_importance(
     )
     scored = (
         model_join
-        .crossJoin(F.broadcast(tgt_tot))
-        .crossJoin(F.broadcast(raw_tot))
+        .crossJoin(tgt_tot)
+        .crossJoin(raw_tot)
         .select(
             "doc",
             "b",
@@ -692,8 +693,8 @@ def doremi_weights(
     # per-(domain, word) KL term: (c_dw/N_d) * (rounded ln diff)
     terms = (
         dom_counts.join(corpus_counts, "word")
-        .join(F.broadcast(dom_totals), "domain")
-        .crossJoin(F.broadcast(grand))
+        .join(dom_totals, "domain")
+        .crossJoin(grand)
         .select(
             "domain",
             "word",
@@ -754,7 +755,7 @@ def doremi_weights(
     )
     c = float(smoothing)
     return (
-        tilted.crossJoin(F.broadcast(denom))
+        tilted.crossJoin(denom)
         .select(
             "domain",
             "n_tokens",

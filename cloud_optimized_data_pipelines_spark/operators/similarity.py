@@ -263,7 +263,7 @@ def ivf_probe_fixed(
         .select("cid")
     )
     return (
-        assigned.join(F.broadcast(probe), "cid")
+        assigned.join(probe, "cid")
         .crossJoin(F.broadcast(q))
         .withColumn(
             "_cos",
@@ -630,7 +630,9 @@ def knn_join(
 
     ``num_dims`` switches to sign-bucket blocking: only corpus rows in
     the query's bucket are scored (candidates ~|corpus| / 2^d per
-    query — the ANN path; recall trade as in :func:`ann_topk`).
+    query — the ANN path; recall trade as in :func:`ann_topk`).  The
+    bucket is a hashable join key, so that form carries no broadcast
+    hint and the planner sizes the query side.
 
     Output: (query_id, id, cos, rank) with rank 1..k per query.
     """
@@ -661,7 +663,7 @@ def knn_join(
         ),
     )
     if num_dims:
-        scored = c.join(F.broadcast(q), F.col("_cb") == F.col("_qb"))
+        scored = c.join(q, F.col("_cb") == F.col("_qb"))
     else:
         scored = c.crossJoin(F.broadcast(q))
     cos = safe_cos_div(
@@ -1369,7 +1371,7 @@ def pq_refine_topk(
         df, vec_col, query, codebooks, k=refine, id_col=id_col,
         code_col=None, round_digits=round_digits,
     ).select(id_col)
-    cand = df.join(F.broadcast(short), id_col)
+    cand = df.join(short, id_col)
     dist = _sq_dist(F.col(vec_col), literal_vector(query))
     if round_digits is not None:
         dist = F.round(dist, round_digits)
@@ -1458,16 +1460,19 @@ def _project_signs_udf(signs: list[list[float]], scale: float):
     return proj
 
 
-def _map_vectors(col, width: int, kernel, fold_valid=None):
+def _map_vectors(col, width: int, kernel, fold_valid=None, slices=1):
     """Run a batch ``kernel`` (float64 matrix of ``width`` columns ->
     one value, or one row of values, per vector) over an Arrow list
     array of vectors, and null out what the declarative fold yields
-    as null: every output of a null vector, and those of a vector
-    whose length is not ``width`` unless ``fold_valid(length)`` marks
-    them (a bool per output; the vector is zero-padded or cut to
-    ``width`` for the kernel).  Well-formed batches reshape the values
-    buffer straight into the kernel; only rows of another length take
-    the per-row path.  Arrow output keeps NaN distinct from null."""
+    as null: every output of a null vector, those of a vector whose
+    length is not ``width`` unless ``fold_valid(length)`` marks them
+    (a bool per output; the vector is zero-padded or cut to ``width``
+    for the kernel), and every output that reads a null element.  The
+    kernel's outputs read ``slices`` equal slices of the vector, output
+    j slice j; with one slice every output reads the whole vector.
+    Well-formed batches reshape the values buffer straight into the
+    kernel; only rows of another length take the per-row path.  Arrow
+    output keeps NaN distinct from null."""
     import numpy as np
     import pyarrow.compute as pc
 
@@ -1476,22 +1481,25 @@ def _map_vectors(col, width: int, kernel, fold_valid=None):
     ok = lens == width
 
     def matrix(vectors):
+        values = vectors.flatten()
         return (
-            vectors.flatten()
-            .to_numpy(zero_copy_only=False)
+            values.to_numpy(zero_copy_only=False)
             .astype(np.float64)
-            .reshape(-1, width)
+            .reshape(-1, width),
+            values.is_null().to_numpy(zero_copy_only=False).reshape(-1, width),
         )
 
     odd = np.flatnonzero((lens >= 0) & ~ok)
     if ok.all():
-        X = matrix(col)
+        X, gaps = matrix(col)
     else:
         X = np.zeros((n, width), dtype=np.float64)
-        X[ok] = matrix(col.filter(pa.array(ok)))
+        gaps = np.zeros((n, width), dtype=bool)
+        X[ok], gaps[ok] = matrix(col.filter(pa.array(ok)))
         for i in odd:
-            v = col[int(i)].values.to_numpy(zero_copy_only=False)[:width]
-            X[i, : len(v)] = v
+            v = col[int(i)].values[:width]
+            X[i, : len(v)] = v.to_numpy(zero_copy_only=False)
+            gaps[i, : len(v)] = v.is_null().to_numpy(zero_copy_only=False)
     with np.errstate(all="ignore"):  # IEEE results, as in the fold
         vals = kernel(X)
     null = np.zeros(vals.shape, dtype=bool)
@@ -1499,6 +1507,8 @@ def _map_vectors(col, width: int, kernel, fold_valid=None):
     if fold_valid is not None:
         for i in odd:
             null[i] = ~fold_valid(int(lens[i]))
+    gaps = gaps.reshape(n, slices, -1).any(axis=2)
+    null |= gaps if vals.ndim == 2 else gaps[:, 0]
     if vals.ndim == 1:
         return pa.array(vals, mask=null)
     k = vals.shape[1]
@@ -1683,8 +1693,8 @@ def _pq_codes_udf(codebooks: list[list[list[float]]]):
     ~10-60x its throughput — Catalyst higher-order lambdas run
     interpreted, and PQ encode is m*k folds per row.  As in the fold,
     which slices the vector per subspace, a subspace the vector does
-    not fully cover gets a null code and dimensions past ``m*subdim``
-    are ignored."""
+    not fully cover or that holds a null element gets a null code, and
+    dimensions past ``m*subdim`` are ignored."""
     import numpy as np
     from pyspark.sql.functions import arrow_udf
 
@@ -1704,7 +1714,7 @@ def _pq_codes_udf(codebooks: list[list[list[float]]]):
     @arrow_udf("array<int>")
     def codes(col: pa.Array) -> pa.Array:
         return _map_vectors(
-            col, m_sub * sub, encode, lambda n: ends <= n
+            col, m_sub * sub, encode, lambda n: ends <= n, m_sub
         )
 
     return codes

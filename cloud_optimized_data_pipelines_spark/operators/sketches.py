@@ -112,13 +112,14 @@ def cms_probe(
     sketch: DataFrame, keys: DataFrame, key: str, depth: int = 4, width: int = 512
 ) -> DataFrame:
     """Estimate each key's frequency: min over the depth rows of that
-    key's counter cell.  ``keys`` is small (the candidate set) so the
-    probe side broadcasts; never over-counts less than truth."""
+    key's counter cell.  ``keys`` is the candidate set; when it is a
+    ``limit`` its size estimate is constant and the planner broadcasts
+    the probe side.  Never over-counts less than truth."""
     i = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("i")
     probes = keys.select("*", i).withColumn(
         "bucket", portable_hash32(key, salt=F.col("i")) % width
     )
-    joined = sketch.join(F.broadcast(probes), ["i", "bucket"])
+    joined = sketch.join(probes, ["i", "bucket"])
     group_cols = [c for c in keys.columns]
     return joined.groupBy(*group_cols).agg(
         F.min("c").cast("long").alias("cms_estimate")

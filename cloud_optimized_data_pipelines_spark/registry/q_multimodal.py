@@ -226,7 +226,7 @@ def k1_cogify_real_bytes_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "cog_md5",
@@ -260,7 +260,7 @@ def k1_cogify_szip_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "cog_md5",
@@ -410,7 +410,7 @@ def stac_item_raster_q(spark, sf_dir):
         F.lit(None).cast("string").alias("asset_media_type"),
     )
     enriched = attach_raster_metadata(
-        events.join(F.broadcast(probe), "variant")
+        events.join(probe, "variant")
     )
     items = build_items(enriched)
     props = F.col("item.properties")
@@ -872,7 +872,7 @@ def multimodal_webdataset_samples_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe_full), "variant").select(
+    return docs.join(probe_full, "variant").select(
         "doc_id",
         "variant",
         "shard_md5",

@@ -229,7 +229,7 @@ def multimodal_wav_features_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "wav_md5",
@@ -458,7 +458,7 @@ def multimodal_wav_adpcm_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "wav_md5",
@@ -542,7 +542,7 @@ def multimodal_wav_ms_adpcm_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "wav_md5",
@@ -574,7 +574,7 @@ def multimodal_wav_g711_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "wav_md5",
@@ -605,7 +605,7 @@ def multimodal_wav_downsample_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id", "variant", "down_md5", "down_sum",
         "n_frames", "channels", "sample_rate", "bits",
     )
@@ -728,7 +728,7 @@ def multimodal_mp3_features_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "mp3_md5",
@@ -898,7 +898,7 @@ def multimodal_mp3_lsf_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 10).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "mp3_md5",
@@ -1029,7 +1029,7 @@ def multimodal_mp2_features_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 16).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "mp2_md5",
@@ -1161,27 +1161,25 @@ def multimodal_audio_compressed_near_dup_q(spark, sf_dir):
     meta = probe.select("variant", "mp2_md5")
     return (
         pairs.join(
-            F.broadcast(meta.select(
+            meta.select(
                 F.col("variant").alias("id_a"),
                 F.col("mp2_md5").alias("md5_a"),
-            )),
+            ),
             "id_a",
         )
         .join(
-            F.broadcast(meta.select(
+            meta.select(
                 F.col("variant").alias("id_b"),
                 F.col("mp2_md5").alias("md5_b"),
-            )),
+            ),
             "id_b",
         )
         .join(
-            F.broadcast(cnt.select(
-                F.col("v").alias("id_a"), F.col("n").alias("docs_a"))),
+            cnt.select(F.col("v").alias("id_a"), F.col("n").alias("docs_a")),
             "id_a",
         )
         .join(
-            F.broadcast(cnt.select(
-                F.col("v").alias("id_b"), F.col("n").alias("docs_b"))),
+            cnt.select(F.col("v").alias("id_b"), F.col("n").alias("docs_b")),
             "id_b",
         )
         .select(
@@ -1285,7 +1283,7 @@ def multimodal_flac_features_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "flac_md5",
@@ -1424,27 +1422,25 @@ def multimodal_mp3_near_dup_q(spark, sf_dir):
     meta = probe.select("variant", "mp3_md5")
     return (
         pairs.join(
-            F.broadcast(meta.select(
+            meta.select(
                 F.col("variant").alias("id_a"),
                 F.col("mp3_md5").alias("md5_a"),
-            )),
+            ),
             "id_a",
         )
         .join(
-            F.broadcast(meta.select(
+            meta.select(
                 F.col("variant").alias("id_b"),
                 F.col("mp3_md5").alias("md5_b"),
-            )),
+            ),
             "id_b",
         )
         .join(
-            F.broadcast(cnt.select(
-                F.col("v").alias("id_a"), F.col("n").alias("docs_a"))),
+            cnt.select(F.col("v").alias("id_a"), F.col("n").alias("docs_a")),
             "id_a",
         )
         .join(
-            F.broadcast(cnt.select(
-                F.col("v").alias("id_b"), F.col("n").alias("docs_b"))),
+            cnt.select(F.col("v").alias("id_b"), F.col("n").alias("docs_b")),
             "id_b",
         )
         .select(
@@ -1598,7 +1594,7 @@ def multimodal_mp3_big_tables_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 10).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "mp3_md5",
@@ -1710,7 +1706,7 @@ def multimodal_adts_stream_info_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id", "variant", "adts_md5", "n_frames", "total_samples",
         "duration_ms", "sample_rate", "channels", "profile",
         "mpeg_version", "is_vbr", "stream_bytes", "id3v2_bytes",

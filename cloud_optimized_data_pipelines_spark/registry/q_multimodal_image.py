@@ -236,7 +236,7 @@ def multimodal_png_features_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "png_md5",
@@ -324,7 +324,7 @@ def multimodal_png_palette_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "png_md5",
@@ -415,7 +415,7 @@ def multimodal_gif_frames_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "gif_md5",
@@ -504,7 +504,7 @@ def multimodal_gif_interlaced_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "gif_md5",
@@ -633,7 +633,7 @@ def multimodal_gif_composite_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "gif_md5",
@@ -713,7 +713,7 @@ def multimodal_jpeg_lossless_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "jpeg_md5",
@@ -790,7 +790,7 @@ def multimodal_jpeg_12bit_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "jpeg_md5",
@@ -931,7 +931,7 @@ def multimodal_jpeg_arithmetic_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "jpeg_md5",
@@ -1027,7 +1027,7 @@ def multimodal_jpeg_arith_progressive_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "jpeg_md5",
@@ -1062,7 +1062,7 @@ def multimodal_jpeg_features_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "jpeg_md5",
@@ -1146,7 +1146,7 @@ def multimodal_jpeg_subsampled_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "jpeg_md5",
@@ -1234,7 +1234,7 @@ def multimodal_jpeg_progressive_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "jpeg_md5",
@@ -1326,7 +1326,7 @@ def multimodal_png_resize_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id", "variant", "resized_md5", "rx_sum",
         "width", "height", "channels", "bit_depth",
     )
@@ -1478,25 +1478,23 @@ def multimodal_image_near_dup_adaptive_q(spark, sf_dir):
     meta = probe.select("variant", "png_md5")
     return (
         pairs.join(
-            F.broadcast(meta.select(
+            meta.select(
                 F.col("variant").alias("id_a"), F.col("png_md5").alias("md5_a")
-            )),
+            ),
             "id_a",
         )
         .join(
-            F.broadcast(meta.select(
+            meta.select(
                 F.col("variant").alias("id_b"), F.col("png_md5").alias("md5_b")
-            )),
+            ),
             "id_b",
         )
         .join(
-            F.broadcast(cnt.select(
-                F.col("v").alias("id_a"), F.col("n").alias("docs_a"))),
+            cnt.select(F.col("v").alias("id_a"), F.col("n").alias("docs_a")),
             "id_a",
         )
         .join(
-            F.broadcast(cnt.select(
-                F.col("v").alias("id_b"), F.col("n").alias("docs_b"))),
+            cnt.select(F.col("v").alias("id_b"), F.col("n").alias("docs_b")),
             "id_b",
         )
         .select(

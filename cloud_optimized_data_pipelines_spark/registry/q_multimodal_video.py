@@ -240,7 +240,7 @@ def multimodal_avi_frames_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "avi_md5",
@@ -333,7 +333,7 @@ def multimodal_mp4_container_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id", "variant", "mp4_md5", "brand", "n_samples",
         "width", "height", "duration", "sample_bytes_sum", "payload_sum",
     )
@@ -403,7 +403,7 @@ def multimodal_mpeg_stream_info_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id", "variant", "mpeg_md5", "n_frames", "total_samples",
         "duration_ms", "is_vbr", "n_bitrates", "min_bitrate",
         "max_bitrate", "stream_bytes",
@@ -545,27 +545,25 @@ def multimodal_video_near_dup_adaptive_q(spark, sf_dir):
     meta = probe.select("variant", "avi_md5")
     return (
         pairs.join(
-            F.broadcast(meta.select(
+            meta.select(
                 F.col("variant").alias("id_a"),
                 F.col("avi_md5").alias("md5_a"),
-            )),
+            ),
             "id_a",
         )
         .join(
-            F.broadcast(meta.select(
+            meta.select(
                 F.col("variant").alias("id_b"),
                 F.col("avi_md5").alias("md5_b"),
-            )),
+            ),
             "id_b",
         )
         .join(
-            F.broadcast(cnt.select(
-                F.col("v").alias("id_a"), F.col("n").alias("docs_a"))),
+            cnt.select(F.col("v").alias("id_a"), F.col("n").alias("docs_a")),
             "id_a",
         )
         .join(
-            F.broadcast(cnt.select(
-                F.col("v").alias("id_b"), F.col("n").alias("docs_b"))),
+            cnt.select(F.col("v").alias("id_b"), F.col("n").alias("docs_b")),
             "id_b",
         )
         .select(

@@ -334,7 +334,7 @@ def j4_collection(spark, sf_dir):
     return (
         t["documents"]
         .select("doc_id", F.col("source").alias("collection"), "source")
-        .join(F.broadcast(coll), "source", "left")
+        .join(coll, "source", "left")
         .select("doc_id", "collection", "time_density", "is_periodic", "n_docs")
     )
 

@@ -693,7 +693,7 @@ def pipeline_crawl_ingest_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe_full), "variant").select(
+    return docs.join(probe_full, "variant").select(
         "doc_id",
         "variant",
         "n_responses",

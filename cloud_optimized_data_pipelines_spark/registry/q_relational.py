@@ -158,7 +158,7 @@ def q18(spark, sf_dir):
     )
     return (
         qty.join(t["orders"], qty.l_orderkey == t["orders"].o_orderkey)
-        .join(F.broadcast(t["customer"]), F.col("o_custkey") == F.col("c_custkey"))
+        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
         .select(
             "c_custkey",
             "o_orderkey",
@@ -274,17 +274,17 @@ def q2(spark, sf_dir):
     eu_supp = (
         t["supplier"]
         .join(
-            F.broadcast(t["nation"]),
+            t["nation"],
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(
-            F.broadcast(t["region"].filter(F.col("r_name") == "EUROPE")),
+            t["region"].filter(F.col("r_name") == "EUROPE"),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
     eu_ps = ps.join(
-        F.broadcast(eu_supp), F.col("l_suppkey") == F.col("s_suppkey")
+        eu_supp, F.col("l_suppkey") == F.col("s_suppkey")
     )
     w = Window.partitionBy("l_partkey")
     best = eu_ps.withColumn(
@@ -294,7 +294,7 @@ def q2(spark, sf_dir):
         F.col("p_size").between(10, 30) & (F.col("p_type") == "STANDARD")
     )
     return (
-        best.join(F.broadcast(parts), F.col("l_partkey") == F.col("p_partkey"))
+        best.join(parts, F.col("l_partkey") == F.col("p_partkey"))
         .select(
             "s_acctbal", "s_name", "n_name", "p_partkey", "p_type",
             F.col("ps_supplycost").cast("double").alias("ps_supplycost"),
@@ -576,7 +576,7 @@ def q17(spark, sf_dir):
         .select("p_partkey")
     )
     li = t["lineitem"].join(
-        F.broadcast(parts), F.col("l_partkey") == F.col("p_partkey")
+        parts, F.col("l_partkey") == F.col("p_partkey")
     ).select("l_partkey", "l_quantity", "l_extendedprice")
     w = Window.partitionBy("l_partkey")
     return (
@@ -654,7 +654,7 @@ def q20(spark, sf_dir):
     promo = t["part"].filter(F.col("p_type") == "PROMO").select("p_partkey")
     g = (
         t["lineitem"]
-        .join(F.broadcast(promo), F.col("l_partkey") == F.col("p_partkey"))
+        .join(promo, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_suppkey", "l_partkey")
         .agg(
             F.sum(
@@ -742,7 +742,7 @@ def q21(spark, sf_dir):
     )
     return (
         flagged.join(
-            F.broadcast(t["supplier"]),
+            t["supplier"],
             F.col("l_suppkey") == F.col("s_suppkey"),
         )
         .groupBy("s_name")

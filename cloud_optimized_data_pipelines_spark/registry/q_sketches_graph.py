@@ -107,7 +107,7 @@ def sketch_kmv_uniques_q(spark, sf_dir):
     )
     return merged.select(
         "event_type", SK.kmv_estimate("kmv", k=64).alias("est_uniques")
-    ).join(F.broadcast(exact), "event_type")
+    ).join(exact, "event_type")
 
 
 _CMS_HEAVY = """

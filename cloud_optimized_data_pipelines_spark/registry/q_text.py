@@ -310,7 +310,7 @@ def text_warc_charsets_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(agg), "variant").select(
+    return docs.join(agg, "variant").select(
         "doc_id", "variant", "n_records", "charsets", "char_sum",
         "bodies_md5",
     )
@@ -579,7 +579,7 @@ def text_warc_records_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe_full), "variant").select(
+    return docs.join(probe_full, "variant").select(
         "doc_id",
         "variant",
         "warc_md5",
@@ -683,7 +683,7 @@ def text_zstd_shard_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 8).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "zst_md5",
@@ -794,7 +794,7 @@ def text_compressed_corpus_q(spark, sf_dir):
     docs = t["documents"].select(
         "doc_id", (F.col("doc_id") % 10).alias("variant")
     )
-    return docs.join(F.broadcast(probe), "variant").select(
+    return docs.join(probe, "variant").select(
         "doc_id",
         "variant",
         "codec",

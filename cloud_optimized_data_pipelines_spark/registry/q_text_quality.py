@@ -561,8 +561,8 @@ def text_decontaminate_q(spark, sf_dir):
     """Eval-set decontamination (operators/decontaminate.py): train
     docs (md5 bucket < 90) are flagged when they share any word 5-gram
     with the held-out test split (bucket >= 95) — the GPT-3/Pile
-    contamination control.  The test-side shingle set is broadcast; the
-    train side pays one scan + a doc-keyed count.  Same deterministic
+    contamination control.  The planner broadcasts the test-side shingle
+    set at this size; the train side pays one scan + a doc-keyed count.  Same deterministic
     split rule as text_train_val_split."""
     from cloud_optimized_data_pipelines_spark.operators.decontaminate import (
         contamination_flags,

@@ -59,11 +59,11 @@ def read_collections(spark: SparkSession, path: str) -> DataFrame:
 
 
 def with_config(events: DataFrame, config: DataFrame) -> DataFrame:
-    """J1: broadcast config lookup join on collection.
+    """J1: config lookup join on collection.
 
-    The config table is tiny (one row per collection) — always a
-    broadcast-hash join, never a shuffle of the 100 TB fact side.
+    The config table is small (one row per collection), so the planner
+    broadcasts it from its size estimate and the fact side is not
+    shuffled; a config table past the broadcast threshold is shuffled
+    instead of forced through the driver.
     """
-    from pyspark.sql.functions import broadcast
-
-    return events.join(broadcast(config), "collection", "left")
+    return events.join(config, "collection", "left")

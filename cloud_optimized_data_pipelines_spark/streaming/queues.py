@@ -254,7 +254,7 @@ def watermark_replay(
 
     Scale shape: one groupBy(batch) for per-batch max times
     (metadata-sized), a cumulative-max window over THAT metadata, a
-    broadcast join back, then the windowed aggregation — no
+    join back on the batch id, then the windowed aggregation — no
     corpus-sized ordered window.  Output: (window_us, key, accepted,
     dropped) with window_us the tumbling-window start in epoch
     micros."""
@@ -274,7 +274,7 @@ def watermark_replay(
         .alias("_wm_prev"),
     )
     w_us = window_seconds * 1_000_000
-    j = e.join(F.broadcast(wm), "_b").select(
+    j = e.join(wm, "_b").select(
         F.expr(f"(_us div {w_us}) * {w_us}").alias("window_us"),
         F.col("_k"),
         (

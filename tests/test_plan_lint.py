@@ -93,13 +93,38 @@ NESTED_LOOP_OK = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_plan_has_no_scale_hazards(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+# A second broadcast threshold just above the largest side whose size
+# estimate does not grow with the input (1,600 B: the limit(100)
+# shortlist of similarity_pq_refine).  Under it, a crossJoin whose
+# small side is neither hinted nor sized as constant plans a
+# CartesianProduct, which AQE cannot repair.
+SMALL_THRESHOLD = "2KB"
 
-    if name not in NESTED_LOOP_OK:
+
+@pytest.mark.parametrize(
+    "name, threshold",
+    [pytest.param(n, None, id=n) for n in sorted(QUERIES)]
+    + [
+        pytest.param(n, SMALL_THRESHOLD, id=f"{n}-{SMALL_THRESHOLD}")
+        for n in sorted(QUERIES)
+    ],
+)
+def test_plan_has_no_scale_hazards(spark, sf_dir, name, threshold):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if threshold is not None:
+        spark.conf.set(key, threshold)
+    try:
+        df = QUERIES[name](spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+
+    # under the small threshold NESTED_LOOP_OK does not excuse a
+    # CartesianProduct: a 1-row or hinted side stays a nested loop
+    if threshold is not None or name not in NESTED_LOOP_OK:
         assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+    if name not in NESTED_LOOP_OK:
         assert (
             "BroadcastNestedLoopJoin" not in plan
         ), f"{name}: nested-loop join"
@@ -243,9 +268,11 @@ def test_coverage_ledger_tolerates_future_round(tmp_path):
 
 
 # parameters that pick a mechanism instead of a result: how a pin is
-# made is the session's choice (``batching.pin``), not the caller's
+# made is the session's choice (``batching.pin``), and whether a join
+# broadcasts is the planner's (``BROADCAST_HINTS``), not the caller's
 MECHANISM_SWITCHES = (
-    "materialize", "checkpoint", "checkpoint_dir", "checkpoint_every"
+    "materialize", "checkpoint", "checkpoint_dir", "checkpoint_every",
+    "broadcast_test",
 )
 
 
@@ -352,3 +379,81 @@ def test_only_the_pin_helper_pins():
     helper = access.findall(inspect.getsource(pin) + inspect.getsource(pins))
     assert helper == [".checkpoint(", "localCheckpoint(", "unpersist("]
     assert found == {"batching.py": helper}, found
+
+
+# every broadcast join hint in the package: "<path>::<function>" ->
+# (number of hints, the bound on the hinted side).  A hint belongs here
+# only where the planner cannot size the small side itself and, without
+# the hint, would plan a CartesianProduct or shuffle a corpus-sized
+# side; everywhere else the optimizer's estimate decides.
+BROADCAST_HINTS = {
+    "operators/decontaminate.py::embedding_contamination_flags": (
+        1, "the eval set's embeddings: a cosine join with no equi-key",
+    ),
+    "operators/sampling.py::dsir_importance": (
+        3, "each bucket model has <= buckets rows",
+    ),
+    "operators/similarity.py::ann_topk_multiprobe": (
+        1, "the query row x (num_dims + 1) probe buckets",
+    ),
+    "operators/similarity.py::ann_topk_by_id": (
+        1, "the query row (one id); its filter is sized as the corpus",
+    ),
+    "operators/similarity.py::ivf_probe_fixed": (
+        3, "k_lists centroids and the query row, each a crossJoin side",
+    ),
+    "operators/similarity.py::_semantic_assign": (
+        1, "k_lists centroids, a crossJoin side",
+    ),
+    "operators/similarity.py::knn_join": (
+        1, "the query batch, a crossJoin side",
+    ),
+    "operators/similarity.py::embedding_outliers": (
+        1, "one stats row per vector component",
+    ),
+    "operators/sketches.py::bloom_contains": (
+        1, "<= m_bits/63 filter words",
+    ),
+    "registry/q_similarity.py::quantized_topk_q": (
+        1, "the query row (vec_id 0), a crossJoin side",
+    ),
+    "registry/q_similarity.py::ann_topk_q": (
+        1, "the query row (vec_id 0), a crossJoin side",
+    ),
+}
+
+
+def test_only_listed_sides_are_broadcast():
+    """Each broadcast hint in the package is listed in
+    ``BROADCAST_HINTS`` with the bound of its side, so a new hint must
+    state one.  ``SparkContext.broadcast`` ships a Python value to the
+    workers, not a join hint, and is not counted."""
+    import ast
+    import pathlib
+
+    import cloud_optimized_data_pipelines_spark as pkg
+
+    def is_hint(func):
+        if isinstance(func, ast.Name):
+            return func.id == "broadcast"
+        return (
+            isinstance(func, ast.Attribute)
+            and func.attr == "broadcast"
+            and not ast.unparse(func.value).endswith(("sparkContext", "sc"))
+        )
+
+    found = {}
+
+    def visit(node, where):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            where = f"{where.split('::')[0]}::{node.name}"
+        if isinstance(node, ast.Call) and is_hint(node.func):
+            found[where] = found.get(where, 0) + 1
+        for child in ast.iter_child_nodes(node):
+            visit(child, where)
+
+    root = pathlib.Path(pkg.__file__).parent
+    for p in sorted(root.rglob("*.py")):
+        visit(ast.parse(p.read_text()), str(p.relative_to(root)))
+    assert all(bound for _, bound in BROADCAST_HINTS.values())
+    assert found == {k: n for k, (n, _) in BROADCAST_HINTS.items()}, found

@@ -1068,7 +1068,7 @@ def test_numpy_vector_udfs_null_rows_match_fold(spark, sf_dir):
 
 _EDGE = [float("nan"), float("inf"), float("-inf"), 0.0, -0.0]
 _elem = st.one_of(
-    st.floats(-1e3, 1e3, allow_nan=False), st.sampled_from(_EDGE)
+    st.floats(-1e3, 1e3, allow_nan=False), st.sampled_from(_EDGE), st.none()
 )
 _vector = st.one_of(
     st.none(),
@@ -1093,9 +1093,9 @@ _edge_text = st.one_of(
 )
 def test_arrow_udfs_match_fold_reference_on_edge_input(spark, vectors, texts):
     """The production Arrow paths give every row the fold reference's
-    value — null, NaN, ±inf, empty, short and long vectors alike, with
-    one partition or with several (some holding zero rows) — and the
-    fast simhash fingerprints equal the fold expressions on null, empty
+    value — null vectors and null elements, NaN, ±inf, empty, short
+    and long vectors alike, with one partition or with several (some
+    holding zero rows) — and the fast simhash fingerprints equal the fold expressions on null, empty
     and whitespace-only text."""
     import fold_reference as R
 
