@@ -9,20 +9,24 @@ functions (``filter``/``transform``/``aggregate``/``array_sort``) are
 token, inside an otherwise codegen'd stage.  Language ID and the
 Gopher word statistics, which per document need a tokenize, a count
 per distinct word and a stopword lookup, therefore run as ONE Arrow
-kernel (:func:`text_stats`) that sends each text to Python once.
+kernel (:func:`text_stats`) that sends each text to Python once; so
+do the MinHash LSH bands (:func:`lsh_bands`), which per document need
+the distinct shingles, one digest each and a minimum per hash.
 
 Hashing note: every content hash on this surface is ``md5`` of a UTF-8
 string.  md5 is bit-identical across Spark, DuckDB, and Python, which is
 what makes MinHash signatures and fingerprints oracle-checkable; the
-"i-th hash function" of MinHash is md5 with an index prefix, and min()
-over hex strings is a valid uniform order.
+"i-th hash function" of MinHash is ``h1 + i*h2`` over two 56-bit
+halves of one md5 digest per shingle (double hashing).
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 from collections import Counter
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -252,40 +256,78 @@ def doc_fingerprint(text: Column | str, n: int = 3) -> Column:
     return F.array_min(F.transform(word_shingles(text, n), F.md5))
 
 
-def minhash_signature(text: Column | str, num_hashes: int = 16, n: int = 3) -> Column:
-    """ARRAY<STRING> MinHash signature.
+def lsh_bands_kernel(num_hashes: int = 16, num_bands: int = 4, n: int = 3):
+    """The per-batch function of :func:`lsh_bands`: UTF-8 texts (bytes
+    or None) -> the flat list of hex band buckets, ``num_bands`` per
+    text in text order.
 
-    Hash family: ``md5(i || ':' || shingle)`` for i in [0, num_hashes);
-    the signature component is the minimum hex digest.  Bit-identical
-    across engines (oracle-checkable), uniform enough for Jaccard
-    estimation, and pure codegen — the 100 TB path never shuffles until
-    the LSH band join.
-    """
-    def build(shingles: Column) -> Column:
-        def component(i: int) -> Column:
-            # NB: single-arg lambda — a two-arg lambda would make Spark
-            # bind the second parameter to the array index
-            prefix = f"{i}:"
-            return F.array_min(
-                F.transform(shingles, lambda s: F.md5(F.concat(F.lit(prefix), s)))
-            )
+    Per text: the JVM tokens (``_JVM_TOKEN`` on the UTF-8 bytes; its
+    six separators are ASCII, which never occur inside a multi-byte
+    sequence, so these are the encodings of the string tokens), the
+    distinct word n-grams joined by single spaces, or the whole token
+    join when there are fewer than ``n`` tokens (a null or token-less
+    text gives the one shingle ``""``), then ONE md5 digest per
+    shingle.  ``h1`` and ``h2`` are digest bytes 0-6 and 8-14 read
+    big-endian (Spark's ``conv(substring(md5, 1|17, 14), 16, 10)``);
+    signature ``i`` is ``min(h1 + i*h2)`` and bucket ``b`` is the md5
+    hex of the decimal signatures of band ``b`` joined by ``|``.
+    Everything it reads is bound in its closure, so the function pickles
+    by value and the Python workers need not import this package."""
+    if not 1 <= num_bands <= num_hashes <= 128:
+        # h1 + i*h2 < 2^56 * (i + 1) stays inside int64 for i < 128
+        raise ValueError(
+            f"need 1 <= num_bands <= num_hashes <= 128, got "
+            f"num_bands={num_bands}, num_hashes={num_hashes}"
+        )
+    find_tokens = re.compile(_JVM_TOKEN.pattern.encode()).findall
+    join = b" ".join
+    md5 = hashlib.md5
+    width = num_hashes // num_bands
+    spans = [(b * width, (b + 1) * width) for b in range(num_bands)]
 
-        return F.array(*[component(i) for i in range(num_hashes)])
+    def buckets(texts):
+        starts, digests = [], []
+        for text in texts:
+            toks = find_tokens(text) if text else []
+            if len(toks) >= n:
+                grams = set(map(join, zip(*[toks[j:] for j in range(n)])))
+            else:
+                grams = (join(toks),)
+            starts.append(len(digests))
+            digests += [md5(g).digest() for g in grams]
+        if not starts:
+            return []
+        halves = np.frombuffer(b"".join(digests), dtype=">u8").reshape(-1, 2)
+        h1 = (halves[:, 0] >> 8).astype(np.int64)
+        h2 = (halves[:, 1] >> 8).astype(np.int64)
+        sig = np.empty((len(starts), num_hashes), dtype=np.int64)
+        for i in range(num_hashes):
+            sig[:, i] = np.minimum.reduceat(h1, starts)
+            h1 += h2
+        return [
+            md5("|".join(map(str, row[lo:hi])).encode()).hexdigest()
+            for row in sig.tolist()
+            for lo, hi in spans
+        ]
 
-    # let-bound: the shingle array is built once, not once per hash
-    return F.transform(F.array(word_shingles(text, n)), build)[0]
+    return buckets
 
 
-def lsh_band_hashes(signature: Column, num_bands: int, rows_per_band: int) -> Column:
-    """ARRAY<STRUCT<band INT, bucket STRING>> — banded LSH buckets.
+def lsh_bands(
+    text: Column | str, num_hashes: int = 16, num_bands: int = 4, n: int = 3
+) -> Column:
+    """ARRAY<STRING> of the ``num_bands`` MinHash LSH bucket hashes of
+    each document, from one Arrow kernel (:func:`lsh_bands_kernel`):
+    no shingle array, no per-shingle JVM expressions, no shuffle.  The
+    declarative form it replaced (shingle explode, one ``min`` per
+    family member, band md5) is kept in ``tests/fold_reference.py`` as
+    the parity reference."""
+    buckets = lsh_bands_kernel(num_hashes, num_bands, n)
 
-    Docs sharing any (band, bucket) pair are near-dup candidates; the
-    candidate join is an equi-join on these keys (shuffle on bucket),
-    which is the scalable alternative to the quadratic all-pairs check.
-    """
-    bands = []
-    for b in range(num_bands):
-        start = b * rows_per_band + 1
-        bucket = F.md5(F.concat_ws("|", F.slice(signature, start, rows_per_band)))
-        bands.append(F.struct(F.lit(b).alias("band"), bucket.alias("bucket")))
-    return F.array(*bands)
+    @F.arrow_udf("array<string>")
+    def bands(col: pa.Array) -> pa.Array:
+        flat = buckets(col.cast(pa.binary()).to_pylist())
+        offsets = pa.array(range(0, len(flat) + 1, num_bands), pa.int32())
+        return pa.ListArray.from_arrays(offsets, pa.array(flat, pa.string()))
+
+    return bands(_c(text))

@@ -175,9 +175,12 @@ def profile_columns(
     (repeated) + the bucket count — the profile a pipeline stores next
     to each ingested drop to diff against the previous one.
 
-    Exactness: counts/min/max are exact; only the mean is a float SUM
-    (reduction-order dependent in the last ulp), so it is rounded —
-    the same pinning as the Lloyd means.  Bucket indices are computed
+    Exactness: counts/min/max are exact, and so is the sum behind the
+    mean: each value is cast to ``decimal(38,10)`` (exact for values of
+    up to 10 decimal places; the sum must stay under 10^28) and summed
+    as a decimal, so the mean does not depend on the summation order
+    and with it the core count; the mean is then rounded half-up to
+    ``mean_round`` digits.  Bucket indices are computed
     from exact min/max with per-row deterministic arithmetic, so the
     histogram is integer-exact cross-engine.
     """
@@ -192,7 +195,7 @@ def profile_columns(
             F.round(
                 F.when(
                     F.count(col) > 0,
-                    F.sum(col) / F.count(col).cast("double"),
+                    F.sum(col.cast("decimal(38,10)")) / F.count(col),
                 ),
                 mean_round,
             ).alias(f"_mean_{c}"),

@@ -9,8 +9,9 @@ families, each picked for a different scale/recall trade-off:
   index — no quadratic blow-up; candidate pairs only for docs sharing
   at least one shingle, verified with the exact Jaccard formula.
 - **MinHash + LSH**: sub-linear near-dup at corpus scale — signatures
-  are md5-family minima computed in codegen (functions/text.py), the
-  band join is the only shuffle, verification is optional.
+  and band buckets come from one Arrow kernel per document
+  (functions/text.py::lsh_bands), the band join is the only shuffle,
+  verification is optional.
 - **SimHash**: Hamming-proximate fingerprints for near-identical text.
 
 All hashing is md5-based so every operator is bit-reproducible across
@@ -25,8 +26,7 @@ from pyspark.sql import functions as F
 
 from cloud_optimized_data_pipelines_spark.batching import pin, spread_small_scan
 from cloud_optimized_data_pipelines_spark.functions.text import (
-    lsh_band_hashes,
-    minhash_signature,
+    lsh_bands,
     tokens,
     word_shingles,
 )
@@ -760,40 +760,34 @@ def lsh_banded(
     num_bands: int = 4,
     n: int = 3,
 ) -> DataFrame:
-    """(doc, band, bucket) rows — the LSH index shared by the candidate
-    and dedup paths.
+    """(doc, band, bucket) rows — the LSH index shared by the candidate,
+    dedup and cluster paths: ``num_bands`` rows per input row, band
+    numbered from 0.
 
-    Aggregate formulation: explode shingles once, take per-doc minima of
-    the i-th hash family as 16 agg columns.  Equivalent to the per-row
-    minhash_signature expression but (a) each md5 is computed once, not
-    re-inlined per band by projection collapse (codegen blowup), and
-    (b) the plan is a plain partial-agg shuffle that scales to corpora
-    where a single document's shingle array would be huge.
+    The buckets come from one Arrow kernel per document
+    (functions/text.py::lsh_bands): tokenize, distinct word n-gram
+    shingles, one md5 per shingle, the signature minima and the band
+    md5s in one Python pass, so no shingle row and no signature
+    aggregate reaches the JVM and this index needs no shuffle (the band
+    join or window downstream is the first).  One row per input row:
+    ids are expected unique, as the callers' document ids are.
 
-    Hash family is Carter-Wegman double hashing: ONE md5 per shingle,
-    family member i is h1 + i*h2 (h1/h2 = 56-bit halves of the digest —
-    overflow-free in 64-bit for i<=15 on both engines).  Codegen CSE
-    computes the md5 once across all 16 partial_min aggregates; the old
-    md5(f"{i}:shingle") family cost 16 digests per occurrence and
-    measured 35% slower at sf0.1.
+    Hash family is double hashing, ONE md5 per distinct shingle: member
+    i is h1 + i*h2 over two 56-bit halves of the digest (see
+    :func:`~cloud_optimized_data_pipelines_spark.functions.text.lsh_bands_kernel`).
+
+    Null text: tokenizes to no tokens and so, like an empty or
+    whitespace-only text, has the single shingle ``""``: every such doc
+    gets the same buckets, and :func:`minhash_lsh_dedup` keeps only the
+    lowest id among them (the declarative form's ``concat_ws`` over a
+    null token array, kept for oracle parity).
     """
-    rows_per_band = num_hashes // num_bands
-    idx = shingle_index(df, id_col, text_col, n)
-    h1 = F.conv(F.substring(F.md5(F.col("shingle")), 1, 14), 16, 10).cast("long")
-    h2 = F.conv(F.substring(F.md5(F.col("shingle")), 17, 14), 16, 10).cast("long")
-    sig_cols = [
-        F.min(h1 + F.lit(i) * h2).alias(f"_s{i}") for i in range(num_hashes)
-    ]
-    sig = idx.groupBy("doc").agg(*sig_cols)
-    bands = []
-    for b in range(num_bands):
-        cols = [F.col(f"_s{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        bands.append(
-            F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *cols)).alias("bucket"))
-        )
-    return sig.select(
-        "doc", F.explode(F.array(*bands)).alias("bb")
-    ).select("doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    return spread_small_scan(df).select(
+        F.col(id_col).alias("doc"),
+        F.posexplode(lsh_bands(text_col, num_hashes, num_bands, n)).alias(
+            "band", "bucket"
+        ),
+    )
 
 
 def minhash_lsh_candidates(
@@ -806,8 +800,9 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """Near-dup candidate pairs via banded MinHash LSH.
 
-    Signature computation is pure codegen (no shuffle); the only wide
-    op is the equi-join on (band, bucket).  With b bands of r rows the
+    Band buckets come from one Arrow pass per document (no shuffle,
+    see :func:`lsh_banded`); the only wide op is the equi-join on
+    (band, bucket).  With b bands of r rows the
     detection threshold is ~(1/b)^(1/r); 4 bands x 4 rows ~= 0.71.
     Output: (doc_a, doc_b, n_shared_bands).
 
@@ -928,8 +923,7 @@ def cluster_labels(edges: DataFrame, max_iter: int = 60) -> DataFrame:
     id of the doc's component.
     """
     # every round reads the edge list twice; unpinned, each read would
-    # replay its upstream lineage (LSH banding: shingle explode +
-    # signature agg)
+    # replay its upstream lineage (LSH banding: the Arrow band kernel)
     edges = pin(edges)
     labels = edges.select("doc").distinct().withColumn("label", F.col("doc"))
     for _ in range(max_iter):

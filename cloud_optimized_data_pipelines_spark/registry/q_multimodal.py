@@ -480,8 +480,8 @@ def quality_column_profiles_q(spark, sf_dir):
     aggregation, one bucketing pass against the known spans).  The
     profile is what a pipeline stores per ingested drop and diffs
     against the previous one (the drift monitor's batch-side input).
-    Counts/min/max/buckets are integer-exact; only the mean is
-    rounded (float sum)."""
+    Counts/min/max/buckets are integer-exact; the mean is an exact
+    decimal sum over the count, rounded."""
     from cloud_optimized_data_pipelines_spark.operators.constraints import (
         profile_columns,
     )

@@ -24,6 +24,7 @@ from cloud_optimized_data_pipelines_spark.functions.vectors import (
     literal_vector,
 )
 from cloud_optimized_data_pipelines_spark.operators import similarity as S
+from cloud_optimized_data_pipelines_spark.operators.dedup import shingle_index
 from cloud_optimized_data_pipelines_spark.operators.sketches import (
     portable_hash32,
 )
@@ -402,3 +403,43 @@ def hamming_pairs(fingerprints: dict, max_hamming: int) -> set:
             out.add((a, b, ham))
     return out
 
+
+
+def lsh_banded(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int = 16,
+    num_bands: int = 4,
+    n: int = 3,
+) -> DataFrame:
+    """``dedup.lsh_banded`` as JVM expressions: explode the distinct
+    shingles (``dedup.shingle_index``), take per doc the minimum of
+    ``h1 + i*h2`` (``conv`` of the md5 hex halves) as one aggregate
+    column per family member, then ``md5`` each band's ``|``-joined
+    signatures."""
+    rows_per_band = num_hashes // num_bands
+    idx = shingle_index(df, id_col, text_col, n)
+    h1 = F.conv(F.substring(F.md5(F.col("shingle")), 1, 14), 16, 10).cast("long")
+    h2 = F.conv(F.substring(F.md5(F.col("shingle")), 17, 14), 16, 10).cast("long")
+    sig = idx.groupBy("doc").agg(
+        *[F.min(h1 + F.lit(i) * h2).alias(f"_s{i}") for i in range(num_hashes)]
+    )
+    bands = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.md5(
+                F.concat_ws(
+                    "|",
+                    *[
+                        F.col(f"_s{i}")
+                        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
+                    ],
+                )
+            ).alias("bucket"),
+        )
+        for b in range(num_bands)
+    ]
+    return sig.select("doc", F.explode(F.array(*bands)).alias("bb")).select(
+        "doc", "bb.band", "bb.bucket"
+    )

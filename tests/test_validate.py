@@ -125,3 +125,18 @@ def test_profile_columns_exactness_and_edges(spark):
     c = [r for r in rows if r["column"] == "c"]
     assert len(c) == 1 and c[0]["bucket"] == 0 and c[0]["bucket_n"] == 6
     assert c[0]["mean"] == 7.0 and c[0]["min"] == 7.0 == c[0]["max"]
+
+
+def test_profile_columns_mean_is_order_independent(spark):
+    """The mean comes from an exact sum: the same values summed in two
+    orders give the same mean.  As doubles, 1e15 + 0.1 - 1e15 is 0.125,
+    so one order's double sum is 1.025 and the other's 1.0."""
+    from cloud_optimized_data_pipelines_spark.operators.constraints import (
+        profile_columns,
+    )
+
+    means = set()
+    for xs in ([1e15, 0.1, -1e15, 0.2, 0.7], [0.1, 0.2, 0.7, 1e15, -1e15]):
+        df = spark.createDataFrame([(x,) for x in xs], "x double").coalesce(1)
+        means |= {r["mean"] for r in profile_columns(df, ["x"]).collect()}
+    assert means == {0.2}

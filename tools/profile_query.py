@@ -1,4 +1,4 @@
-"""Per-query phase profiler (optimization r14, guide §1).
+"""Per-query phase profiler.
 
 For each named query, separates the cost of CONSTRUCTION (the
 registry callable — includes every driver-side collect/first the
@@ -6,7 +6,10 @@ operator performs while building the result plan) from the cost of the
 final noop-sink EXECUTION, and counts the Spark jobs each phase
 launched (via a job group + statusTracker).  Construction-heavy
 queries are action-bound (iterative collects / planning); execution-
-heavy ones are compute/shuffle-bound.
+heavy ones are compute/shuffle-bound.  ``compiles`` is the number of
+Janino compilations over the three timed runs (``CodegenMetrics``, read
+in the driver JVM, no Spark job): after the warm-up it should be 0, and
+a query that keeps compiling is overflowing the codegen cache.
 
 Usage: python tools/profile_query.py [sf_dir] query [query ...]
 """
@@ -35,9 +38,13 @@ def main() -> None:
     load_tables(spark, sf_dir)
     spark.sql("SELECT count(*) FROM lineitem").collect()
     tracker = spark.sparkContext.statusTracker()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
 
     print(f"{'query':42s} {'constr_s':>9s} {'jobs':>5s} {'write_s':>9s} "
-          f"{'jobs':>5s} {'total_s':>9s}")
+          f"{'jobs':>5s} {'total_s':>9s} {'compiles':>8s}")
     for name in args:
         if name not in QUERIES:
             print(f"{name}: NOT REGISTERED")
@@ -46,6 +53,7 @@ def main() -> None:
         QUERIES[name](spark, sf_dir).write.format("noop").mode(
             "overwrite").save()
         best = None
+        c0 = compiles()
         for rep in range(3):
             spark.sparkContext.setJobGroup(f"c-{name}-{rep}", name)
             t0 = time.perf_counter()
@@ -60,7 +68,7 @@ def main() -> None:
             if best is None or row[4] < best[4]:
                 best = row
         print(f"{name:42s} {best[0]:9.3f} {best[1]:5d} {best[2]:9.3f} "
-              f"{best[3]:5d} {best[4]:9.3f}")
+              f"{best[3]:5d} {best[4]:9.3f} {compiles() - c0:8d}")
     spark.sparkContext.setJobGroup(None, None)
 
 
